@@ -1,7 +1,8 @@
 """Benchmark harness — runs the declared queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
 ONE JSON line: {"metric": ..., "value": N, "unit": "sec",
-"queries": {name: sec, ...}, "sf": ...}.
+"queries": {name: sec, ...}, "sf": ...}, followed by a compact tail
+record (see ``tail_record``).
 
 Each query executes fully (noop sink — no driver-side collect cost), so
 the timing covers scan → shuffle → agg/join/window, the same stages that
@@ -10,15 +11,42 @@ dominate at cluster scale.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from nessus_client_etl_scripts_spark import pins
+from nessus_client_etl_scripts_spark.runner import run_query
 from nessus_client_etl_scripts_spark.session import get_spark
+
+
+def names_sha1(names: list[str]) -> str:
+    """Short digest of the sorted query names a tail record is aligned to."""
+    return hashlib.sha1("\n".join(names).encode()).hexdigest()[:10]
+
+
+def tail_record(record: dict, names: list[str]) -> str:
+    """The last stdout line: the totals plus every query's time in
+    centiseconds, positional over ``names`` (all declared queries,
+    sorted; null for a query that errored). The names themselves are
+    not repeated — ``names_sha1`` pins the alignment — so the line stays
+    under the ~2,000 characters a tail-limited log capture keeps."""
+    times = record["queries"]
+    return json.dumps(
+        {
+            "metric": record["metric"],
+            "value": record["value"],
+            "unit": "sec",
+            "sf": record["sf"],
+            "n_queries": len(times),
+            "n_errors": len(record.get("errors", ())),
+            "names_sha1": names_sha1(names),
+            "cs": [round(times[n] * 100) if n in times else None for n in names],
+        },
+        separators=(",", ":"),
+    )
 
 
 def main() -> None:
@@ -29,55 +57,43 @@ def main() -> None:
     import __spark_entry__ as entrymod
 
     spark = get_spark("bench", master=f"local[{cpus}]")
+    queries = entrymod.queries()
 
     # Warmup: one untimed pass per query at the TARGET sf. This hoists
     # whole-stage-codegen compilation and JVM JIT (C2) out of the
     # measurement — steady-state throughput is the cluster posture
     # (long-running executors run a plan thousands of times); cold
     # compile cost is a per-process constant, not a per-data cost.
-    import gc
-
-    for name, fn in entrymod.queries().items():
+    for name, fn in queries.items():
         try:
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            run_query(spark, name, fn, sf_dir)
         except Exception:  # noqa: BLE001 — warmup must never fail the bench
             pass
-        pins.drain()
-        gc.collect()
 
     # Two timed passes, min taken: host-level CPU contention (this box
     # is a shared VM) adds seconds of one-sided noise to single shots;
     # the min of two runs is the reproducible steady-state figure.
     # Between queries (untimed — session maintenance, not query
-    # computation): pins.drain() deterministically unpersists the
-    # localCheckpointed frames the finished query pinned (the engine's
-    # round-13 pin lifecycle — pins are never shared across queries,
-    # so draining cannot skip work for the next one), and gc.collect()
-    # releases the remaining Python-side DataFrame refs for the JVM
-    # ContextCleaner. Without both, ~690 query executions accumulate
-    # dead RDD blocks that evict executor memory and inflate late
-    # queries 2-4x (q96 measured 5.3 s in-bench vs 3.0 s isolated in
-    # round 12; q179 30 s vs 1.4 s before the gc.collect was added).
+    # computation) run_query drains the finished query's pins and
+    # gc.collect()s its DataFrame refs for the JVM ContextCleaner.
+    # Without both, ~690 query executions accumulate dead RDD blocks
+    # that evict executor memory and inflate late queries 2-4x (q96
+    # measured 5.3 s in-bench vs 3.0 s isolated in round 12; q179 30 s
+    # vs 1.4 s before the gc.collect was added).
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
     for _ in range(2):
-        for name, fn in sorted(entrymod.queries().items()):
+        for name, fn in sorted(queries.items()):
             if name in errors:
                 continue
-            gc.collect()
-            t0 = time.perf_counter()
             try:
-                df = fn(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
+                dt = round(run_query(spark, name, fn, sf_dir).seconds, 4)
             except Exception as e:  # noqa: BLE001 — one broken query must
                 # not null the whole round's bench record
                 errors[name] = f"{type(e).__name__}: {e}"[:300]
                 timings.pop(name, None)
-                pins.drain()
                 continue
-            dt = round(time.perf_counter() - t0, 4)
             timings[name] = min(timings.get(name, dt), dt)
-            pins.drain()
 
     total = round(sum(timings.values()), 4)
     record = {
@@ -102,55 +118,8 @@ def main() -> None:
             f.write(line + "\n")
     except OSError:
         pass  # a read-only checkout must not fail the bench
-    # The driver's log capture clips long output (BENCH_r04/r05/r06 all
-    # recorded parsed:null because the single ~8 KB line was cut
-    # mid-record, and PERF_r12 had n_common=0 because the per-query
-    # dict reached the driver only as a file pointer).  Emit, in order:
-    # a compact totals record (head-limited capture insurance), the
-    # full one-line record (the contract), then the per-query dict
-    # SPLIT across self-describing <1 KB compact chunk records — every
-    # line individually parseable, so a line-clipping or tail-limited
-    # capture still yields per-query timings — and a final compact
-    # totals record (the tail-capture parse proven in rounds 7-12).
-    compact = json.dumps(
-        {
-            "metric": record["metric"],
-            "value": total,
-            "unit": "sec",
-            "sf": record["sf"],
-            "n_queries": len(timings),
-            "n_errors": len(errors),
-            "queries_detail": os.path.basename(out_path),
-        }
-    )
-    print(compact)
     print(line)
-    names = sorted(timings)
-    chunks: list[list[str]] = [[]]
-    size = 0
-    for n in names:
-        entry = len(n) + 16
-        if size + entry > 820 and chunks[-1]:
-            chunks.append([])
-            size = 0
-        chunks[-1].append(n)
-        size += entry
-    for i, chunk in enumerate(chunks):
-        print(
-            json.dumps(
-                {
-                    "metric": record["metric"],
-                    "value": total,
-                    "unit": "sec",
-                    "sf": record["sf"],
-                    "n_queries": len(timings),
-                    "part": i + 1,
-                    "n_parts": len(chunks),
-                    "queries": {n: timings[n] for n in chunk},
-                }
-            )
-        )
-    print(compact)
+    print(tail_record(record, sorted(queries)))
 
 
 if __name__ == "__main__":

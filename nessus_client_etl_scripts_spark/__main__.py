@@ -58,7 +58,7 @@ def cmd_export(args) -> int:
 
 
 def cmd_normalize(args) -> int:
-    from .pipeline.normalize import normalize_scan_runs, write_silver
+    from .pipeline.normalize import normalize_scan_runs, read_silver, write_silver
     from .sources.nessus_schemas import (
         FOLDER_DOC_SCHEMA,
         SCAN_DOC_SCHEMA,
@@ -81,7 +81,10 @@ def cmd_normalize(args) -> int:
         docs, folder_docs=folder_docs, scan_docs=scan_docs, id_mode=args.id_mode
     )
     write_silver(tables, args.silver_root)
-    print({name: df.count() for name, df in tables.items()})
+    # count the written tables: counting `tables` would re-run the whole
+    # JSON-read-and-explode lineage of every table
+    written = read_silver(spark, args.silver_root, names=list(tables))
+    print({name: df.count() for name, df in written.items()})
     return 0
 
 

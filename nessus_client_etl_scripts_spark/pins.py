@@ -25,9 +25,11 @@ Contract:
   must only run at a query boundary: a drained pin's lineage is
   truncated, so it can never be recomputed — re-executing a DataFrame
   built before the drain raises CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND.
-  Harness call sites: bench.py (after each timed action),
-  tools/compare_oracle.py (after each query's collect),
-  tools/opt_bench.py (after each measured pass).
+  Harness call site: ``runner.run_query`` / ``runner.explain_query``
+  (in a ``finally`` after each query's action or plan build), which
+  bench.py and tools/compare_oracle.py, opt_bench.py and dump_plans.py
+  run every query through; the benchmark (perfbench/) drains in its
+  own query loops.
 - The registry is thread-local because the oracle harness runs
   queries concurrently on one session (``--jobs N``): a query builds
   and consumes its pins wholly on its worker thread, and a drain on
@@ -40,15 +42,23 @@ Contract:
 across queries (each declared query constructs its own frames), so
 releasing them cannot skip work for — only relieve memory pressure
 on — whatever runs next.
+
+A failed unpersist is counted in ``failures`` (process-wide) and warned
+about once per process: if a Spark upgrade breaks the private
+``_jdf...rdd().unpersist`` path, draining must not silently become a
+no-op that leaves the blocks to the ContextCleaner again.
 """
 
 from __future__ import annotations
 
 import threading
+import warnings
 
 from pyspark.sql import DataFrame
 
 _TLS = threading.local()
+_FAILURES_LOCK = threading.Lock()
+failures = 0  # unpersist calls that raised in drain(), all threads
 
 
 def _registry() -> list[DataFrame]:
@@ -77,7 +87,10 @@ def pin_lazy(df: DataFrame) -> DataFrame:
 def drain() -> int:
     """Release every pin registered on this thread; returns how many
     were unpersisted. Safe on never-materialized lazy pins (no-op
-    block removal). Only call at a query boundary — see module doc."""
+    block removal). Only call at a query boundary — see module doc.
+    A pin whose unpersist raises is counted in ``failures``, not
+    released, and does not fail the caller."""
+    global failures
     reg = _registry()
     frames, reg[:] = list(reg), []
     n = 0
@@ -93,6 +106,18 @@ def drain() -> int:
             # the mid-tier of the full bench ~0.1-0.5 s per query).
             df._jdf.queryExecution().logical().rdd().unpersist(True)
             n += 1
-        except Exception:  # noqa: BLE001 — a dead JVM/session must not
-            pass  # turn cleanup into a query failure
+        except Exception as e:  # noqa: BLE001 — a dead JVM/session must not
+            # turn cleanup into a query failure, but must not go unseen
+            with _FAILURES_LOCK:
+                failures += 1
+                first = failures == 1
+            if first:
+                warnings.warn(
+                    f"pins.drain: unpersist failed ({type(e).__name__}: {e}); "
+                    "failed pins stay cached until the JVM ContextCleaner "
+                    "reclaims them (further failures are only counted in "
+                    "pins.failures)",
+                    RuntimeWarning,
+                    stacklevel=2,
+                )
     return n

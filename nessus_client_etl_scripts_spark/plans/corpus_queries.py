@@ -1603,7 +1603,8 @@ def q70(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     sf_tag = os.path.basename(sf_dir.rstrip("/"))
     # applicationId in the path: two concurrent sessions on the same sf
-    # (bench + driver_sim) must not clobber each other's files mid-read
+    # (bench + compare_oracle --plain) must not clobber each other's
+    # files mid-read
     app_tag = spark.sparkContext.applicationId
     path = os.path.join(
         tempfile.gettempdir(), f"spark_graft_jsonl_{app_tag}_{sf_tag}", "documents"

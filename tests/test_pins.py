@@ -7,10 +7,13 @@ blocks and the dedup/LSH family paid 2-4x in-bench inflation)."""
 from __future__ import annotations
 
 import threading
+import types
+import warnings
 
+import pytest
 from pyspark.sql import functions as F
 
-from nessus_client_etl_scripts_spark import pins
+from nessus_client_etl_scripts_spark import pins, runner
 
 
 def _n_persistent(spark) -> int:
@@ -81,4 +84,63 @@ def test_drained_pins_do_not_accumulate_blocks_across_queries(spark):
         out = pins.pin(spark.range(300).withColumn("y", F.col("id") + 1))
         out.write.format("noop").mode("overwrite").save()
         pins.drain()
+    assert _n_persistent(spark) == base
+
+
+def test_drain_counts_and_warns_once_when_unpersist_fails(monkeypatch):
+    """A broken private unpersist path must be visible, not a silent
+    no-op: each failure is counted, the first one warns."""
+    monkeypatch.setattr(pins, "failures", 0)
+    broken = types.SimpleNamespace(_jdf=None)  # its unpersist path raises
+    pins._registry().extend([broken, broken])
+    with pytest.warns(RuntimeWarning, match="unpersist failed") as caught:
+        assert pins.drain() == 0
+    assert len(caught) == 1
+    assert pins.failures == 2
+    pins._registry().append(broken)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")  # a second warning would raise here
+        assert pins.drain() == 0
+    assert pins.failures == 3
+
+
+def test_run_query_drains_pins_when_the_query_raises(spark):
+    pins.drain()
+    base = _n_persistent(spark)
+
+    def broken(spark, sf_dir):
+        pins.pin(spark.range(100))
+        raise RuntimeError("query failed after pinning")
+
+    with pytest.raises(RuntimeError, match="after pinning"):
+        runner.run_query(spark, "broken", broken, "unused")
+    assert _n_persistent(spark) == base
+
+
+def test_run_query_collects_rows_and_counts_only_its_own_jobs(spark):
+    pins.drain()
+    base = _n_persistent(spark)
+
+    def fn(spark, sf_dir):
+        return pins.pin(spark.range(5)).withColumn("y", F.col("id") * 2)
+
+    run = runner.run_query(spark, "pinned", fn, "unused", collect=True)
+    assert run.columns == ["id", "y"]
+    assert sorted(run.rows) == [(i, 2 * i) for i in range(5)]
+    assert run.jobs >= 2  # the eager pin, then the collect
+    # same job group again: the earlier run's jobs are not counted
+    again = runner.run_query(spark, "pinned", fn, "unused")
+    assert again.columns is None and again.rows is None
+    assert 1 <= again.jobs <= run.jobs
+    assert again.seconds > 0
+    assert _n_persistent(spark) == base
+
+
+def test_explain_query_returns_the_plan_and_drains(spark):
+    pins.drain()
+    base = _n_persistent(spark)
+    plan = runner.explain_query(
+        spark, lambda s, _: pins.pin(s.range(10)).filter("id > 3"), "unused"
+    )
+    assert "== Physical Plan ==" in plan and "Filter" in plan
     assert _n_persistent(spark) == base

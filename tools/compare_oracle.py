@@ -2,7 +2,7 @@
 row-count + schema + order-insensitive value comparison between each
 declared Spark query and its DuckDB oracle SQL at a given sf dir.
 
-Usage: python tools/compare_oracle.py [--jobs N] [sf_dir] [query ...]
+Usage: python tools/compare_oracle.py [--plain] [--jobs N] [sf_dir] [query ...]
 
 --jobs N runs N queries concurrently (Spark actions are thread-safe on
 one session; each worker gets its OWN DuckDB connection). Default is
@@ -10,10 +10,18 @@ sequential — the bit-identical gate posture; use --jobs 4 for the
 once-per-round full sf0.1 sweep (~75 min sequential). Timing-only
 session confs mutated by streaming queries (shuffle partitions inside
 run_available_now) are value-neutral for concurrently running plans.
+
+--plain runs the queries on an untuned SparkSession (no engine confs:
+shuffle.partitions 200, default broadcast threshold, no Arrow conf) —
+the environment of an external caller that imports __spark_entry__
+with its own session. The tuned session is faster for
+iteration; differences between the two (conf-sensitive plans,
+session-state leaks, timezone assumptions) show up only under --plain.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 import threading
@@ -23,8 +31,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 import pandas as pd
 
-from nessus_client_etl_scripts_spark import pins
 from nessus_client_etl_scripts_spark.catalog import TESTDATA_TABLES
+from nessus_client_etl_scripts_spark.runner import run_query
 from nessus_client_etl_scripts_spark.session import get_spark
 
 
@@ -47,16 +55,11 @@ def _cell(v) -> str:
 def _check_one(name, fn, oracles, spark, sf_dir, con) -> tuple[bool, str]:
     """Returns (ok, report line(s))."""
     try:
-        sdf = fn(spark, sf_dir)
-        s_cols = sdf.columns
-        s_rows = [tuple(r) for r in sdf.collect()]
+        # pins drain on THIS worker thread — safe under --jobs
+        run = run_query(spark, name, fn, sf_dir, collect=True)
     except Exception as e:  # noqa: BLE001
         return False, f"FAIL  {name}: spark error: {e}"
-    finally:
-        # Release this query's localCheckpoint pins (registered on
-        # THIS worker thread — safe under --jobs concurrency) so a
-        # 344-query sweep doesn't accumulate dead RDD blocks.
-        pins.drain()
+    s_cols, s_rows = run.columns, run.rows
     if name not in oracles:
         return True, f"ok    {name}: rows-only ({len(s_rows)} rows)"
     try:
@@ -93,18 +96,23 @@ def _check_one(name, fn, oracles, spark, sf_dir, con) -> tuple[bool, str]:
 
 
 def main() -> int:
-    args = sys.argv[1:]
-    jobs = 1
-    if args and args[0] == "--jobs":
-        jobs = max(1, int(args[1]))
-        args = args[2:]
-    sf_dir = args[0] if args else "/root/testdata/sf0.01"
-    only = set(args[1:])
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--plain", action="store_true")
+    ap.add_argument("--jobs", type=int, default=1)
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01")
+    ap.add_argument("query", nargs="*")
+    args = ap.parse_args()
+    sf_dir, jobs, only = args.sf_dir, max(1, args.jobs), set(args.query)
 
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as entrymod
 
-    spark = get_spark("oracle-compare")
+    if args.plain:
+        from pyspark.sql import SparkSession
+
+        # a plain builder: the master and nothing else
+        spark = SparkSession.builder.master("local[8]").getOrCreate()
+    else:
+        spark = get_spark("oracle-compare")
 
     def new_con():
         con = duckdb.connect()
@@ -118,9 +126,8 @@ def main() -> int:
     oracles = entrymod.oracle_sql()
     unknown = only - set(qs)
     if unknown:
-        # a typo'd (or misplaced — e.g. "--jobs" AFTER the sf_dir)
-        # filter would otherwise select ZERO queries and report a
-        # vacuous "0 failures"
+        # a typo'd filter would otherwise select ZERO queries and
+        # report a vacuous "0 failures"
         print(f"error: unknown query names: {sorted(unknown)}")
         return 2
     todo = [

@@ -124,6 +124,7 @@ HEADLINE = (
 
 
 def main() -> None:
+    from nessus_client_etl_scripts_spark.runner import explain_query
     from nessus_client_etl_scripts_spark.session import get_spark
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
@@ -146,10 +147,7 @@ def main() -> None:
             "reasons about). Regenerate after any plan-affecting change.\n"
         )
         for name in names:
-            df = qs[name](spark, sf_dir)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[union-attr]
-                df._jdf.queryExecution(), "formatted"
-            )
+            plan = explain_query(spark, qs[name], sf_dir)
             f.write(f"\n## {name}\n\n```\n{plan}```\n")
             print("dumped", name, flush=True)
     print("wrote", out_path)

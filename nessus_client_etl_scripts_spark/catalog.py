@@ -100,15 +100,6 @@ def load_tables(
     return {name: load_table(spark, sf_dir, name) for name in names}
 
 
-def register_views(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTDATA_TABLES
-) -> None:
-    """Register each table as a temp view so operators can be expressed
-    in either DataFrame or SQL form against the same catalog."""
-    for name in names:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def write_bucketed(
     df: DataFrame,
     table: str,

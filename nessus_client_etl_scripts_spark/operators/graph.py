@@ -187,11 +187,7 @@ def _cc_star(
         return _cc_driver_union_find(base), 0
     with SESSION_CONF_LOCK:
         prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            session_parts = int(prev_parts)
-        except (TypeError, ValueError):  # e.g. "auto" under AQE confs
-            session_parts = 32
-        scoped = max(4, min(session_parts, n_edges // 100_000 + 4))
+        scoped = max(4, min(int(prev_parts), n_edges // 100_000 + 4))
         spark.conf.set("spark.sql.shuffle.partitions", str(scoped))
         try:
             return _cc_star_rounds(base, max_iter, n_edges)

@@ -426,43 +426,6 @@ def _kmeans_py(
     return cents
 
 
-def kmeans_centroids(
-    corpus: DataFrame,
-    n_centroids: int = 16,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Lloyd k-means → (centroid_id, centroid array<double>) DataFrame
-    (see _kmeans_py for the iteration design)."""
-    cents = _kmeans_py(corpus, n_centroids, iters, id_col, vec_col)
-    return corpus.sparkSession.createDataFrame(
-        list(enumerate(cents)), "centroid_id int, centroid array<double>"
-    )
-
-
-def assign_to_centroids(
-    vecs: DataFrame,
-    centroids: DataFrame,
-    vec_attr: str = "v",
-    id_attr: str = "_vid",
-    nprobe: int = 1,
-) -> DataFrame:
-    """(id, centroid_id) — the nprobe nearest centroids per vector.
-
-    The centroid table is collected (k×dim doubles) and closed over by
-    the vectorized probe: no join, no shuffle, ties broken on the lower
-    centroid_id."""
-    cents_rows = sorted(
-        centroids.collect(), key=lambda r: r["centroid_id"]
-    )
-    cents = [list(r["centroid"]) for r in cents_rows]
-    return vecs.select(
-        id_attr,
-        F.explode(_probe_udf(cents, nprobe)(vec_attr)).alias("centroid_id"),
-    )
-
-
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1048,6 +1011,63 @@ def _codebook_cells_expr(centroids: list[list[float]]) -> Column:
     return F.expr("array(" + ",".join(items) + ")")
 
 
+def _pq_sub_cols(m: int, subdim: int) -> list[Column]:
+    """``_sv0.._sv{m-1}``: the ``m`` subvectors of the staged ``_v``."""
+    return [
+        F.slice(F.col("_v"), s * subdim + 1, subdim).alias(f"_sv{s}")
+        for s in range(m)
+    ]
+
+
+# NB: the lambdas must stay single-parameter — a two-parameter
+# lambda makes Spark's transform() bind (element, index), so a
+# `_s=s` default-capture trick would receive the index Column
+def _pq_code_col(cells: list[Column], s: int) -> Column:
+    """``code_{s}``: the nearest subspace-``s`` codeword of ``_sv{s}``."""
+
+    def rank_item(st: Column) -> Column:
+        return F.struct(
+            (F.lit(-2.0) * dot(F.col(f"_sv{s}"), st["c"]) + st["c2"]).alias("d"),
+            st["ci"].alias("i"),
+        )
+
+    return F.array_sort(F.transform(cells[s], rank_item))[0]["i"].alias(f"code_{s}")
+
+
+def _pq_dtab_col(cells: list[Column], s: int) -> Column:
+    """``_dt{s}``: the distance of ``_sv{s}`` to every subspace-``s`` codeword."""
+
+    def dist_item(st: Column) -> Column:
+        return F.lit(-2.0) * dot(F.col(f"_sv{s}"), st["c"]) + st["c2"]
+
+    return F.transform(cells[s], dist_item).alias(f"_dt{s}")
+
+
+def _pq_adc_top_k(pairs: DataFrame, m: int, k: int) -> DataFrame:
+    """Rank (query, neighbor) pairs carrying ``code_*``/``_dt*`` columns
+    by their ADC distance and keep each query's top ``k``."""
+    adc = F.element_at(F.col("_dt0"), F.col("code_0") + 1)
+    for s in range(1, m):
+        adc = adc + F.element_at(F.col(f"_dt{s}"), F.col(f"code_{s}") + 1)
+    # micro-quantized: `-2·dot+c²` is an a·b+c polynomial that C++
+    # engines FMA-contract and the JVM does not (1-ulp, data-dependent
+    # — the PLANS.md quantization rule), so the raw double can't be
+    # emitted or ranked on
+    scored = pairs.select(
+        "query_id",
+        "neighbor_id",
+        F.round(adc * F.lit(1e6)).cast("long").alias("adc_micro"),
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.asc("adc_micro"), F.asc("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "adc_micro", "rank")
+    )
+
+
 def pq_codebooks(
     m: int = 4, subdim: int = 16, k: int = 8, seed: int = 0x9900
 ) -> list[list[list[float]]]:
@@ -1099,65 +1119,18 @@ def pq_adc_topk(
         staged = frame.select(
             F.col(id_col).alias(out_id), _as_double(vec_col).alias("_v")
         )
-        return staged.select(
-            out_id,
-            *[
-                F.slice(F.col("_v"), s * subdim + 1, subdim).alias(f"_sv{s}")
-                for s in range(m)
-            ],
-        )
-
-    # NB: the lambdas must stay single-parameter — a two-parameter
-    # lambda makes Spark's transform() bind (element, index), so a
-    # `_s=s` default-capture trick would receive the index Column
-    def _code_col(s: int) -> Column:
-        def rank_item(st: Column) -> Column:
-            return F.struct(
-                (
-                    F.lit(-2.0) * dot(F.col(f"_sv{s}"), st["c"]) + st["c2"]
-                ).alias("d"),
-                st["ci"].alias("i"),
-            )
-
-        return F.array_sort(F.transform(cells[s], rank_item))[0]["i"].alias(
-            f"code_{s}"
-        )
-
-    def _dtab_col(s: int) -> Column:
-        def dist_item(st: Column) -> Column:
-            return F.lit(-2.0) * dot(F.col(f"_sv{s}"), st["c"]) + st["c2"]
-
-        return F.transform(cells[s], dist_item).alias(f"_dt{s}")
+        return staged.select(out_id, *_pq_sub_cols(m, subdim))
 
     enc = slices(corpus, "neighbor_id").select(
-        "neighbor_id", *[_code_col(s) for s in range(m)]
+        "neighbor_id", *[_pq_code_col(cells, s) for s in range(m)]
     )
     qt = slices(queries, "query_id").select(
-        "query_id", *[_dtab_col(s) for s in range(m)]
+        "query_id", *[_pq_dtab_col(cells, s) for s in range(m)]
     )
     pairs = enc.crossJoin(F.broadcast(qt)).filter(
         F.col("query_id") != F.col("neighbor_id")
     )
-    adc = F.element_at(F.col("_dt0"), F.col("code_0") + 1)
-    for s in range(1, m):
-        adc = adc + F.element_at(F.col(f"_dt{s}"), F.col(f"code_{s}") + 1)
-    # micro-quantized: `-2·dot+c²` is an a·b+c polynomial that C++
-    # engines FMA-contract and the JVM does not (1-ulp, data-dependent
-    # — the PLANS.md quantization rule), so the raw double can't be
-    # emitted or ranked on
-    scored = pairs.select(
-        "query_id",
-        "neighbor_id",
-        F.round(adc * F.lit(1e6)).cast("long").alias("adc_micro"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_micro"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc_micro", "rank")
-    )
+    return _pq_adc_top_k(pairs, m, k)
 
 
 def ivfpq_topk(
@@ -1184,31 +1157,6 @@ def ivfpq_topk(
     subdim = len(codebooks[0][0])
     cells = [_codebook_cells_expr(cb) for cb in codebooks]
 
-    def _sub_cols(vec: Column) -> list[Column]:
-        return [
-            F.slice(vec, s * subdim + 1, subdim).alias(f"_sv{s}")
-            for s in range(m)
-        ]
-
-    def _code_col(s: int) -> Column:
-        def rank_item(st: Column) -> Column:
-            return F.struct(
-                (
-                    F.lit(-2.0) * dot(F.col(f"_sv{s}"), st["c"]) + st["c2"]
-                ).alias("d"),
-                st["ci"].alias("i"),
-            )
-
-        return F.array_sort(F.transform(cells[s], rank_item))[0]["i"].alias(
-            f"code_{s}"
-        )
-
-    def _dtab_col(s: int) -> Column:
-        def dist_item(st: Column) -> Column:
-            return F.lit(-2.0) * dot(F.col(f"_sv{s}"), st["c"]) + st["c2"]
-
-        return F.transform(cells[s], dist_item).alias(f"_dt{s}")
-
     c = (
         corpus.select(
             F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("_v")
@@ -1216,9 +1164,9 @@ def ivfpq_topk(
         .select(
             "neighbor_id",
             _cell_ranking_expr(coarse_cents, "_v")[0]["i"].alias("cell"),
-            *_sub_cols(F.col("_v")),
+            *_pq_sub_cols(m, subdim),
         )
-        .select("neighbor_id", "cell", *[_code_col(s) for s in range(m)])
+        .select("neighbor_id", "cell", *[_pq_code_col(cells, s) for s in range(m)])
     )
     q = (
         queries.select(
@@ -1232,29 +1180,14 @@ def ivfpq_topk(
                     lambda s: s["i"],
                 )
             ).alias("cell"),
-            *_sub_cols(F.col("_v")),
+            *_pq_sub_cols(m, subdim),
         )
-        .select("query_id", "cell", *[_dtab_col(s) for s in range(m)])
+        .select("query_id", "cell", *[_pq_dtab_col(cells, s) for s in range(m)])
     )
     pairs = c.join(F.broadcast(q), "cell").filter(
         F.col("query_id") != F.col("neighbor_id")
     )
-    adc = F.element_at(F.col("_dt0"), F.col("code_0") + 1)
-    for s in range(1, m):
-        adc = adc + F.element_at(F.col(f"_dt{s}"), F.col(f"code_{s}") + 1)
-    scored = pairs.select(
-        "query_id",
-        "neighbor_id",
-        F.round(adc * F.lit(1e6)).cast("long").alias("adc_micro"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_micro"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc_micro", "rank")
-    )
+    return _pq_adc_top_k(pairs, m, k)
 
 
 def kcenter_greedy(

@@ -142,12 +142,6 @@ def rolling_hash_from_tokens(
     return F.array_min(window_hashes)
 
 
-def rolling_hash_fingerprint(text: Column | str, window: int = 8) -> Column:
-    """Convenience form for small inputs; hot paths stage tokens first
-    and call rolling_hash_from_tokens on the attribute."""
-    return rolling_hash_from_tokens(tokens(normalize_text(text)), window)
-
-
 def token_segments(toks: Column, seg: int) -> Column:
     """Non-overlapping ``seg``-token segments of a STAGED token array,
     each re-joined to a string — the unit of intra-document dedup
@@ -213,14 +207,6 @@ def duplicate_fraction_from_ngrams(g: Column) -> Column:
     return F.when(
         total > 0, dupes.cast("double") / total
     ).otherwise(F.lit(0.0))
-
-
-def duplicate_ngram_fraction(toks: Column, n: int) -> Column:
-    """Convenience form for small inputs/tests — builds the n-gram
-    array inline, so the expression is re-evaluated per reference. Hot
-    paths stage ``ngrams(toks, n)`` in their own projection and call
-    :func:`duplicate_fraction_from_ngrams` on the attribute."""
-    return duplicate_fraction_from_ngrams(ngrams(toks, n))
 
 
 def chunk_documents(

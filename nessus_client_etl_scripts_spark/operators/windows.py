@@ -14,6 +14,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
 from ..pins import pin_lazy as _pin_lazy
 
 
@@ -71,6 +73,61 @@ def latest_per_group(
     )
 
 
+def _range_stage(
+    df: DataFrame, cols: Sequence[str], num_partitions: int | None
+) -> DataFrame:
+    """Phase one of every range-scan kernel below: ``repartitionByRange``
+    on ``cols`` gives a total order across partitions, ``_pid`` names
+    each row's partition, and the frame is pinned.
+
+    The pin is what keeps the kernels exact: offsets are keyed by
+    physical partition id, so the frame the final join reads must be
+    the SAME materialization the stats were collected from — a
+    non-deterministic upstream (changed file listing order, a
+    recomputed shuffle) could otherwise reassign rows between the two
+    jobs and silently corrupt every offset. The pin is lazy because the
+    stats collect is always the first action on the staged frame: one
+    full-scan aggregate job both materializes the checkpoint and reads
+    the stats, instead of a materialize job followed by a stats job."""
+    num = num_partitions or int(
+        df.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    )
+    return (
+        df.repartitionByRange(num, *[F.col(c) for c in cols])
+        .withColumn("_pid", F.spark_partition_id())
+        .transform(_pin_lazy)
+    )
+
+
+def _pid_offsets(
+    staged: DataFrame, stats: dict[str, Column]
+) -> tuple[DataFrame, dict[str, int]]:
+    """Phase two of the global range scans: collect one row of the
+    monoid ``stats`` (integer sums or counts) per ``_pid`` of a
+    :func:`_range_stage` frame — P rows, the driver-side small-state
+    pattern of zipWithIndex / spark.ml KMeans — and fold them in
+    ``_pid`` order. Returns the offsets frame for a broadcast join
+    (``_pid`` plus ``_off_<name>``, the stat summed over all earlier
+    partitions) and each stat's grand total."""
+    rows = sorted(
+        staged.groupBy("_pid")
+        .agg(*[e.alias(name) for name, e in stats.items()])
+        .collect(),
+        key=lambda r: r["_pid"],
+    )
+    run = dict.fromkeys(stats, 0)
+    recs = []
+    for r in rows:
+        recs.append((r["_pid"], *run.values()))
+        for name in stats:
+            run[name] += r[name] or 0
+    schema = T.StructType(
+        [T.StructField("_pid", T.IntegerType())]
+        + [T.StructField(f"_off_{name}", T.LongType()) for name in stats]
+    )
+    return staged.sparkSession.createDataFrame(recs, schema), run
+
+
 def two_phase_rank(
     df: DataFrame,
     part_col: str,
@@ -90,12 +147,11 @@ def two_phase_rank(
 
     Two phases, all shuffles fine-grained:
 
-    1. ``repartitionByRange(part, val, key)`` gives a total order
-       across partitions; a tiny per-(part, partition) stats pass
-       (count, max val) is collected (≤ P×|parts| rows — same
-       driver-side small-state pattern as zipWithIndex / spark.ml
-       KMeans) and turned into broadcast row-number OFFSETS and each
-       partition's predecessor value.
+    1. :func:`_range_stage` on ``(part, val, key)`` gives a total
+       order across partitions; a tiny per-(part, partition) stats
+       pass (count, max val) is collected (≤ P×|parts| rows) and
+       turned into broadcast row-number OFFSETS and each partition's
+       predecessor value.
     2. A window keyed by (part, partition_id) — P×|parts| groups, so
        every core works — computes local row numbers and local lag;
        global row_number = local + offset, rank = min global
@@ -103,14 +159,6 @@ def two_phase_rank(
        groupBy + join), percent_rank = (rank-1)/(n-1), and the lag
        gap falls back to the predecessor partition's max val for each
        partition's first row.
-
-    The staged frame is ``localCheckpoint``ed BEFORE the stats job
-    (same pin as :func:`scalable_cumsum`): the offsets are keyed by
-    physical partition id, so the frame the final join reads must be
-    the SAME materialization the stats were collected from — a
-    non-deterministic upstream (changed file listing order, a
-    recomputed shuffle) could otherwise reassign rows between the two
-    jobs and silently corrupt every rank.
 
     Matches SQL ``rank()/percent_rank()/lag() OVER (PARTITION BY part
     ORDER BY val [, key])`` exactly, including percent_rank = 0 for
@@ -123,24 +171,7 @@ def two_phase_rank(
     the training-shuffle's data-loader shard contract) use it instead
     of the rank.
     """
-    from pyspark.sql import types as T
-
-    spark = df.sparkSession
-    num = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # eager=False: the stats collect right below is ALWAYS the first
-    # action on the staged frame, so it both materializes the local
-    # checkpoint (computing and caching every partition — a full
-    # hash-aggregate scan, never a partial take) and reads the stats in
-    # ONE job instead of a dedicated materialize job followed by a
-    # stats job. The pinning invariant is unchanged: offsets are
-    # collected from, and the final join reads, the same cached
-    # materialization.
-    staged = (
-        df.repartitionByRange(num, F.col(part_col), F.col(val_col), F.col(key_col))
-        .withColumn("_pid", F.spark_partition_id())
-        .transform(_pin_lazy)
-    )
-
+    staged = _range_stage(df, (part_col, val_col, key_col), num_partitions)
     stats = (
         staged.groupBy(part_col, "_pid")
         .agg(F.count(F.lit(1)).alias("cnt"), F.max(val_col).alias("last_val"))
@@ -167,7 +198,7 @@ def two_phase_rank(
             T.StructField("_n", T.LongType()),
         ]
     )
-    offsets = spark.createDataFrame(
+    offsets = df.sparkSession.createDataFrame(
         [(p, pid, off, prev, totals[p]) for (p, pid, off, prev) in recs], schema
     )
 
@@ -224,20 +255,10 @@ def scalable_cumsum(
     """Exact GLOBAL running sum over a total order — the distributed
     prefix-sum (scan) primitive — without the single-task trap of
     ``Window.orderBy(...)`` with no partition key (which funnels the
-    entire table through one task).
-
-    Same two-phase shape as :func:`two_phase_rank`:
-    ``repartitionByRange(order_cols)`` establishes a total order across
-    partitions; a tiny per-partition stats job (P rows) is collected
-    and prefix-summed on the driver into broadcast offsets; each
-    partition then computes its local running sum in parallel and adds
-    its offset. The staged frame is ``localCheckpoint``ed BEFORE the
-    stats job: the offsets are keyed by physical partition id, so the
-    frame the final join reads must be the SAME materialization the
-    stats were collected from — re-executing the exchange against a
-    non-deterministic upstream (changed file listing order, a
-    recomputed shuffle) could silently reassign rows to partitions and
-    corrupt the offsets.
+    entire table through one task). The one-column case of
+    :func:`scalable_prefix_sums`: a range exchange on ``order_cols``,
+    per-partition sums prefix-summed on the driver into broadcast
+    offsets, and a local running sum per partition plus its offset.
 
     Matches SQL ``SUM(val) OVER (ORDER BY order_cols ROWS UNBOUNDED
     PRECEDING)`` exactly for integer-typed ``val_col`` (float prefix
@@ -250,58 +271,14 @@ def scalable_cumsum(
     whole upstream in its own execution — read it for free. The value
     is identical to ``SUM(val)`` over the frame by construction (it is
     the sum of the same per-partition sums)."""
-    from pyspark.sql import types as T
-
-    spark = df.sparkSession
-    if num_partitions:
-        num = num_partitions
-    else:
-        # the conf may be 'auto' under AQE-managed shuffles
-        try:
-            num = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
-            num = spark.sparkContext.defaultParallelism
-    staged = (
-        df.repartitionByRange(num, *[F.col(c) for c in order_cols])
-        .withColumn("_pid", F.spark_partition_id())
-        # lazy: the stats collect below is the materializing action
-        # (one job instead of two — the two_phase_rank merge rule)
-        .transform(_pin_lazy)
-    )
-
-    stats = sorted(
-        staged.groupBy("_pid").agg(F.sum(val_col).alias("s")).collect(),
-        key=lambda r: r["_pid"],
-    )
-    recs, off = [], 0
-    for r in stats:
-        recs.append((r["_pid"], off))
-        off += r["s"] or 0
-    offsets = spark.createDataFrame(
-        recs,
-        T.StructType(
-            [
-                T.StructField("_pid", T.IntegerType()),
-                T.StructField("_off", T.LongType()),
-            ]
-        ),
-    )
-    w_local = (
-        Window.partitionBy("_pid")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    out = (
-        staged.join(F.broadcast(offsets), "_pid")
-        .withColumn(out_col, F.sum(val_col).over(w_local) + F.col("_off"))
-    )
-    extra = []
-    if total_col:
-        out = out.withColumn(
-            total_col, F.lit(int(off)).cast("long")
-        )
-        extra = [total_col]
-    return out.select(*df.columns, out_col, *extra)
+    return scalable_prefix_sums(
+        df,
+        order_cols,
+        (val_col,),
+        out_prefix="_cum_",
+        num_partitions=num_partitions,
+        total_cols={val_col: total_col} if total_col else None,
+    ).withColumnRenamed(f"_cum_{val_col}", out_col)
 
 
 def scalable_running_max(
@@ -333,32 +310,8 @@ def scalable_running_max(
     PRECEDING)`` — NULL for each group's first row; ``False`` includes
     the current row. ROWS semantics requires the caller to make
     ``order_cols`` a total order within each group (append a unique
-    tiebreaker — the same contract as q04's global nth).
-
-    The staged frame is ``localCheckpoint``ed BEFORE the stats
-    collect: offsets are keyed by physical partition id and must read
-    the same materialization (the two_phase_rank/scalable_cumsum
-    pinning rule)."""
-    from pyspark.sql import types as T
-
-    spark = df.sparkSession
-    if num_partitions:
-        num = num_partitions
-    else:
-        try:
-            num = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
-            num = spark.sparkContext.defaultParallelism
-    staged = (
-        df.repartitionByRange(
-            num, F.col(part_col), *[F.col(c) for c in order_cols]
-        )
-        .withColumn("_pid", F.spark_partition_id())
-        # lazy: the stats collect below is the materializing action
-        # (one job instead of two — the two_phase_rank merge rule)
-        .transform(_pin_lazy)
-    )
-
+    tiebreaker — the same contract as q04's global nth)."""
+    staged = _range_stage(df, (part_col, *order_cols), num_partitions)
     stats = staged.groupBy(part_col, "_pid").agg(F.max(val_col).alias("m"))
     by_part: dict = {}
     for r in stats.collect():
@@ -372,7 +325,7 @@ def scalable_running_max(
             m = r["m"]
             if m is not None and (prev_max is None or m > prev_max):
                 prev_max = m
-    offsets = spark.createDataFrame(
+    offsets = df.sparkSession.createDataFrame(
         recs,
         T.StructType(
             [
@@ -421,10 +374,7 @@ def scalable_row_number(
     pagination.
 
     One range exchange + per-partition local window + broadcast count
-    offsets; the staged frame is ``localCheckpoint``ed before the
-    stats collect (the two_phase_rank/scalable_cumsum pinning rule:
-    offsets are keyed by physical partition id and must read the same
-    materialization).
+    offsets (:func:`_range_stage`, :func:`_pid_offsets`).
 
     ``total_col`` attaches the total row count as a literal column
     (the driver stats pass computes it anyway — the scalable_cumsum
@@ -440,54 +390,21 @@ def scalable_row_number(
     the same total as a PYTHON int under key ``"n"`` — for callers
     that need the value in expressions over OTHER frames, where a
     column attached to this frame is unreachable without a join."""
-    from pyspark.sql import types as T
-
-    spark = df.sparkSession
-    if num_partitions:
-        num = num_partitions
-    else:
-        try:
-            num = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
-            num = spark.sparkContext.defaultParallelism
-    staged = (
-        df.repartitionByRange(num, *[F.col(c) for c in order_cols])
-        .withColumn("_pid", F.spark_partition_id())
-        # lazy: the stats collect below is the materializing action
-        # (one job instead of two — the two_phase_rank merge rule)
-        .transform(_pin_lazy)
-    )
-    if derive:
-        for name, expr in derive.items():
-            staged = staged.withColumn(name, expr)
-    stats = sorted(
-        staged.groupBy("_pid").agg(F.count(F.lit(1)).alias("c")).collect(),
-        key=lambda r: r["_pid"],
-    )
-    recs, off = [], 0
-    for r in stats:
-        recs.append((r["_pid"], off))
-        off += r["c"]
-    offsets = spark.createDataFrame(
-        recs,
-        T.StructType(
-            [
-                T.StructField("_pid", T.IntegerType()),
-                T.StructField("_off", T.LongType()),
-            ]
-        ),
-    )
+    staged = _range_stage(df, order_cols, num_partitions)
+    for name, expr in (derive or {}).items():
+        staged = staged.withColumn(name, expr)
+    offsets, totals = _pid_offsets(staged, {"n": F.count(F.lit(1))})
+    n = int(totals["n"])
     w_local = Window.partitionBy("_pid").orderBy(*order_cols)
-    out = (
-        staged.join(F.broadcast(offsets), "_pid")
-        .withColumn(out_col, F.row_number().over(w_local) + F.col("_off"))
+    out = staged.join(F.broadcast(offsets), "_pid").withColumn(
+        out_col, F.row_number().over(w_local) + F.col("_off_n")
     )
     extra = list(derive) if derive else []
     if total_col:
-        out = out.withColumn(total_col, F.lit(int(off)).cast("long"))
+        out = out.withColumn(total_col, F.lit(n).cast("long"))
         extra.append(total_col)
     if total_out is not None:
-        total_out["n"] = int(off)
+        total_out["n"] = n
     return out.select(*df.columns, *extra, out_col)
 
 
@@ -502,8 +419,8 @@ def scalable_prefix_sums(
     total_cols: dict[str, str] | None = None,
 ) -> DataFrame:
     """Inclusive running sums of SEVERAL columns over ONE total order
-    with ONE range exchange — the n-monoid generalization of
-    :func:`scalable_cumsum`.
+    with ONE range exchange (:func:`_range_stage`,
+    :func:`_pid_offsets`).
 
     Callers that need multiple prefix coordinates over the same order
     (q153 reads both a global row position — prefix sum of 1 — and a
@@ -520,55 +437,18 @@ def scalable_prefix_sums(
     plus the exchange itself each re-evaluate the child projection.
     Derived columns are summed exactly like ``val_cols``.
 
-    Same pinning rule as the siblings: the staged frame is
-    ``localCheckpoint``ed before the stats job because the offsets are
-    keyed by physical partition id.
-
     ``total_cols`` maps summand names to output column names holding
     that summand's GRAND TOTAL as a literal (the scalable_cumsum
     total rule — the driver's stats fold ends on exactly these
     values); callers that otherwise aggregate the same totals in a
     separate subtree (q185's n1/n2 over the events rollup) read them
     for free."""
-    from pyspark.sql import types as T
-
-    spark = df.sparkSession
-    if num_partitions:
-        num = num_partitions
-    else:
-        try:
-            num = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
-            num = spark.sparkContext.defaultParallelism
-    staged = (
-        df.repartitionByRange(num, *[F.col(c) for c in order_cols])
-        .withColumn("_pid", F.spark_partition_id())
-        # lazy: the stats collect below is the materializing action
-        # (one job instead of two — the two_phase_rank merge rule)
-        .transform(_pin_lazy)
-    )
-    if derive:
-        for name, expr in derive.items():
-            staged = staged.withColumn(name, expr)
-        val_cols = tuple(val_cols) + tuple(derive)
-    stats = sorted(
-        staged.groupBy("_pid")
-        .agg(*[F.sum(c).alias(c) for c in val_cols])
-        .collect(),
-        key=lambda r: r["_pid"],
-    )
-    recs, run = [], {c: 0 for c in val_cols}
-    for r in stats:
-        recs.append((r["_pid"], *[run[c] for c in val_cols]))
-        for c in val_cols:
-            run[c] += r[c] or 0
-    offsets = spark.createDataFrame(
-        recs,
-        T.StructType(
-            [T.StructField("_pid", T.IntegerType())]
-            + [T.StructField(f"_off_{c}", T.LongType()) for c in val_cols]
-        ),
-    )
+    staged = _range_stage(df, order_cols, num_partitions)
+    derived = tuple(derive or ())
+    for name, expr in (derive or {}).items():
+        staged = staged.withColumn(name, expr)
+    val_cols = (*val_cols, *derived)
+    offsets, totals = _pid_offsets(staged, {c: F.sum(c) for c in val_cols})
     w_local = (
         Window.partitionBy("_pid")
         .orderBy(*order_cols)
@@ -579,20 +459,16 @@ def scalable_prefix_sums(
         out = out.withColumn(
             f"{out_prefix}{c}", F.sum(c).over(w_local) + F.col(f"_off_{c}")
         )
-    totals = []
-    if total_cols:
-        for c, name in total_cols.items():
-            out = out.withColumn(name, F.lit(int(run[c])).cast("long"))
-            totals.append(name)
+    for c, name in (total_cols or {}).items():
+        out = out.withColumn(name, F.lit(int(totals[c])).cast("long"))
     # derived summands are part of the contract: callers filter on
     # them (q153 keeps sample rows via the indicator), so emit them
     # explicitly rather than leaning on missing-reference resolution
-    derived = tuple(derive) if derive else ()
     out = out.select(
         *df.columns,
         *derived,
         *[f"{out_prefix}{c}" for c in val_cols],
-        *totals,
+        *(total_cols or {}).values(),
     )
     # ``pin=True`` materializes the summed frame for MULTI-CONSUMER
     # callers (q153 reads it three times — per-group counts plus two
@@ -617,9 +493,9 @@ def grouped_row_number(
 ) -> DataFrame:
     """Per-group ``row_number() OVER (PARTITION BY part ORDER BY …)``
     without a low-cardinality window partition AND without rank
-    semantics: ONE global :func:`scalable_row_number` over
-    (part, *order) minus broadcast per-group offsets (the count of
-    rows in ordering-earlier groups).
+    semantics: ONE global row number over (part, *order) minus
+    broadcast per-group offsets (the count of rows in ordering-earlier
+    groups).
 
     This is the factored form of the position-read pattern that
     emerged across q153/q164/q145/q123: when a consumer reads
@@ -640,48 +516,13 @@ def grouped_row_number(
     rk == (n+1) div 2) would otherwise pay a second aggregate over the
     caller's upstream; exposing it makes the checkpointed stage the
     single source of both."""
-    from pyspark.sql import types as T
-
-    spark = df.sparkSession
-    if num_partitions:
-        num = num_partitions
-    else:
-        try:
-            num = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
-            num = spark.sparkContext.defaultParallelism
-    # The machinery is inlined (not scalable_row_number + a consumer
-    # aggregate) so BOTH offset frames read the pinned staged
-    # materialization directly: the per-pid stats as a tiny collect,
-    # the per-group counts as one hash aggregate over checkpointed
-    # rows — no re-evaluation of the caller's upstream and no forcing
-    # of the ranking window just to count groups.
-    staged = (
-        df.repartitionByRange(
-            num, F.col(part_col), *[F.col(c) for c in order_cols]
-        )
-        .withColumn("_pid", F.spark_partition_id())
-        # lazy: the stats collect below is the materializing action
-        # (one job instead of two — the two_phase_rank merge rule)
-        .transform(_pin_lazy)
-    )
-    stats = sorted(
-        staged.groupBy("_pid").agg(F.count(F.lit(1)).alias("c")).collect(),
-        key=lambda r: r["_pid"],
-    )
-    recs, off = [], 0
-    for r in stats:
-        recs.append((r["_pid"], off))
-        off += r["c"]
-    pid_offs = spark.createDataFrame(
-        recs,
-        T.StructType(
-            [
-                T.StructField("_pid", T.IntegerType()),
-                T.StructField("_poff", T.LongType()),
-            ]
-        ),
-    )
+    # Not scalable_row_number + a consumer aggregate: BOTH offset
+    # frames read the pinned stage directly — the per-pid stats as a
+    # tiny collect, the per-group counts as one hash aggregate over
+    # checkpointed rows — so the caller's upstream is not re-evaluated
+    # and the ranking window is not forced just to count groups.
+    staged = _range_stage(df, (part_col, *order_cols), num_partitions)
+    pid_offs, _ = _pid_offsets(staged, {"n": F.count(F.lit(1))})
     w_group = Window.orderBy(part_col).rowsBetween(
         Window.unboundedPreceding, -1
     )  # |groups| rows — the single-task cumulative is metadata-sized
@@ -700,9 +541,7 @@ def grouped_row_number(
         .join(F.broadcast(offs), part_col)
         .withColumn(
             out_col,
-            F.row_number().over(w_local)
-            + F.col("_poff")
-            - F.col("_goff"),
+            F.row_number().over(w_local) + F.col("_off_n") - F.col("_goff"),
         )
         .select(*df.columns, out_col, *([count_col] if count_col else []))
     )

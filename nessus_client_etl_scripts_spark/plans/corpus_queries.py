@@ -2809,6 +2809,85 @@ def q104(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _ppm_media(docs: DataFrame) -> DataFrame:
+    """Media rows (MEDIA_SCHEMA) holding one real PPM image per
+    ``(doc_id, n_chars)`` row: an 8×h RGB gradient, h = 6 + 2·(n_chars
+    mod 5), pixel byte i = (n_chars + i) mod 256 — the closed form the
+    q105/q179 oracles recompute."""
+    import numpy as np
+    import pandas as pd
+
+    from ..operators.multimodal import MEDIA_SCHEMA, encode_ppm
+
+    def render(batches):
+        for pdf in batches:
+            rows = []
+            for did, nc in zip(pdf["doc_id"], pdf["n_chars"]):
+                h = 6 + int(nc) % 5 * 2
+                n_px = 8 * h * 3
+                arr = (
+                    ((int(nc) + np.arange(n_px)) % 256)
+                    .astype(np.uint8)
+                    .reshape(h, 8, 3)
+                )
+                rows.append(
+                    {
+                        "media_id": did,
+                        "kind": "image",
+                        "meta": {
+                            "width": 8,
+                            "height": h,
+                            "channels": 3,
+                            "sample_rate": None,
+                            "duration_ms": None,
+                            "codec": "ppm",
+                        },
+                        "content": encode_ppm(arr),
+                    }
+                )
+            yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_SCHEMA])
+
+    return docs.mapInPandas(render, MEDIA_SCHEMA)
+
+
+def _wav_media(docs: DataFrame) -> DataFrame:
+    """Media rows (MEDIA_SCHEMA) holding one real 16 kHz PCM WAV clip
+    per ``(doc_id, n_chars)`` row: n = 160 + 80·(n_chars mod 5) int16
+    samples, sample i = (31·n_chars + 7i) mod 2^16 − 2^15 — the closed
+    form the q106/q194 oracles recompute."""
+    import numpy as np
+    import pandas as pd
+
+    from ..operators.multimodal import MEDIA_SCHEMA, encode_wav
+
+    def render(batches):
+        for pdf in batches:
+            rows = []
+            for did, nc in zip(pdf["doc_id"], pdf["n_chars"]):
+                n = 160 + int(nc) % 5 * 80
+                s = (
+                    (int(nc) * 31 + np.arange(n) * 7) % 65536 - 32768
+                ).astype(np.int16)
+                rows.append(
+                    {
+                        "media_id": did,
+                        "kind": "audio",
+                        "meta": {
+                            "width": None,
+                            "height": None,
+                            "channels": 1,
+                            "sample_rate": 16000,
+                            "duration_ms": n * 1000 // 16000,
+                            "codec": "pcm16",
+                        },
+                        "content": encode_wav(s, sample_rate=16000),
+                    }
+                )
+            yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_SCHEMA])
+
+    return docs.mapInPandas(render, MEDIA_SCHEMA)
+
+
 # ---------------------------------------------------------------------------
 # q105 — REAL PPM codec roundtrip, value-proven (multimodal upgrade)
 # ---------------------------------------------------------------------------
@@ -2865,46 +2944,11 @@ def q105(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantization is needed. Image heights vary per doc and pixel
     counts are multiples of the 8-dim feature (24h = 8·3h), keeping
     the pooling reshape exact."""
-    import numpy as np
-    import pandas as pd
-
-    from ..operators.multimodal import (
-        MEDIA_SCHEMA,
-        encode_ppm,
-        media_features,
-    )
+    from ..operators.multimodal import media_features
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
 
-    def render(batches):
-        for pdf in batches:
-            rows = []
-            for did, nc in zip(pdf["doc_id"], pdf["n_chars"]):
-                h = 6 + int(nc) % 5 * 2
-                n_px = 8 * h * 3
-                arr = (
-                    ((int(nc) + np.arange(n_px)) % 256)
-                    .astype(np.uint8)
-                    .reshape(h, 8, 3)
-                )
-                rows.append(
-                    {
-                        "media_id": did,
-                        "kind": "image",
-                        "meta": {
-                            "width": 8,
-                            "height": h,
-                            "channels": 3,
-                            "sample_rate": None,
-                            "duration_ms": None,
-                            "codec": "ppm",
-                        },
-                        "content": encode_ppm(arr),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_SCHEMA])
-
-    media = docs.mapInPandas(render, MEDIA_SCHEMA)
+    media = _ppm_media(docs)
     feats = media_features(media, codec="ppm")
     return feats.select(
         "media_id",
@@ -2960,43 +3004,11 @@ def q106(spark: SparkSession, sf_dir: str) -> DataFrame:
     match the closed-form DuckDB twin. Any header-layout, endianness,
     or truncation bug in either direction breaks the value hash.
     The audio twin of q105's PPM proof."""
-    import numpy as np
-    import pandas as pd
-
-    from ..operators.multimodal import (
-        MEDIA_SCHEMA,
-        audio_features,
-        encode_wav,
-    )
+    from ..operators.multimodal import audio_features
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
 
-    def render(batches):
-        for pdf in batches:
-            rows = []
-            for did, nc in zip(pdf["doc_id"], pdf["n_chars"]):
-                n = 160 + int(nc) % 5 * 80
-                s = (
-                    (int(nc) * 31 + np.arange(n) * 7) % 65536 - 32768
-                ).astype(np.int16)
-                rows.append(
-                    {
-                        "media_id": did,
-                        "kind": "audio",
-                        "meta": {
-                            "width": None,
-                            "height": None,
-                            "channels": 1,
-                            "sample_rate": 16000,
-                            "duration_ms": n * 1000 // 16000,
-                            "codec": "pcm16",
-                        },
-                        "content": encode_wav(s, sample_rate=16000),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_SCHEMA])
-
-    media = docs.mapInPandas(render, MEDIA_SCHEMA)
+    media = _wav_media(docs)
     return audio_features(media)
 
 

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..operators.similarity import collect_bounded_side, round_half_away
 from ..operators.text import normalize_text
-from .corpus_queries import _NORM_SQL
+from .corpus_queries import _NORM_SQL, _ppm_media, _wav_media
 from .testdata_queries import register
 from ..pins import pin as _pin
 
@@ -374,50 +374,13 @@ def q179(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes per image; dedup is ONE groupBy on the hash (map-side
     combine) joined back for the verdict. Near-dup (Hamming ≤ t)
     upgrades reuse q103's band-bucketing on the same hash column."""
-    import numpy as np
-    import pandas as pd
-
-    from ..operators.multimodal import (
-        MEDIA_SCHEMA,
-        encode_ppm,
-        image_dhash,
-    )
+    from ..operators.multimodal import image_dhash
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "n_chars"
     )
 
-    def render(batches):
-        for pdf in batches:
-            rows = []
-            for did, nc in zip(pdf["doc_id"], pdf["n_chars"]):
-                h = 6 + int(nc) % 5 * 2
-                n_px = 8 * h * 3
-                arr = (
-                    ((int(nc) + np.arange(n_px)) % 256)
-                    .astype(np.uint8)
-                    .reshape(h, 8, 3)
-                )
-                rows.append(
-                    {
-                        "media_id": did,
-                        "kind": "image",
-                        "meta": {
-                            "width": 8,
-                            "height": h,
-                            "channels": 3,
-                            "sample_rate": None,
-                            "duration_ms": None,
-                            "codec": "ppm",
-                        },
-                        "content": encode_ppm(arr),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in MEDIA_SCHEMA]
-            )
-
-    media = docs.mapInPandas(render, MEDIA_SCHEMA)
+    media = _ppm_media(docs)
     hashed = image_dhash(media, codec="ppm")
     groups = hashed.groupBy("dhash").agg(
         F.count("*").cast("long").alias("group_size"),
@@ -2301,43 +2264,11 @@ def q194(spark: SparkSession, sf_dir: str) -> DataFrame:
     ceil(n/frame) rows per clip; silence runs are a frame_idx window
     partitioned on the high-cardinality media key; the verdict is one
     aggregate. Nothing is quadratic, nothing collects."""
-    import numpy as np
-    import pandas as pd
-
-    from ..operators.multimodal import (
-        MEDIA_SCHEMA,
-        audio_frame_energy,
-        encode_wav,
-    )
+    from ..operators.multimodal import audio_frame_energy
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
 
-    def render(batches):
-        for pdf in batches:
-            rows = []
-            for did, nc in zip(pdf["doc_id"], pdf["n_chars"]):
-                n = 160 + int(nc) % 5 * 80
-                s = (
-                    (int(nc) * 31 + np.arange(n) * 7) % 65536 - 32768
-                ).astype(np.int16)
-                rows.append(
-                    {
-                        "media_id": did,
-                        "kind": "audio",
-                        "meta": {
-                            "width": None,
-                            "height": None,
-                            "channels": 1,
-                            "sample_rate": 16000,
-                            "duration_ms": n * 1000 // 16000,
-                            "codec": "pcm16",
-                        },
-                        "content": encode_wav(s, sample_rate=16000),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_SCHEMA])
-
-    media = docs.mapInPandas(render, MEDIA_SCHEMA)
+    media = _wav_media(docs)
     fr = audio_frame_energy(media, frame=_Q194_FRAME).transform(_pin)
     # consumers: per-clip totals + the silence islands
     sil = fr.filter(F.col("energy") < _Q194_SILENT)

@@ -37,6 +37,18 @@ SESSION_CONF_LOCK = threading.RLock()
 _DEFAULT_LOCAL_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
+def _default_driver_memory(phys_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` when ``SPARK_DRIVER_MEMORY`` is unset: a
+    quarter of physical memory, at least 1g and at most 48g, in
+    megabytes. A quarter leaves room for a second Spark JVM (a test
+    session next to an oracle sweep) plus the Python workers; a fixed
+    48g lets one sweep's heap grow past what a 15 GB machine holds."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    mb = min(48 * 1024, max(1024, phys_bytes // 4 // 2**20))
+    return f"{mb}m"
+
+
 def _needs_local_master_default(environ) -> bool:
     """True iff no cluster master is already in play, so the factory
     should fall back to ``SPARK_GRAFT_MASTER`` / ``local[N]``.
@@ -99,7 +111,10 @@ def get_spark(
         .config("spark.sql.files.openCostInBytes", "512k")
         .config("spark.sql.files.minPartitionNum", str(shuffle_partitions or cpus))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
     )
     if master:
         builder = builder.master(master)

@@ -3,9 +3,11 @@
 The landed lake is ``{root}/{file_type}/deployment_id=…/
 snapshot_date=YYYYMMDD/`` (the reference's key layout export.py:97 as
 real partition columns — write side in pipeline.export_pipeline).
-Readers always pass the declared bronze schema: at 100 TB, schema
-inference is a second full listing+sample pass, and partition pruning
-only works when snapshot filters stay declarative.
+The lake is parquet, so the scan-run reader takes its schema from the
+file footers (no JSON sampling pass); :func:`read_evolved_parquet`
+passes a declared schema for lakes whose files span schema versions.
+Deployment and snapshot filters stay declarative, so partition pruning
+happens at listing time.
 """
 
 from __future__ import annotations
@@ -15,77 +17,22 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .nessus_schemas import SCAN_RUN_DOC_SCHEMA
-
 
 def read_scan_run_documents(
     spark: SparkSession,
     lake_root: str,
     deployment_id: str | None = None,
     since: str | None = None,
-    fmt: str = "parquet",
 ) -> DataFrame:
     """Read landed scan-run documents; deployment/snapshot filters are
     partition predicates (pruned at listing time, zero data touched
     outside the range)."""
-    path = os.path.join(lake_root, "scan_run")
-    if fmt == "json":
-        df = spark.read.schema(
-            SCAN_RUN_DOC_SCHEMA.add("deployment_id", "string").add(
-                "snapshot_date", "string"
-            )
-        ).json(path)
-    else:
-        df = spark.read.parquet(path)
+    df = spark.read.parquet(os.path.join(lake_root, "scan_run"))
     if deployment_id is not None:
         df = df.filter(F.col("deployment_id") == deployment_id)
     if since is not None:
         df = df.filter(F.col("snapshot_date") >= since)
     return df
-
-
-def _latest_snapshot_from_listing(
-    path: str, deployment_id: str | None = None
-) -> str | None:
-    """Max snapshot_date partition VALUE from the directory layout —
-    one listing, zero file opens (the same zero-IO rule as
-    pipeline.export_pipeline.compute_watermark). Returns None when the
-    path isn't a local directory (non-local FS callers fall back to a
-    partition-column scan, which Spark still answers from listing +
-    footers, not data)."""
-    if not os.path.isdir(path):
-        return None
-    best: str | None = None
-    for dep in os.listdir(path):
-        if not dep.startswith("deployment_id="):
-            continue
-        if deployment_id is not None and dep != f"deployment_id={deployment_id}":
-            continue
-        for snap in os.listdir(os.path.join(path, dep)):
-            if snap.startswith("snapshot_date="):
-                v = snap.split("=", 1)[1]
-                best = v if best is None else max(best, v)
-    return best
-
-
-def read_dimension_snapshot(
-    spark: SparkSession,
-    lake_root: str,
-    file_type: str,
-    deployment_id: str | None = None,
-) -> DataFrame:
-    """Latest dimension snapshot (folder/scan): the max snapshot_date
-    partition only — resolved from partition NAMES (directory listing),
-    so no Spark job runs to find it and the snapshot filter prunes at
-    listing time."""
-    path = os.path.join(lake_root, file_type)
-    df = spark.read.parquet(path)
-    if deployment_id is not None:
-        df = df.filter(F.col("deployment_id") == deployment_id)
-    latest = _latest_snapshot_from_listing(path, deployment_id)
-    if latest is None:  # non-local FS fallback: partition-value scan
-        latest = df.select(F.max("snapshot_date").alias("d")).collect()[0].d
-    return df.filter(F.col("snapshot_date") == latest)
 
 
 def read_evolved_parquet(spark: SparkSession, path: str, schema) -> DataFrame:

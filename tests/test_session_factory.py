@@ -43,3 +43,13 @@ def test_bare_python_run_gets_local_default():
         jvm_has_master = False
     if not jvm_has_master:
         assert _needs_local_master_default({})
+
+
+def test_driver_memory_default_is_a_quarter_of_physical_memory():
+    from nessus_client_etl_scripts_spark.session import _default_driver_memory
+
+    assert _default_driver_memory(15 * 2**30) == "3840m"
+    assert _default_driver_memory(2 * 2**30) == "1024m"  # 1g floor
+    assert _default_driver_memory(2**40) == "49152m"  # 48g cap
+    mb = int(_default_driver_memory()[:-1])  # from the host's physical memory
+    assert 1024 <= mb <= 48 * 1024

@@ -18,6 +18,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from nessus_client_etl_scripts_spark import pins
 from nessus_client_etl_scripts_spark.runner import run_query
 from nessus_client_etl_scripts_spark.session import get_spark
 
@@ -42,6 +43,7 @@ def tail_record(record: dict, names: list[str]) -> str:
             "sf": record["sf"],
             "n_queries": len(times),
             "n_errors": len(record.get("errors", ())),
+            "pins_failures": record["pins_failures"],
             "names_sha1": names_sha1(names),
             "cs": [round(times[n] * 100) if n in times else None for n in names],
         },
@@ -102,6 +104,9 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        # unpersists that raised: non-zero means pins were left to the
+        # ContextCleaner and later queries ran with their blocks cached
+        "pins_failures": pins.failures,
         **({"errors": errors} if errors else {}),
     }
     line = json.dumps(record)

@@ -9,9 +9,12 @@ warehouse (``/root/reference/schema.sql``): dimension chains
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TESTDATA_TABLES = (
     "region",
@@ -38,36 +41,76 @@ def table_path(sf_dir: str, name: str) -> str:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one parquet table. Columnar scan with predicate pushdown and
     column pruning supplied by Catalyst — callers express filters and
-    selects declaratively and they reach the scan.
-
-    ``events.ts`` has shipped in two physical encodings across driver
-    testdata generations: parquet TIMESTAMP(NANOS) (which Spark's
-    vectorized reader only accepts as nanos-long via the legacy conf)
-    and plain TIMESTAMP(MICROS) (isAdjustedToUTC=false → TIMESTAMP_NTZ
-    under Spark 4's NTZ inference). Normalize both to session-local
-    TimestampType so every downstream query and the DuckDB oracle (which
-    reads naive micros) see identical wall-clock values — the session
-    timezone is pinned to UTC in ``session.get_spark``, so the NTZ→LTZ
-    cast is value-preserving.
+    selects declaratively and they reach the scan. ``events`` goes
+    through :func:`_read_events`: its TIMESTAMP(NANOS) generation is
+    detected from the parquet footer, and the session is not touched.
     """
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-
-        df = spark.read.parquet(table_path(sf_dir, name))
-        ts_type = df.schema["ts"].dataType
-        if isinstance(ts_type, T.LongType):
-            # nanos-as-long generation: integer division, because
-            # ts/1000 via `/` promotes to double, which cannot
-            # represent ~1.7e18 ns exactly and rounds ±1 micro
-            return df.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000"))
-            )
-        if not isinstance(ts_type, T.TimestampType):
-            return df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
+        return _read_events(spark, sf_dir)
     return spark.read.parquet(table_path(sf_dir, name))
+
+
+def _nanos_events_schema(path: str) -> T.StructType | None:
+    """For an events file whose ``ts`` is parquet INT64 TIMESTAMP(NANOS),
+    the footer's columns with ``ts`` declared bigint; otherwise None. It
+    reads one footer with pyarrow on the driver, so no Spark job runs. A
+    directory (Spark-written: INT96 or MICROS, never NANOS) gives None.
+    The check is on the parquet types, not the arrow type: pyarrow also
+    reports Spark's INT96 as ``timestamp[ns]``."""
+    if not os.path.isfile(path):
+        return None
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    footer = pq.ParquetFile(path)
+    ts = next((c for c in footer.schema if c.path == "ts"), None)
+    if ts is None or ts.physical_type != "INT64":
+        return None
+    if json.loads(ts.logical_type.to_json()).get("timeUnit") != "nanoseconds":
+        return None
+    return T.StructType(
+        [
+            T.StructField("ts", T.LongType()) if f.name == "ts" else f
+            for f in from_arrow_schema(footer.schema_arrow)
+        ]
+    )
+
+
+def _read_events(
+    spark: SparkSession, sf_dir: str, stream: bool = False
+) -> DataFrame:
+    """The one reader of the ``events`` table: batch, or with ``stream``
+    a file-source ``readStream`` over ``sf_dir``.
+
+    ``events.ts`` has shipped in two physical encodings across driver
+    testdata generations: parquet TIMESTAMP(NANOS), which Spark does not
+    read as a timestamp, and TIMESTAMP(MICROS) with isAdjustedToUTC=false
+    (TIMESTAMP_NTZ under Spark 4's inference). The NANOS generation is
+    read with a declared schema and converted; any other is inferred and
+    cast. Both end as session-local TimestampType, so every downstream
+    query and the DuckDB oracle (which reads naive micros) see identical
+    wall-clock values — the session timezone is pinned to UTC in
+    ``session.get_spark``, so the NTZ→LTZ cast is value-preserving.
+    """
+    path = table_path(sf_dir, "events")
+    nanos = _nanos_events_schema(path)
+    if stream:
+        # a streaming source needs an explicit schema
+        schema = nanos or spark.read.parquet(path).schema
+        df = (
+            spark.readStream.schema(schema)
+            .option("pathGlobFilter", "events.parquet")
+            .parquet(sf_dir)
+        )
+    else:
+        df = (spark.read if nanos is None else spark.read.schema(nanos)).parquet(path)
+    if nanos is not None:
+        # integer division, because ts/1000 via `/` promotes to double,
+        # which cannot represent ~1.7e18 ns exactly and rounds ±1 micro
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if not isinstance(df.schema["ts"].dataType, T.TimestampType):
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
 
 
 def spread_for_compute(

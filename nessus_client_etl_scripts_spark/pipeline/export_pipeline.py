@@ -163,10 +163,12 @@ def run_export(
     fresh = fresh_completed_runs(scan_docs, floor).select("scan_id", "history_id")
 
     # Restrict the nested documents to fresh runs: broadcast semi join
-    # (J3 shape) — `fresh` is tiny relative to the documents.
+    # (J3 shape) — `fresh` is tiny relative to the documents. The join
+    # moves its keys first; the lake keeps the documents' column order,
+    # so its files match the declared SCAN_RUN_DOC_SCHEMA.
     new_runs = scan_run_docs.join(
         F.broadcast(fresh), ["scan_id", "history_id"], "left_semi"
-    )
+    ).select(scan_run_docs.columns)
 
     # A4 existence gate (export.py:222,238) measured BY the write itself
     # (Observation rides the job) — one pass over the documents, not a

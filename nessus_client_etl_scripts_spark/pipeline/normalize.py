@@ -223,13 +223,17 @@ def write_silver(tables: dict[str, DataFrame], root: str) -> None:
 
 
 def read_silver(spark, root: str, names=None) -> dict[str, DataFrame]:
+    """Read the silver tables under ``root`` that exist, each with its
+    declared schema (``SILVER_SCHEMAS``), so no schema-inference job
+    runs; ``tests/test_declared_reads.py`` keeps the declarations equal
+    to what :func:`write_silver` lands."""
     import os
 
-    from ..sources.nessus_schemas import SILVER_TABLES
+    from ..sources.nessus_schemas import SILVER_SCHEMAS
 
     return {
-        name: spark.read.parquet(os.path.join(root, name))
-        for name in (names or SILVER_TABLES)
+        name: spark.read.schema(SILVER_SCHEMAS[name]).parquet(os.path.join(root, name))
+        for name in (names or SILVER_SCHEMAS)
         if os.path.isdir(os.path.join(root, name))
     }
 

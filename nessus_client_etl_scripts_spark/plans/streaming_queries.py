@@ -37,8 +37,8 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
+from ..catalog import _read_events
 from ..session import SESSION_CONF_LOCK
 from .testdata_queries import dsum, register
 
@@ -56,28 +56,10 @@ _conf_lock = SESSION_CONF_LOCK
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of catalog.load_table(..., 'events'): file-source
-    readStream normalizing ``ts`` to TimestampType whatever the parquet
-    physical encoding (TIMESTAMP(NANOS)-as-long or TIMESTAMP(MICROS) —
-    see catalog.load_table). A streaming source needs an explicit
-    schema, so the batch reader's inferred schema (footer-only, no job)
-    supplies the generation-specific ``ts`` type."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    from ..catalog import table_path
-
-    inferred = spark.read.parquet(table_path(sf_dir, "events")).schema
-    raw = (
-        spark.readStream.schema(inferred)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    ts_type = inferred["ts"].dataType
-    if isinstance(ts_type, T.LongType):
-        # lossless micros conversion (`div`, not `/` — see catalog.py)
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if not isinstance(ts_type, T.TimestampType):
-        return raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
+    """Streaming twin of catalog.load_table(..., 'events'): a file-source
+    readStream with ``ts`` normalized to TimestampType whatever its
+    parquet encoding — the same reader as the batch table."""
+    return _read_events(spark, sf_dir, stream=True)
 
 
 def run_available_now(

@@ -3,11 +3,13 @@
 The landed lake is ``{root}/{file_type}/deployment_id=…/
 snapshot_date=YYYYMMDD/`` (the reference's key layout export.py:97 as
 real partition columns — write side in pipeline.export_pipeline).
-The lake is parquet, so the scan-run reader takes its schema from the
-file footers (no JSON sampling pass); :func:`read_evolved_parquet`
-passes a declared schema for lakes whose files span schema versions.
-Deployment and snapshot filters stay declarative, so partition pruning
-happens at listing time.
+The scan-run reader passes the declared ``SCAN_RUN_DOC_SCHEMA``, so it
+runs no schema-inference job, and one read spans every schema
+generation of the lake: files missing a declared column null-fill it,
+and a column on disk that the declaration lacks is pruned at the scan
+(no ``mergeSchema`` footer sweep). Partition columns are still
+discovered from the paths, and the deployment and snapshot filters stay
+declarative, so partition pruning happens at listing time.
 """
 
 from __future__ import annotations
@@ -16,6 +18,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .nessus_schemas import SCAN_RUN_DOC_SCHEMA
 
 
 def read_scan_run_documents(
@@ -27,22 +31,11 @@ def read_scan_run_documents(
     """Read landed scan-run documents; deployment/snapshot filters are
     partition predicates (pruned at listing time, zero data touched
     outside the range)."""
-    df = spark.read.parquet(os.path.join(lake_root, "scan_run"))
+    df = spark.read.schema(SCAN_RUN_DOC_SCHEMA).parquet(
+        os.path.join(lake_root, "scan_run")
+    )
     if deployment_id is not None:
         df = df.filter(F.col("deployment_id") == deployment_id)
     if since is not None:
         df = df.filter(F.col("snapshot_date") >= since)
     return df
-
-
-def read_evolved_parquet(spark: SparkSession, path: str, schema) -> DataFrame:
-    """Declared-schema read over a lake whose files span SCHEMA
-    VERSIONS (a landed snapshot history where later days gained
-    columns): files missing a declared column yield nulls for it, and
-    columns present on disk but absent from the declaration are pruned
-    at the scan — no ``mergeSchema`` (which is a second footer pass
-    over EVERY file at listing time; at 100 TB that is a full-lake
-    metadata sweep per query). The declared schema IS the contract;
-    evolution happens by widening the declaration, never by paying an
-    inference pass."""
-    return spark.read.schema(schema).parquet(path)

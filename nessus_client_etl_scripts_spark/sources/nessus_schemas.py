@@ -18,8 +18,8 @@ from pyspark.sql import types as T
 # ---------------------------------------------------------------------------
 
 # outputs: flattened {port, output} structs (export.py:144-149). The
-# raw Nessus payload carries ports as a JSON map keyed by port; the
-# raw-shaped variant is PORTS_MAP_SCHEMA below.
+# raw Nessus payload carries ports as a JSON map keyed by port
+# (functions.explode_port_map reads that shape).
 OUTPUT_SCHEMA = T.StructType(
     [
         T.StructField("port", T.StringType()),
@@ -115,10 +115,6 @@ SCAN_RUN_DOC_SCHEMA = T.StructType(
     ]
 )
 
-# raw Nessus plugin-output payload BEFORE the reference's flattening
-# (export.py:144-149): ports arrives as a map keyed by port string
-PORTS_MAP_SCHEMA = T.MapType(T.StringType(), T.StringType())
-
 FOLDER_DOC_SCHEMA = T.StructType(
     [
         T.StructField("id", T.IntegerType()),
@@ -154,101 +150,44 @@ SCAN_DOC_SCHEMA = T.StructType(
 # Silver: warehouse tables (schema.sql)
 # ---------------------------------------------------------------------------
 
-FOLDER_SCHEMA = T.StructType(
-    [
-        T.StructField("folder_id", T.IntegerType()),
-        T.StructField("type", T.StringType()),
-        T.StructField("name", T.StringType()),
-    ]
+_INT, _BIGINT, _STRING, _DOUBLE = (
+    T.IntegerType(), T.LongType(), T.StringType(), T.DoubleType()
+)
+_SEVERITY_COUNTS = dict.fromkeys(
+    ("critical_count", "high_count", "medium_count", "low_count", "info_count"),
+    _INT,
 )
 
-SCAN_SCHEMA = T.StructType(
-    [
-        T.StructField("scan_id", T.IntegerType()),
-        T.StructField("folder_id", T.IntegerType()),
-        T.StructField("type", T.StringType()),
-        T.StructField("name", T.StringType()),
-    ]
-)
 
-SCAN_RUN_SCHEMA = T.StructType(
-    [
-        T.StructField("scan_run_id", T.IntegerType()),
-        T.StructField("scan_id", T.IntegerType()),
-        T.StructField("scan_start", T.LongType()),
-        T.StructField("scan_end", T.LongType()),
-        T.StructField("targets", T.StringType()),
-        T.StructField("host_count", T.IntegerType()),
-        T.StructField("critical_count", T.IntegerType()),
-        T.StructField("high_count", T.IntegerType()),
-        T.StructField("medium_count", T.IntegerType()),
-        T.StructField("low_count", T.IntegerType()),
-        T.StructField("info_count", T.IntegerType()),
-    ]
-)
+def _table(**columns: T.DataType) -> T.StructType:
+    return T.StructType([T.StructField(n, t) for n, t in columns.items()])
 
-HOST_SCHEMA = T.StructType(
-    [
-        T.StructField("host_id", T.LongType()),
-        T.StructField("nessus_host_id", T.IntegerType()),
-        T.StructField("scan_run_id", T.IntegerType()),
-        T.StructField("scan_id", T.IntegerType()),
-        T.StructField("host_ip", T.StringType()),
-        T.StructField("host_fqdn", T.StringType()),
-        T.StructField("host_start", T.StringType()),
-        T.StructField("host_end", T.StringType()),
-        T.StructField("os", T.StringType()),
-        T.StructField("critical_count", T.IntegerType()),
-        T.StructField("high_count", T.IntegerType()),
-        T.StructField("medium_count", T.IntegerType()),
-        T.StructField("low_count", T.IntegerType()),
-        T.StructField("info_count", T.IntegerType()),
-    ]
-)
 
-HOST_VULN_SCHEMA = T.StructType(
-    [
-        T.StructField("host_vuln_id", T.LongType()),
-        T.StructField("nessus_host_id", T.IntegerType()),
-        T.StructField("scan_run_id", T.IntegerType()),
-        T.StructField("plugin_id", T.IntegerType()),
-    ]
-)
-
-PLUGIN_TABLE_SCHEMA = T.StructType(
-    [
-        T.StructField("plugin_id", T.IntegerType()),
-        T.StructField("severity", T.IntegerType()),
-        T.StructField("name", T.StringType()),
-        T.StructField("family", T.StringType()),
-        T.StructField("synopsis", T.StringType()),
-        T.StructField("description", T.StringType()),
-        T.StructField("solution", T.StringType()),
-        T.StructField("cvss_base_score", T.DoubleType()),
-        T.StructField("cvss3_base_score", T.DoubleType()),
-        T.StructField("cvss_vector", T.StringType()),
-        T.StructField("cvss3_vector", T.StringType()),
-        T.StructField("ref", T.StringType()),
-        T.StructField("pub_date", T.StringType()),
-        T.StructField("mod_date", T.StringType()),
-    ]
-)
-
-VULN_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("vuln_output_id", T.LongType()),
-        T.StructField("host_vuln_id", T.LongType()),
-        T.StructField("port", T.StringType()),
-        T.StructField("output", T.StringType()),
-    ]
-)
-
-SILVER_TABLES = (
-    "folder",
-    "scan",
-    "scan_run",
-    "host",
-    "host_vuln",
-    "plugin",
-    "vuln_output",
-)
+# one StructType per table, keyed by the table's name: the names are the
+# silver layer's table list, and every silver read passes its schema
+SILVER_SCHEMAS = {
+    "folder": _table(folder_id=_INT, type=_STRING, name=_STRING),
+    "scan": _table(scan_id=_INT, folder_id=_INT, type=_STRING, name=_STRING),
+    "scan_run": _table(
+        scan_run_id=_INT, scan_id=_INT, scan_start=_BIGINT, scan_end=_BIGINT,
+        targets=_STRING, host_count=_INT, **_SEVERITY_COUNTS,
+    ),
+    "host": _table(
+        host_id=_BIGINT, nessus_host_id=_INT, scan_run_id=_INT, scan_id=_INT,
+        host_ip=_STRING, host_fqdn=_STRING, host_start=_STRING,
+        host_end=_STRING, os=_STRING, **_SEVERITY_COUNTS,
+    ),
+    "host_vuln": _table(
+        host_vuln_id=_BIGINT, nessus_host_id=_INT, scan_run_id=_INT, plugin_id=_INT
+    ),
+    "plugin": _table(
+        plugin_id=_INT, severity=_INT, name=_STRING, family=_STRING,
+        synopsis=_STRING, description=_STRING, solution=_STRING,
+        cvss_base_score=_DOUBLE, cvss3_base_score=_DOUBLE,
+        cvss_vector=_STRING, cvss3_vector=_STRING, ref=_STRING,
+        pub_date=_STRING, mod_date=_STRING,
+    ),
+    "vuln_output": _table(
+        vuln_output_id=_BIGINT, host_vuln_id=_BIGINT, port=_STRING, output=_STRING
+    ),
+}

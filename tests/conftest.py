@@ -22,9 +22,9 @@ def spark():
 
 
 @pytest.fixture(scope="session")
-def silver(spark, tmp_path_factory):
-    """Fixture documents normalized to the 7 silver tables, written to
-    parquet and read back (pins the surrogate ids)."""
+def silver_root(spark, tmp_path_factory):
+    """Fixture documents normalized to the 7 silver tables and written
+    to parquet; the root directory of the tables."""
     from nessus_client_etl_scripts_spark.pipeline import fixtures, normalize
 
     root = str(tmp_path_factory.mktemp("silver"))
@@ -34,4 +34,13 @@ def silver(spark, tmp_path_factory):
         scan_docs=fixtures.scan_docs(spark),
     )
     normalize.write_silver(tables, root)
-    return normalize.read_silver(spark, root)
+    return root
+
+
+@pytest.fixture(scope="session")
+def silver(spark, silver_root):
+    """The silver tables read back from ``silver_root`` (pins the
+    surrogate ids)."""
+    from nessus_client_etl_scripts_spark.pipeline import normalize
+
+    return normalize.read_silver(spark, silver_root)

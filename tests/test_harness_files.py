@@ -67,6 +67,7 @@ def test_bench_tail_record_decodes_to_every_timing():
         "unit": "sec",
         "queries": timings,
         "sf": 0.1,
+        "pins_failures": 2,
         "errors": {errored: "RuntimeError: boom"},
     }
     line = bench.tail_record(record, names)
@@ -75,6 +76,7 @@ def test_bench_tail_record_decodes_to_every_timing():
     assert (rec["metric"], rec["value"], rec["n_queries"], rec["n_errors"]) == (
         record["metric"], record["value"], 343, 1,
     )
+    assert rec["pins_failures"] == 2
     decoded = _decode_tail(line, names, bench)
     assert decoded.keys() == timings.keys()
     for n, t in timings.items():

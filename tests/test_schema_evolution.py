@@ -1,70 +1,74 @@
-"""Schema-evolution reads over a partitioned snapshot lake: later
-snapshots gain a column; one declared-schema read serves the whole
-history (old files null-fill, partition pruning intact) without a
+"""Schema-evolution reads over the landed ``scan_run`` lake: later
+snapshots gain or retire a top-level field, and the engine's reader
+(``read_scan_run_documents``, declared ``SCAN_RUN_DOC_SCHEMA``) serves
+the whole history — old files null-fill the new field, a retired field
+is pruned at the scan, and partition pruning stays intact — without a
 mergeSchema footer sweep."""
+
+import datetime as dt
+import json
+import os
 
 import pyspark.sql.functions as F
 
+from nessus_client_etl_scripts_spark.pipeline import fixtures
+from nessus_client_etl_scripts_spark.pipeline.export_pipeline import write_partitioned
+from nessus_client_etl_scripts_spark.sources.lake import read_scan_run_documents
+from nessus_client_etl_scripts_spark.sources.nessus_schemas import SCAN_RUN_DOC_SCHEMA
 
-def _land(df, root, snapshot):
-    (
-        df.withColumn("snapshot_date", F.lit(snapshot))
-        .write.mode("append")
-        .partitionBy("snapshot_date")
-        .parquet(root)
+DEP = "dep-evolve"
+
+
+def _docs(spark, run):
+    return spark.createDataFrame(
+        [fixtures.scan_run_doc(s, run) for s in (0, 1)], SCAN_RUN_DOC_SCHEMA
     )
+
+
+def _scan_columns(df) -> list[str]:
+    """The columns the parquet scan under ``df`` reads (its ReadSchema)."""
+    scan = df._jdf.queryExecution().executedPlan().collectLeaves().head()
+    return [f["name"] for f in json.loads(scan.requiredSchema().json())["fields"]]
 
 
 def test_declared_schema_spans_lake_generations(spark, tmp_path):
-    from nessus_client_etl_scripts_spark.sources.lake import (
-        read_evolved_parquet,
+    lake = str(tmp_path / "lake")
+    # generation 1 was landed before the documents carried info_count
+    write_partitioned(
+        _docs(spark, 0).drop("info_count"), lake, DEP, dt.date(2024, 1, 1),
+        file_type="scan_run",
     )
+    write_partitioned(_docs(spark, 1), lake, DEP, dt.date(2024, 1, 2), file_type="scan_run")
+    assert "info_count" not in spark.read.parquet(
+        os.path.join(lake, "scan_run", f"deployment_id={DEP}", "snapshot_date=20240101")
+    ).columns
 
-    root = str(tmp_path / "lake")
-    gen1 = spark.createDataFrame(
-        [(1, "a"), (2, "b")], "id long, name string"
-    )
-    _land(gen1, root, "20240101")
-    # generation 2 added a quality score column
-    gen2 = spark.createDataFrame(
-        [(3, "c", 0.9)], "id long, name string, quality double"
-    )
-    _land(gen2, root, "20240102")
-
-    schema = (
-        "id long, name string, quality double, snapshot_date string"
-    )
-    out = read_evolved_parquet(spark, root, schema)
-    rows = {r.id: (r.name, r.quality, r.snapshot_date) for r in out.collect()}
-    assert rows == {
-        1: ("a", None, "20240101"),   # old files null-fill the new column
-        2: ("b", None, "20240101"),
-        3: ("c", 0.9, "20240102"),
+    out = read_scan_run_documents(spark, lake, DEP)
+    want = {
+        d["history_id"]: (d["info_count"] if run else None, 20240101 + run)
+        for run in (0, 1)
+        for d in (fixtures.scan_run_doc(s, run) for s in (0, 1))
     }
+    assert {r.history_id: (r.info_count, r.snapshot_date) for r in out.collect()} == want
+    assert any(v[0] is not None for v in want.values())
 
     # partition pruning still fires through the declared-schema read
-    pruned = out.filter(F.col("snapshot_date") == "20240102")
+    pruned = read_scan_run_documents(spark, lake, DEP, since="20240102")
     plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    assert pruned.count() == 1
+    assert "PartitionFilters: [isnotnull(deployment_id" in plan
+    assert "snapshot_date" in plan.split("PartitionFilters")[1].split("]")[0]
+    assert pruned.count() == 2
 
 
 def test_declared_schema_prunes_retired_columns(spark, tmp_path):
-    """Reading YESTERDAY's wider files with a narrower declaration
-    drops the retired column at the scan (ReadSchema excludes it)."""
-    from nessus_client_etl_scripts_spark.sources.lake import (
-        read_evolved_parquet,
-    )
+    """Reading yesterday's wider files with the narrower declaration
+    drops the retired field at the scan (ReadSchema excludes it)."""
+    lake = str(tmp_path / "lake")
+    wide = _docs(spark, 0).withColumn("legacy", F.lit("drop-me"))
+    write_partitioned(wide, lake, DEP, dt.date(2024, 1, 1), file_type="scan_run")
+    assert "legacy" in spark.read.parquet(os.path.join(lake, "scan_run")).columns
 
-    root = str(tmp_path / "lake")
-    wide = spark.createDataFrame(
-        [(1, "a", "drop-me")], "id long, name string, legacy string"
-    )
-    _land(wide, root, "20240101")
-    out = read_evolved_parquet(
-        spark, root, "id long, name string, snapshot_date string"
-    )
-    assert out.columns == ["id", "name", "snapshot_date"]
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "legacy" not in plan.split("ReadSchema")[1][:200]
-    assert out.count() == 1
+    out = read_scan_run_documents(spark, lake, DEP)
+    assert out.columns == SCAN_RUN_DOC_SCHEMA.names + ["deployment_id", "snapshot_date"]
+    assert _scan_columns(out) == SCAN_RUN_DOC_SCHEMA.names
+    assert out.count() == 2

@@ -31,6 +31,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 import pandas as pd
 
+from nessus_client_etl_scripts_spark import pins
 from nessus_client_etl_scripts_spark.catalog import TESTDATA_TABLES
 from nessus_client_etl_scripts_spark.runner import run_query
 from nessus_client_etl_scripts_spark.session import get_spark
@@ -163,8 +164,11 @@ def main() -> int:
         with ThreadPoolExecutor(max_workers=jobs) as pool:
             list(pool.map(worker, todo))
 
-    print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
-    return 1 if failures else 0
+    # a failed unpersist leaves pinned blocks to the ContextCleaner: a
+    # broken release path, so it fails the sweep like a wrong value
+    print(f"\npins.failures {pins.failures}")
+    print(f"{len(failures)} failures" + (f": {failures}" if failures else ""))
+    return 1 if failures or pins.failures else 0
 
 
 if __name__ == "__main__":

@@ -15,11 +15,9 @@ from pyspark.sql import types as T
 __all__ = [
     "array_join_lines",
     "explode_port_map",
-    "yyyymmdd",
     "parse_yyyymmdd",
     "epoch_to_date",
     "epoch_to_timestamp",
-    "days_ago",
     "key_segment",
     "is_yyyymmdd_segment",
 ]
@@ -52,12 +50,6 @@ def explode_port_map(ports: Column | str) -> tuple[Column, Column]:
     return F.map_keys(as_map), as_map
 
 
-def yyyymmdd(col: Column | str) -> Column:
-    """F3 — format a date/timestamp as the reference's ``YYYYMMDD``
-    partition-folder name (export.py:55-58)."""
-    return F.date_format(col, "yyyyMMdd")
-
-
 def parse_yyyymmdd(col: Column | str) -> Column:
     """F4 — parse a ``YYYYMMDD`` key segment to a date (export.py:82)."""
     return F.to_date(col, "yyyyMMdd")
@@ -72,11 +64,6 @@ def epoch_to_timestamp(col: Column | str) -> Column:
 def epoch_to_date(col: Column | str) -> Column:
     """F5 — epoch seconds → date (export.py:235)."""
     return F.to_date(epoch_to_timestamp(col))
-
-
-def days_ago(n: int) -> Column:
-    """F6 — ``now() - timedelta(days=n)`` (export_last_month.py:208)."""
-    return F.date_sub(F.current_date(), n)
 
 
 def key_segment(key: Column | str, idx: int, sep: str = "/") -> Column:

@@ -57,25 +57,6 @@ def pivot_sum(
     return df.groupBy(*group_by).agg(*aggs)
 
 
-def severity_pivot(
-    df: DataFrame,
-    group_by: Sequence[str],
-    severity_col: str = "severity",
-    count_col: Column | str = "count",
-    faithful: bool = True,
-) -> DataFrame:
-    """The reference's severity counters over an exploded
-    vulnerabilities relation (export.py:60-65,170,194)."""
-    return pivot_sum(
-        df,
-        group_by,
-        severity_col,
-        {sev: name for sev, name in SEVERITY_COLUMNS.items()},
-        count_col,
-        exclude=frozenset({0}) if faithful else None,
-    )
-
-
 def max_date_watermark(
     df: DataFrame, date_col: Column | str, default: str = "1970-01-01"
 ) -> DataFrame:

@@ -138,7 +138,6 @@ def minhash_signatures(
     id_col: str = "doc_id",
     num_hashes: int = 64,
     k: int = 3,
-    family: str = "xxhash64",
 ) -> DataFrame:
     """(doc_id, sig) MinHash signatures — ROW-LOCAL formulation: the
     base hash of every shingle is staged ONCE as an array attribute
@@ -154,24 +153,19 @@ def minhash_signatures(
     reference it without recomputing md5), but the row-local form
     drops the 8-byte-per-shingle posting shuffle and the 64-column
     aggregation machinery entirely — measured 2× faster at sf0.1
-    (1.36 s → 0.72 s md5, 0.47 s → 0.23 s xxhash64) with bit-identical
-    signatures, and strictly better at 100 TB (one less wide exchange;
-    per-row arrays are bounded by document length).
+    (1.36 s → 0.72 s) with bit-identical signatures, and strictly
+    better at 100 TB (one less wide exchange; per-row arrays are
+    bounded by document length).
 
-    ``family``:
-    - ``'xxhash64'`` (default, hot path): hash the shingle string once,
-      derive the n-member family by re-hashing the resulting 8-byte
-      long per seed (hashing ~20 string bytes 64x per shingle costs
-      ~4x more than 8 bytes 64x); sig is ``array<long>``.
-    - ``'md5'`` (engine-portable parity path): ONE md5 per shingle,
-      truncated to a 28-bit integer (7 hex chars), then the standard
-      universal-hash MinHash family h_s(x) = (a_s·x + b_s) mod 2^31−1
-      with driver-literal coefficients — every intermediate fits a
-      64-bit long (a·x < 2^59), so the math is exact, codegen-fast,
-      and bit-identical in DuckDB, making the whole pipeline
-      oracle-checkable (VERDICT r1 §Next-2). (Two earlier portable
-      variants, 64 md5s per shingle and a decimal(38) 61-bit family,
-      were 2.7× / 5× slower.)
+    Hashing (engine-portable, so every value has a DuckDB twin): ONE
+    md5 per shingle, truncated to a 28-bit integer (7 hex chars), then
+    the standard universal-hash MinHash family h_s(x) = (a_s·x + b_s)
+    mod 2^31−1 with driver-literal coefficients — every intermediate
+    fits a 64-bit long (a·x < 2^59), so the math is exact,
+    codegen-fast, and bit-identical in DuckDB, making the whole
+    pipeline oracle-checkable (VERDICT r1 §Next-2). (Two earlier
+    portable variants, 64 md5s per shingle and a decimal(38) 61-bit
+    family, were 2.7× / 5× slower.) sig is ``array<long>``.
     """
     from ..catalog import spread_for_compute
 
@@ -182,68 +176,42 @@ def minhash_signatures(
     sh = staged.select(
         "doc_id", shingles_from_tokens(F.col("toks"), k).alias("sh")
     )
-    if family == "md5":
-        h0 = sh.select(
-            "doc_id",
+    h0 = sh.select(
+        "doc_id",
+        F.transform(
+            "sh",
+            lambda x: F.conv(F.substring(F.md5(x), 1, 7), 16, 10).cast("long"),
+        ).alias("h0s"),
+    )
+    sig_elems = [
+        F.array_min(
             F.transform(
-                "sh",
-                lambda x: F.conv(F.substring(F.md5(x), 1, 7), 16, 10).cast(
-                    "long"
-                ),
-            ).alias("h0s"),
-        )
-        sig_elems = [
-            F.array_min(
-                F.transform(
-                    "h0s",
-                    lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MERSENNE_31),
-                )
+                "h0s",
+                lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MERSENNE_31),
             )
-            for a, b in minhash_affine_coeffs(num_hashes)
-        ]
-    else:
-        h0 = sh.select(
-            "doc_id",
-            F.transform("sh", lambda x: F.xxhash64(x)).alias("h0s"),
         )
-        sig_elems = [
-            F.array_min(F.transform("h0s", lambda h: F.xxhash64(h, F.lit(s))))
-            for s in range(num_hashes)
-        ]
+        for a, b in minhash_affine_coeffs(num_hashes)
+    ]
     return h0.select("doc_id", F.array(*sig_elems).alias("sig"))
 
 
-def _banded_frame(
-    sig: DataFrame, num_hashes: int, bands: int, family: str
-) -> DataFrame:
+def _banded_frame(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     """(doc_id, band, bucket) LSH banding of a signature frame —
-    shared by candidate generation and the calibration operator. For
-    the md5 family the bucket key is the band slice SERIALIZED, not
-    re-hashed — ~40-80 B through the shuffle, and the DuckDB twin is
-    a plain concat of the same longs (no second hash to mirror); the
-    xxhash64 family re-hashes to a compact 8-byte key."""
+    shared by candidate generation and the calibration operator. The
+    bucket key is the band slice SERIALIZED, not re-hashed — ~40-80 B
+    through the shuffle, and the DuckDB twin is a plain concat of the
+    same longs (no second hash to mirror)."""
     rows_per_band = num_hashes // bands
 
-    if family == "md5":
-        def bucket_of(b):
-            return F.concat_ws(
-                ",",
-                F.transform(
-                    F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band),
-                    lambda v: v.cast("string"),
-                ),
-            )
-    else:
-        def bucket_of(b):
-            return F.xxhash64(
-                F.concat_ws(
-                    ",",
-                    F.transform(
-                        F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band),
-                        lambda v: v.cast("string"),
-                    ),
-                )
-            )
+    def bucket_of(b):
+        return F.concat_ws(
+            ",",
+            F.transform(
+                F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band),
+                lambda v: v.cast("string"),
+            ),
+        )
+
     return sig.select(
         "doc_id",
         F.explode(
@@ -262,18 +230,16 @@ def minhash_lsh_candidates(
     num_hashes: int = 64,
     bands: int = 16,
     k: int = 3,
-    family: str = "xxhash64",
     materialize_signatures: bool = False,
 ) -> DataFrame:
     """LSH banding: split the signature into ``bands`` rows of
     ``num_hashes/bands`` values, hash each band to a bucket, and emit
     candidate pairs that share any (band, bucket).
 
-    The shuffle key is (band_idx, bucket_hash) — 16 bytes/doc/band
-    (40 with the md5 family's hex-string buckets). Hot buckets
-    (boilerplate docs) are the skew risk; AQE skew-join splitting
-    handles them, and the band hash's wide range keeps accidental
-    collisions rare. ``family`` as in :func:`minhash_signatures`.
+    The shuffle key is (band_idx, bucket) — the band's serialized
+    slice, ~40-80 bytes/doc/band. Hot buckets (boilerplate docs) are
+    the skew risk; AQE skew-join splitting handles them, and the
+    signatures' wide value range keeps accidental collisions rare.
 
     ``materialize_signatures``: Catalyst does no common-subexpression
     sharing across a self-join, so the plan shingles+hashes the corpus
@@ -289,10 +255,10 @@ def minhash_lsh_candidates(
     real pipeline lands signatures as a table instead; default False
     keeps declared queries fully lazy.
     """
-    sig = minhash_signatures(df, text_col, id_col, num_hashes, k, family)
+    sig = minhash_signatures(df, text_col, id_col, num_hashes, k)
     if materialize_signatures:
         sig = sig.persist()
-    banded = _banded_frame(sig, num_hashes, bands, family)
+    banded = _banded_frame(sig, num_hashes, bands)
     left = banded.alias("l")
     right = banded.alias("r")
     out = (
@@ -318,7 +284,7 @@ def minhash_lsh_candidates(
 
 def simhash64(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    bits: int = 64, family: str = "xxhash64",
+    bits: int = 64,
 ) -> DataFrame:
     """(doc_id, simhash) — 64-bit SimHash: per bit position, majority
     vote of the token hashes' bits, packed into one long.
@@ -336,13 +302,13 @@ def simhash64(
     2.04 s min-of-5 — the removed exchange only carried 64 partial
     longs per doc), so the change buys plan shape for scale, not
     local speed: one fewer full exchange and no row-count blowup
-    between scan and result. Bit-identical both families.
+    between scan and result. Bit-identical to the explode form.
     Ties vote 1 (2·ones ≥ n ⇔ Σ(2·bit−1) ≥ 0).
 
-    ``family='md5'`` (engine-portable parity path): bit j is bit
-    (j mod 4) of hex nibble (j div 4) of md5(token) — the hex strings
-    and then the 16 nibble ARRAYS are staged as separate projections
-    so each hex digit parses once per token, not once per bit. DuckDB
+    Hashing (engine-portable): bit j is bit (j mod 4) of hex nibble
+    (j div 4) of md5(token) — the hex strings and then the parsed
+    8-hex-char words are staged as separate projections so each hex
+    digit parses once per token, not once per bit. DuckDB
     reproduces the exact same bits via strpos('0123456789abcdef', …),
     so the full simhash is oracle-checkable (requires bits <= 64).
     """
@@ -374,42 +340,30 @@ def simhash64(
             acc + F.shiftrightunsigned(h, shift).bitwiseAND(one) * 2 - 1
         )
 
-    if family == "md5":
-        hexed = staged.select(
-            "doc_id", F.transform("toks", lambda t: F.md5(t)).alias("hs")
-        )
-        worded = hexed.select(
-            "doc_id",
-            *[
-                F.transform("hs", _word(i)).alias(f"_w{i}")
-                for i in range((bits + 31) // 32)
-            ],
-        )
-        # bit j lives in word j div 32 at in-word bit position
-        # 4*(7 - (j div 4 - 8*(j div 32))) + j mod 4 (hex chars are
-        # most-significant-first within each parsed word)
-        votes = worded.select(
-            "doc_id",
-            *[
-                F.aggregate(
-                    F.col(f"_w{j // 32}"),
-                    zero,
-                    _vote(4 * (7 - (j // 4 - 8 * (j // 32))) + j % 4),
-                ).alias(f"_v{j}")
-                for j in range(bits)
-            ],
-        )
-    else:
-        hashed = staged.select(
-            "doc_id", F.transform("toks", lambda t: F.xxhash64(t)).alias("hs")
-        )
-        votes = hashed.select(
-            "doc_id",
-            *[
-                F.aggregate(F.col("hs"), zero, _vote(j)).alias(f"_v{j}")
-                for j in range(bits)
-            ],
-        )
+    hexed = staged.select(
+        "doc_id", F.transform("toks", lambda t: F.md5(t)).alias("hs")
+    )
+    worded = hexed.select(
+        "doc_id",
+        *[
+            F.transform("hs", _word(i)).alias(f"_w{i}")
+            for i in range((bits + 31) // 32)
+        ],
+    )
+    # bit j lives in word j div 32 at in-word bit position
+    # 4*(7 - (j div 4 - 8*(j div 32))) + j mod 4 (hex chars are
+    # most-significant-first within each parsed word)
+    votes = worded.select(
+        "doc_id",
+        *[
+            F.aggregate(
+                F.col(f"_w{j // 32}"),
+                zero,
+                _vote(4 * (7 - (j // 4 - 8 * (j // 32))) + j % 4),
+            ).alias(f"_v{j}")
+            for j in range(bits)
+        ],
+    )
     packed = F.lit(0).cast("long")
     for j in range(bits):
         bit = F.when(F.col(f"_v{j}") >= 0, F.lit(1).cast("long")).otherwise(
@@ -1043,7 +997,6 @@ def minhash_estimate_pairs(
     num_hashes: int = 64,
     bands: int = 16,
     k: int = 3,
-    family: str = "md5",
 ) -> DataFrame:
     """LSH candidate pairs WITH their MinHash-estimated Jaccard —
     the signature-agreement fraction (matching positions / hashes)
@@ -1058,10 +1011,8 @@ def minhash_estimate_pairs(
     released after an eager cut. Agreement is a row-local zip_with
     over two 64-long arrays; the estimate is one exact-integer
     division."""
-    sig = minhash_signatures(
-        df, text_col, id_col, num_hashes, k, family
-    ).persist()
-    banded = _banded_frame(sig, num_hashes, bands, family)
+    sig = minhash_signatures(df, text_col, id_col, num_hashes, k).persist()
+    banded = _banded_frame(sig, num_hashes, bands)
     cand = (
         banded.alias("l")
         .join(

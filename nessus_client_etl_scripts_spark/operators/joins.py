@@ -1,4 +1,4 @@
-"""Join operators — SURVEY.md §2.3 (J1-J4).
+"""Join operators — SURVEY.md §2.3 (J3; J1/J2 are inline joins in plans/).
 
 The reference joins via MySQL NATURAL JOIN (key = whatever columns
 share names — get_scan_results.sql:11-14) and via Python fetch-joins
@@ -14,44 +14,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-# Pinned NATURAL JOIN key sets for the Nessus warehouse (SURVEY.md J1/J2).
-NATURAL_KEYS: dict[tuple[str, str], list[str]] = {
-    ("scan_run", "scan"): ["scan_id"],
-    ("scan", "folder"): ["folder_id"],
-    ("host", "host_vuln"): ["nessus_host_id", "scan_run_id"],
-    ("host_vuln", "plugin"): ["plugin_id"],
-    ("host_vuln", "vuln_output"): ["host_vuln_id"],
-}
-
-
-def dim_join(
-    fact: DataFrame, dim: DataFrame, on: Sequence[str] | str, broadcast: bool = True
-) -> DataFrame:
-    """J1 — fact ⋈ small dimension, broadcast by default.
-
-    Reproduces NATURAL JOIN's shared-column dedup via ``on=<names>``
-    (get_scan_stats.sql:11-12). At 100 TB the fact side never moves:
-    broadcast hash join ships only the dimension.
-    """
-    right = F.broadcast(dim) if broadcast else dim
-    return fact.join(right, list(on) if not isinstance(on, str) else on, "inner")
-
-
-def chain_join(
-    base: DataFrame, *steps: tuple[DataFrame, Sequence[str] | str, bool]
-) -> DataFrame:
-    """J2 — N-way equi-join chain (host⋈host_vuln⋈plugin⋈vuln_output,
-    get_scan_results.sql:11-14). Each step is (df, keys, broadcastable).
-
-    Fact⋈fact steps sort-merge on the shared key — co-partitioned after
-    the first shuffle, Catalyst reuses the exchange when keys align.
-    """
-    out = base
-    for df, on, broadcastable in steps:
-        right = F.broadcast(df) if broadcastable else df
-        out = out.join(right, list(on) if not isinstance(on, str) else on, "inner")
-    return out
 
 
 def semi_join_latest(

@@ -2,17 +2,17 @@
 
 Design (the 100 TB training-data posture): image/audio/video payloads
 travel as ``binary`` columns next to a typed ``meta`` struct; decode /
-feature-extract / resize / frame-sample run as Arrow-batched
+feature-extract / frame-sample run as Arrow-batched
 ``mapInPandas`` stages so bytes cross the JVM↔Python boundary once per
 batch, never per row. Decode is pluggable with THREE real native
 codecs (pure bytes + numpy, no libraries): binary PPM (P6) images,
 RIFF/PCM WAV audio, and YUV4MPEG2 (y4m) video — each value-proven end
 to end by a declared query (q105/q106/q107). Compressed formats
-(JPEG/PNG/mp3/mp4) still need a library: that path raises
-``NotImplementedError`` until one is installed, and the default codec
-for arbitrary payloads is a DETERMINISTIC FAKE (md5-seeded from the
-bytes) so the Spark-side contract (schemas, batch iteration, output
-cardinality, partitioning) stays fully tested regardless.
+(JPEG/PNG/mp3/mp4) need a codec library the engine does not use: the
+default codec for arbitrary payloads is a DETERMINISTIC FAKE
+(md5-seeded from the bytes) so the Spark-side contract (schemas,
+batch iteration, output cardinality, partitioning) stays fully
+tested regardless.
 
 Scale notes:
 - ``spark.sql.execution.arrow.maxPartitionBytes`` doesn't see binary
@@ -109,23 +109,10 @@ def _fake_decode(content: bytes) -> np.ndarray:
     )
 
 
-def _require_real_codec() -> None:
-    try:  # pragma: no cover - container has no codec libs
-        import PIL.Image  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "real media decode needs an image/audio library (e.g. Pillow); "
-            "not available in this environment — use stub=True, or PPM "
-            "payloads via codec='ppm' (decoded natively, no libraries)"
-        ) from e
-
-
 # ---------------------------------------------------------------------------
 # REAL codec: binary PPM (P6) — pure bytes + numpy, no external libraries.
 # One genuinely-decodable format upgrades the multimodal surface from
-# stub-only: the Arrow plumbing carries REAL pixels for PPM payloads,
-# while compressed formats (JPEG/PNG/wav) keep the explicit
-# NotImplementedError extension point above.
+# stub-only: the Arrow plumbing carries REAL pixels for PPM payloads.
 # ---------------------------------------------------------------------------
 
 
@@ -172,16 +159,6 @@ def encode_ppm(arr: np.ndarray, maxval: int = 255) -> bytes:
         raise ValueError("PPM is 3-channel RGB")
     header = f"P6\n{w} {h}\n{maxval}\n".encode()
     return header + arr.astype(np.uint8).tobytes()
-
-
-def _resize_nearest(arr: np.ndarray, width: int, height: int) -> np.ndarray:
-    """Nearest-neighbor resize of an (h, w, 3) array — the standard
-    index-mapping formula (same as OpenCV INTER_NEAREST with the
-    floor convention): src_idx = floor(dst_idx * src / dst)."""
-    h, w, _ = arr.shape
-    rows = (np.arange(height) * h // height).astype(np.int64)
-    cols = (np.arange(width) * w // width).astype(np.int64)
-    return arr[rows][:, cols]
 
 
 # ---------------------------------------------------------------------------
@@ -301,9 +278,7 @@ def decode_y4m(content: bytes) -> tuple[np.ndarray, int]:
     return np.stack(frames), fps
 
 
-def media_features(
-    df: DataFrame, stub: bool = True, codec: str = "stub"
-) -> DataFrame:
+def media_features(df: DataFrame, codec: str = "stub") -> DataFrame:
     """Decode + featurize each media row → fixed-dim feature vector.
 
     mapInPandas contract: input batches arrive as pandas frames of the
@@ -316,17 +291,11 @@ def media_features(
     the oracle-checkable path the declared queries use; ``"ppm"``
     decodes REAL binary-PPM payloads natively (:func:`decode_ppm` —
     no libraries needed) and features come from actual pixels (q105
-    value-proves this path end to end). Other real formats still need
-    an image library (``stub=False`` raises until one exists).
-    Precedence: ``codec`` selects the decode path; ``stub`` only
-    matters for ``codec="stub"``, where ``stub=False`` demands the
-    library-backed decoder (WAV/y4m have their own dedicated
-    operators and bypass both flags).
+    value-proves this path end to end). WAV and y4m have their own
+    dedicated operators.
     """
     if codec not in ("stub", "ppm"):
         raise ValueError(f"codec must be 'stub' or 'ppm': {codec}")
-    if not stub and codec == "stub":
-        _require_real_codec()
     from ..catalog import spread_for_compute
 
     df = spread_for_compute(df)  # decode is the per-row-heavy stage
@@ -367,50 +336,6 @@ def media_features(
             yield pd.DataFrame(rows, columns=[f.name for f in FEATURE_SCHEMA])
 
     return df.mapInPandas(featurize, FEATURE_SCHEMA)
-
-
-def resize_media(
-    df: DataFrame,
-    width: int,
-    height: int,
-    stub: bool = True,
-    codec: str = "stub",
-) -> DataFrame:
-    """Resize images: same schema out as in, meta updated, content
-    re-encoded. With ``codec="ppm"`` this is a REAL resize —
-    decode_ppm → nearest-neighbor index mapping → encode_ppm — on
-    actual pixel data; the default stub re-encodes deterministically
-    (checksum-chained bytes of the requested size) so tests can assert
-    the contract either way: byte length tracks the target dims and
-    meta reflects them."""
-    if codec not in ("stub", "ppm"):
-        raise ValueError(f"codec must be 'stub' or 'ppm': {codec}")
-    if not stub and codec == "stub":
-        _require_real_codec()
-    out_len = max(1, (width * height) // 8)
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf.copy()
-            metas, blobs = [], []
-            for meta, content in zip(pdf["meta"], pdf["content"]):
-                raw = bytes(content)
-                if codec == "ppm":
-                    blobs.append(
-                        encode_ppm(
-                            _resize_nearest(decode_ppm(raw), width, height)
-                        )
-                    )
-                else:
-                    seed = hashlib.md5(raw).digest()[:4]
-                    blobs.append((seed * (out_len // 4 + 1))[:out_len])
-                m = dict(meta) if meta is not None else {}
-                m["width"], m["height"] = width, height
-                metas.append(m)
-            out["meta"], out["content"] = metas, blobs
-            yield out
-
-    return df.mapInPandas(resize, df.schema)
 
 
 def sample_frames(df: DataFrame, every_ms: int = 1000) -> DataFrame:

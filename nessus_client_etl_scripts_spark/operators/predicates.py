@@ -10,23 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import epoch_to_date, is_yyyymmdd_segment, key_segment
-
-
-def completed_and_fresh(
-    status_col: str, epoch_col: str, watermark: Column | str
-) -> Column:
-    """P4 — ``status == 'completed' AND date(last_modification) >= wm``
-    (export.py:235). Conjunctive predicate, epoch→date cast."""
-    wm = F.lit(watermark) if isinstance(watermark, str) else watermark
-    return (F.col(status_col) == "completed") & (
-        epoch_to_date(epoch_col) >= F.to_date(wm)
-    )
-
-
-def non_null(col: str) -> Column:
-    """P5 — the reference's ``history == None`` skip (export.py:231)."""
-    return F.col(col).isNotNull()
+from ..functions import is_yyyymmdd_segment, key_segment
 
 
 def valid_partition_key(key_col: str, segment_idx: int = 1) -> Column:
@@ -47,10 +31,4 @@ def optional_eq_filter(df: DataFrame, col: str, value) -> DataFrame:
     """
     if value is None:
         return df
-    return df.filter(F.col(col) == F.lit(value))
-
-
-def scalar_key_filter(df: DataFrame, col: str, value) -> DataFrame:
-    """P8 — parameterized equality filter (``WHERE scan_id = sid``,
-    get_scan_stats.sql:13)."""
     return df.filter(F.col(col) == F.lit(value))

@@ -93,16 +93,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-def l2_distance(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-
-
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -118,11 +108,16 @@ def brute_force_topk(
     plan, scoring |queries| vectors per row. The per-query rank window
     shuffles only (query_id, neighbor_id, score) triples.
 
-    Cosine norms are precomputed PER ROW before the join (|C| + |Q|
-    norm folds instead of |C| x |Q|): per candidate pair only the
-    cross dot product remains — the per-pair fold count drops 3x. The
-    values are bit-identical to folding both norms inline (same IEEE
-    ops in the same order: sqrt, sqrt, multiply, divide), so the
+    ``metric``: ``"cosine"`` scores dot(q, c) / (|q|·|c|); ``"l2"``
+    scores -||q − c|| through the identity ||q − c||² = q·q + c·c −
+    2·q·c — dot folds only, so the float expression is
+    engine-portable (DuckDB ``list_dot_product``).
+
+    The per-vector terms (the norms, or q·q and c·c) are precomputed
+    PER ROW before the join (|C| + |Q| folds instead of |C| x |Q|):
+    per candidate pair only the cross dot product remains — the
+    per-pair fold count drops 3x. The values are bit-identical to
+    folding them inline (the same IEEE ops in the same order), so the
     oracle hash is unchanged.
     """
     from ..catalog import spread_for_compute
@@ -138,7 +133,11 @@ def brute_force_topk(
         c = c.withColumn("_cn", l2_norm(F.col("cv")))
         score = dot(F.col("qv"), F.col("cv")) / (F.col("_qn") * F.col("_cn"))
     else:
-        score = -l2_distance(F.col("qv"), F.col("cv"))
+        q = q.withColumn("_qq", dot(F.col("qv"), F.col("qv")))
+        c = c.withColumn("_cc", dot(F.col("cv"), F.col("cv")))
+        score = -F.sqrt(
+            F.col("_qq") + F.col("_cc") - F.lit(2) * dot(F.col("qv"), F.col("cv"))
+        )
     scored = (
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", score.alias("score"))

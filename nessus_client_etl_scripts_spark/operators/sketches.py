@@ -70,18 +70,14 @@ def hll_distinct(
     df: DataFrame,
     group_cols: list[str],
     value_col: str,
-    corrected: bool = False,
 ) -> DataFrame:
     """(group_cols…, n_rows, approx_distinct) — portable-HLL estimate of
     ``count(distinct value_col)`` per group. NULL values are excluded
     from the sketch (matching COUNT(DISTINCT) semantics) but counted in
     ``n_rows``.
 
-    ``corrected=True`` applies the small-range linear-counting
-    correction (``m·ln(m/V)`` when the raw estimate is below ``2.5m``
-    and empty registers remain) — the accurate choice for API callers,
-    but NOT used by the declared oracle query because ln()'s last ulp
-    varies by libm and would break bit-exact cross-engine hashing."""
+    The estimate is raw HLL (no small-range correction, see module
+    doc)."""
     bucket, rho = _bucket_spark(F.col(value_col))
     lvl1 = (
         df.select(*group_cols, bucket.alias("_b"), rho.alias("_rho"))
@@ -104,18 +100,10 @@ def hll_distinct(
         F.coalesce(F.col("_s"), F.lit(0))
         + (F.lit(M) - F.col("_nb")) * F.lit(1 << RMAX)
     ).cast("double")
-    raw = F.lit(EST_NUMERATOR) / denom
-    est = raw
-    if corrected:
-        zeros = F.lit(M) - F.col("_nb")
-        est = F.when(
-            (raw <= F.lit(2.5 * M)) & (zeros > 0),
-            F.lit(M) * F.log(F.lit(float(M)) / zeros.cast("double")),
-        ).otherwise(raw)
     return lvl2.select(
         *group_cols,
         "n_rows",
-        est.alias("approx_distinct"),
+        (F.lit(EST_NUMERATOR) / denom).alias("approx_distinct"),
     )
 
 

@@ -119,25 +119,21 @@ def fingerprint_md5(text: Column | str) -> Column:
     return F.md5(normalize_text(text))
 
 
-def rolling_hash_from_tokens(
-    toks: Column, window: int = 8, family: str = "xxhash64"
-) -> Column:
+def rolling_hash_from_tokens(toks: Column, window: int = 8) -> Column:
     """Content-defined fingerprint: min of rolling window hashes over
     an ALREADY-MATERIALIZED token array (winnowing-style). Takes the
     attribute form because the slide lambda references the array per
     window position (see dedup.shingles_from_tokens for the rule).
 
-    ``family='md5'``: min over md5 hex strings instead of xxhash64
-    longs — fixed-width lowercase hex ordering equals 128-bit integer
-    ordering, and md5 exists in DuckDB, so the fingerprint is
-    oracle-checkable cross-engine. Output type is string (32 B) rather
-    than long (8 B)."""
+    The window hashes are md5 hex strings — fixed-width lowercase hex
+    ordering equals 128-bit integer ordering, and md5 exists in
+    DuckDB, so the fingerprint (a 32-char string) is oracle-checkable
+    cross-engine."""
     n = F.size(toks)
     idx = F.sequence(F.lit(0), F.greatest(n - F.lit(window), F.lit(0)))
-    hash_fn = F.md5 if family == "md5" else F.xxhash64
     window_hashes = F.transform(
         idx,
-        lambda i: hash_fn(F.concat_ws(" ", F.slice(toks, i + 1, window))),
+        lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i + 1, window))),
     )
     return F.array_min(window_hashes)
 

@@ -14,7 +14,11 @@ than isolated purely from this accumulation.
 Fix: every pin is registered here and released *deterministically*
 at the next query boundary via ``drain()`` — the exact cleanup the
 ContextCleaner would eventually do (``SparkContext.unpersistRDD`` on
-the checkpointed RDD), just not left to GC timing.
+the checkpointed RDD), just not left to GC timing. The registry holds
+the checkpoint RDD's id, not the DataFrame: a session that never
+drains (a caller iterating ``__spark_entry__.queries()`` itself) keeps
+no pinned frame reachable, so the ContextCleaner can still reclaim
+its blocks.
 
 Contract:
 
@@ -45,8 +49,10 @@ on — whatever runs next.
 
 A failed unpersist is counted in ``failures`` (process-wide) and warned
 about once per process: if a Spark upgrade breaks the private
-``_jdf...rdd().unpersist`` path, draining must not silently become a
-no-op that leaves the blocks to the ContextCleaner again.
+``getPersistentRDDs`` / ``unpersist`` path, draining must not silently
+become a no-op that leaves the blocks to the ContextCleaner again. An
+id that is no longer persisted (the ContextCleaner or a stopped
+context got there first) is not a failure: there is nothing to release.
 """
 
 from __future__ import annotations
@@ -54,6 +60,7 @@ from __future__ import annotations
 import threading
 import warnings
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 
 _TLS = threading.local()
@@ -61,27 +68,37 @@ _FAILURES_LOCK = threading.Lock()
 failures = 0  # unpersist calls that raised in drain(), all threads
 
 
-def _registry() -> list[DataFrame]:
+def _registry() -> list[int]:
     reg = getattr(_TLS, "pins", None)
     if reg is None:
         reg = _TLS.pins = []
     return reg
 
 
+def _register(out: DataFrame) -> DataFrame:
+    # Dataset.localCheckpoint returns a Dataset over LogicalRDD whose
+    # `rdd` IS the persisted checkpoint RDD (persisted at checkpoint
+    # time, eager or lazy)
+    _registry().append(out._jdf.queryExecution().logical().rdd().id())
+    return out
+
+
 def pin(df: DataFrame) -> DataFrame:
     """Eager local checkpoint (materializes now, its own job),
     registered for release at the next ``drain()`` on this thread."""
-    out = df.localCheckpoint(eager=True)
-    _registry().append(out)
-    return out
+    return _register(df.localCheckpoint(eager=True))
 
 
 def pin_lazy(df: DataFrame) -> DataFrame:
     """Lazy local checkpoint (materialized by the first action that
     computes it), registered for release at the next ``drain()``."""
-    out = df.localCheckpoint(eager=False)
-    _registry().append(out)
-    return out
+    return _register(df.localCheckpoint(eager=False))
+
+
+def _persistent_rdds():
+    """The driver's persisted RDDs by id (empty without a live context)."""
+    sc = SparkContext._active_spark_context
+    return {} if sc is None else sc._jsc.getPersistentRDDs()
 
 
 def drain() -> int:
@@ -92,19 +109,23 @@ def drain() -> int:
     released, and does not fail the caller."""
     global failures
     reg = _registry()
-    frames, reg[:] = list(reg), []
+    ids, reg[:] = list(reg), []
+    live = None
     n = 0
-    for df in frames:
+    for rdd_id in ids:
         try:
-            # Dataset.localCheckpoint returns a Dataset over LogicalRDD
-            # whose `rdd` IS the persisted checkpoint RDD; unpersisting
-            # it is exactly the ContextCleaner's doCleanupRDD, done now
-            # instead of after an eventual JVM GC. BLOCKING on purpose:
-            # drain runs in the untimed gap between queries, and an
-            # async removal would push the block-manager churn into
-            # whatever runs next (measured: a non-blocking drain taxed
-            # the mid-tier of the full bench ~0.1-0.5 s per query).
-            df._jdf.queryExecution().logical().rdd().unpersist(True)
+            if live is None:
+                live = _persistent_rdds()
+            rdd = live.get(rdd_id)
+            if rdd is None:  # already released: nothing to do
+                continue
+            # exactly the ContextCleaner's doCleanupRDD, done now instead
+            # of after an eventual JVM GC. BLOCKING on purpose: drain
+            # runs in the untimed gap between queries, and an async
+            # removal would push the block-manager churn into whatever
+            # runs next (measured: a non-blocking drain taxed the
+            # mid-tier of the full bench ~0.1-0.5 s per query).
+            rdd.unpersist(True)
             n += 1
         except Exception as e:  # noqa: BLE001 — a dead JVM/session must not
             # turn cleanup into a query failure, but must not go unseen

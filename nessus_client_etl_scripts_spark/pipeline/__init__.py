@@ -8,7 +8,6 @@ incremental export driver (watermark / lookback modes, §2.11).
 from .normalize import normalize_scan_runs, severity_rollup
 from .export_pipeline import (
     compute_watermark,
-    compute_watermark_from_keys,
     run_export,
     write_partitioned,
 )
@@ -17,7 +16,6 @@ __all__ = [
     "normalize_scan_runs",
     "severity_rollup",
     "compute_watermark",
-    "compute_watermark_from_keys",
     "run_export",
     "write_partitioned",
 ]

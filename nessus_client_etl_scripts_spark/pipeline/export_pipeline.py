@@ -32,12 +32,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import (
-    epoch_to_date,
-    is_yyyymmdd_segment,
-    key_segment,
-    parse_yyyymmdd,
-)
+from ..functions import epoch_to_date
 
 EPOCH_DATE = dt.date(1970, 1, 1)
 
@@ -62,22 +57,6 @@ def compute_watermark(lake_root: str, deployment_id: str) -> dt.date:
             d = dt.datetime.strptime(seg, "%Y%m%d").date()
             best = max(best, d)
     return best
-
-
-def compute_watermark_from_keys(keys: DataFrame, key_col: str = "key") -> DataFrame:
-    """The distributed twin of :func:`compute_watermark` for raw S3
-    key listings (`{deployment}/{YYYYMMDD}/{file}.json`): guard the key
-    shape (P6, export.py:84), parse segment 2 (F4), take the max with
-    the epoch default (A2). Returns a 1-row DF with ``watermark DATE``."""
-    seg = key_segment(key_col, 1)
-    valid = keys.filter(
-        (F.size(F.split(key_col, "/")) > F.lit(1)) & is_yyyymmdd_segment(seg)
-    )
-    return valid.agg(
-        F.coalesce(
-            F.max(parse_yyyymmdd(seg)), F.lit("1970-01-01").cast("date")
-        ).alias("watermark")
-    )
 
 
 def fresh_completed_runs(
@@ -108,12 +87,11 @@ def write_partitioned(
     lake_root: str,
     deployment_id: str,
     snapshot_date: dt.date,
-    fmt: str = "parquet",
     file_type: str | None = None,
 ) -> None:
-    """S4 — the partitioned lake sink: ``{lake_root}/deployment_id=…/
-    snapshot_date=YYYYMMDD/`` (the reference's key layout,
-    export.py:97, as real partition columns so readers prune)."""
+    """S4 — the partitioned parquet lake sink: ``{lake_root}/
+    deployment_id=…/snapshot_date=YYYYMMDD/`` (the reference's key
+    layout, export.py:97, as real partition columns so readers prune)."""
     out = df.withColumn("deployment_id", F.lit(deployment_id)).withColumn(
         "snapshot_date", F.lit(snapshot_date.strftime("%Y%m%d"))
     )
@@ -125,8 +103,7 @@ def write_partitioned(
         # the root — re-running a day must be idempotent for THAT day.
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("deployment_id", "snapshot_date")
-        .format(fmt)
-        .save(path)
+        .parquet(path)
     )
 
 

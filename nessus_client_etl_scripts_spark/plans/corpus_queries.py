@@ -3,8 +3,9 @@ the ``documents`` and ``embeddings`` tables (SURVEY.md §7 Phase 4 —
 the training-data-pipeline extensions beyond reference parity).
 
 Registered into the same registry as ``testdata_queries``; importing
-this module populates the driver-visible surface. Queries whose Spark
-form uses xxhash64 (no DuckDB equivalent) are registered rows-only.
+this module populates the driver-visible surface. The hashes these
+queries compute are md5-based, so each hash value has a DuckDB twin
+and the oracles check them value-exact.
 """
 
 from __future__ import annotations
@@ -268,44 +269,22 @@ FROM ranked WHERE rank <= 5
 def q30(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L2 top-k via the ||a-b||² = ||a||²+||b||²-2a·b identity — dot
     products only, so the float expression is engine-portable."""
-    from ..catalog import spread_for_compute
-
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("qv"),
-    )
-    c = spread_for_compute(emb).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("cv"),
-    )
-    score = -F.sqrt(
-        dot(F.col("qv"), F.col("qv"))
-        + dot(F.col("cv"), F.col("cv"))
-        - F.lit(2) * dot(F.col("qv"), F.col("cv"))
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", score.alias("score"))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 5)
-    )
+    out = brute_force_topk(emb, emb.filter(F.col("vec_id") < 20), k=5, metric="l2")
+    return out.withColumn("rank", F.col("rank").cast("long"))
 
 
 # --- md5-portable hash family: oracle-checkable in DuckDB -----------
-# (the xxhash64 defaults remain the hot path; the DECLARED queries run
-# the md5 family so every hash value has a DuckDB twin — VERDICT r1 §2)
+# (the dedup operators hash with md5 only, so every hash value has a
+# DuckDB twin — VERDICT r1 §2)
 
 
 def _minhash_cte(num_hashes: int = 64, bands: int = 16) -> str:
     """Shared DuckDB CTE chain for the md5 MinHash+LSH family: same
     28-bit md5 base hash ('0x'||hex cast), same affine coefficients
-    (driver literals) as minhash_signatures(family='md5') — plain
-    BIGINT math on both sides. Ends with a ``cand`` relation of
-    candidate pairs; composing oracles append their own final SELECT."""
+    (driver literals) as minhash_signatures — plain BIGINT math on
+    both sides. Ends with a ``cand`` relation of candidate pairs;
+    composing oracles append their own final SELECT."""
     from ..operators.dedup import MERSENNE_31, minhash_affine_coeffs
 
     rows = num_hashes // bands
@@ -364,7 +343,6 @@ def q28(spark: SparkSession, sf_dir: str) -> DataFrame:
         num_hashes=64,
         bands=16,
         k=3,
-        family="md5",
         # the q65/q96/q167 posture: unmaterialized, the 64-permutation
         # signature pipeline ran once per self-join side (two full
         # scan→shingle→md5→sign chains in the before plan)
@@ -374,7 +352,7 @@ def q28(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _simhash_cte(bits: int = 64) -> str:
     """DuckDB CTE chain ending in ``sims(doc_id, simhash)`` — the twin
-    of simhash64(family='md5') (same nibble-bit votes), shared by the
+    of simhash64 (same nibble-bit votes), shared by the
     q29 signature query and the q103 hamming-pair join."""
     def nib(i: int) -> str:
         return f"(strpos('0123456789abcdef', substring(h, {i + 1}, 1)) - 1)"
@@ -421,7 +399,7 @@ def q29(spark: SparkSession, sf_dir: str) -> DataFrame:
     votes. md5 nibble-bit family, so the exact packed value is
     oracle-checked bit-for-bit in DuckDB."""
     docs = load_table(spark, sf_dir, "documents")
-    return simhash64(docs, family="md5")
+    return simhash64(docs)
 
 
 def _profile_oracle() -> str:
@@ -963,7 +941,7 @@ def q33(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select("doc_id", tokens(normalize_text("text")).alias("toks"))
     return toks.select(
         "doc_id",
-        rolling_hash_from_tokens(F.col("toks"), family="md5").alias("fingerprint"),
+        rolling_hash_from_tokens(F.col("toks")).alias("fingerprint"),
     )
 
 
@@ -1404,7 +1382,6 @@ def q65(spark: SparkSession, sf_dir: str) -> DataFrame:
         num_hashes=64,
         bands=16,
         k=3,
-        family="md5",
         # Catalyst has no CSE across the banded self-join; persisting
         # the signatures halves the query (3.1 -> 1.8 s at sf0.1) and
         # is the cluster posture anyway (signatures are a landed
@@ -2208,7 +2185,6 @@ def q96(spark: SparkSession, sf_dir: str) -> DataFrame:
         num_hashes=64,
         bands=16,
         k=3,
-        family="md5",
         materialize_signatures=True,  # see q65 — signatures scanned once
     )
     verified = verify_pairs_jaccard(docs, cand, k=3, threshold=0.3)
@@ -2698,7 +2674,7 @@ def q103(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import simhash64, simhash_hamming_pairs
 
     docs = load_table(spark, sf_dir, "documents")
-    sims = simhash64(docs, family="md5").transform(_pin)
+    sims = simhash64(docs).transform(_pin)
     return simhash_hamming_pairs(sims, threshold=3, n_blocks=4)
 
 

@@ -1210,7 +1210,7 @@ def q148(spark: SparkSession, sf_dir: str) -> DataFrame:
     # contract), so both consumers below (verify's candidate list and
     # the calibration join) read ONE materialization — a second pin
     # here measured as pure overhead (+1 job) and was dropped.
-    est = minhash_estimate_pairs(docs, family="md5")
+    est = minhash_estimate_pairs(docs)
     exact = verify_pairs_jaccard(
         docs, est.select("doc_a", "doc_b"), k=3, threshold=0.0
     )

@@ -1528,7 +1528,7 @@ def q167(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     cand = minhash_lsh_candidates(
-        docs, num_hashes=64, bands=16, k=3, family="md5",
+        docs, num_hashes=64, bands=16, k=3,
         materialize_signatures=True,
     )
     verified = verify_pairs_jaccard(docs, cand, k=3, threshold=_Q167_TAU)

@@ -29,7 +29,7 @@ from pyspark.sql import types as T
 
 from ..catalog import load_table, load_tables
 from ..operators.aggregates import exists_flag, max_date_watermark, pivot_sum
-from ..operators.joins import chain_join, dim_join, semi_join_latest
+from ..operators.joins import semi_join_latest
 from ..operators.predicates import optional_eq_filter, valid_partition_key
 from ..operators.windows import latest_per_group, nth_per_group, top_k_per_group
 
@@ -67,10 +67,6 @@ def dsum(col, alias: str, scale: int = 2):
     """Order-independent cross-engine sum: exact decimal agg → double."""
     c = F.col(col) if isinstance(col, str) else col
     return F.sum(c.cast(T.DecimalType(18, scale))).cast("double").alias(alias)
-
-
-def _dsum_sql(expr: str, alias: str, scale: int = 2) -> str:
-    return f"CAST(SUM(CAST({expr} AS DECIMAL(18,{scale}))) AS DOUBLE) AS {alias}"
 
 
 # ---------------------------------------------------------------------------

@@ -94,28 +94,18 @@ class NessusRunsReader(DataSourceReader):
         yield (partition.scan_id, partition.history_id, payload)
 
 
-def _http_transport(options: dict):  # pragma: no cover — needs network
-    try:
-        import requests
-    except ImportError as e:
-        raise NotImplementedError(
-            "HTTP transport needs the 'requests' package; use the "
-            "fixture_json option for offline reads"
-        ) from e
-    base = options["base_url"]
-    headers = {
-        "X-ApiKeys": (
-            f"accessKey={options['access_key']}; "
-            f"secretKey={options['secret_key']}"
-        )
-    }
+def _http_transport(options: dict):
+    """The task's HTTP transport: ``rest.default_transport`` with the
+    ``X-ApiKeys`` header of ``config.NessusConfig``."""
+    from ..config import NessusConfig
+    from .rest import default_transport
 
-    def fetch(path: str) -> dict:
-        r = requests.get(base + path, headers=headers, timeout=60)
-        r.raise_for_status()
-        return r.json()
-
-    return fetch
+    # only the header is read; the URL comes whole from base_url
+    keys = NessusConfig(
+        hostname="", port="",
+        access_key=options["access_key"], secret_key=options["secret_key"],
+    )
+    return default_transport(options["base_url"], keys.api_headers)
 
 
 class NessusRunsDataSource(DataSource):

@@ -9,7 +9,6 @@ from nessus_client_etl_scripts_spark.pipeline import fixtures
 from nessus_client_etl_scripts_spark.pipeline.export_pipeline import (
     EPOCH_DATE,
     compute_watermark,
-    compute_watermark_from_keys,
     fresh_completed_runs,
     run_export,
 )
@@ -22,26 +21,6 @@ DAY2 = dt.date(2024, 2, 2)
 
 def test_watermark_empty_is_epoch(tmp_path):
     assert compute_watermark(str(tmp_path), DEP) == EPOCH_DATE
-
-
-def test_watermark_from_keys_guards_malformed(spark):
-    keys = spark.createDataFrame(
-        [
-            (f"{DEP}/20240115/scan_run_1_1001.json",),
-            (f"{DEP}/20240130/folder.json",),
-            ("malformed",),
-            (f"{DEP}/notadate/scan.json",),
-            (f"{DEP}/1234/scan.json",),  # digits but len != 8
-        ],
-        "key string",
-    )
-    wm = compute_watermark_from_keys(keys).collect()[0].watermark
-    assert wm == dt.date(2024, 1, 30)
-
-
-def test_watermark_from_keys_empty_default(spark):
-    keys = spark.createDataFrame([("malformed",)], "key string")
-    assert compute_watermark_from_keys(keys).collect()[0].watermark == EPOCH_DATE
 
 
 def test_fresh_filter_drops_null_history_and_incomplete(spark):

@@ -1,7 +1,6 @@
 """Multimodal plumbing tests: schema contract, Arrow batch iteration,
-row-expanding frame sampling, determinism, and the real-codec gate."""
+row-expanding frame sampling, determinism, and the native codecs."""
 
-import pyspark.sql.functions as F
 import pytest
 
 from nessus_client_etl_scripts_spark.operators import multimodal as mm
@@ -39,14 +38,6 @@ def test_features_batch_iteration(spark, media):
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
 
 
-def test_resize_updates_meta_and_bytes(media):
-    out = mm.resize_media(media, width=32, height=16)
-    assert out.schema == media.schema
-    for r in out.filter(F.col("kind") == "image").collect():
-        assert (r.meta.width, r.meta.height) == (32, 16)
-        assert len(r.content) == (32 * 16) // 8
-
-
 def test_sample_frames_row_expansion(media):
     out = mm.sample_frames(media, every_ms=1000)
     got = {(r.media_id, r.frame_idx): r.ts_ms for r in out.collect()}
@@ -54,11 +45,6 @@ def test_sample_frames_row_expansion(media):
     assert {m for m, _ in got} == {3, 4}
     assert [ts for (m, _), ts in sorted(got.items()) if m == 3] == [0, 1000, 2000, 3000]
     assert [ts for (m, _), ts in sorted(got.items()) if m == 4] == [0]
-
-
-def test_real_codec_path_gated(media):
-    with pytest.raises(NotImplementedError, match="Pillow"):
-        mm.media_features(media, stub=False)
 
 
 def test_documents_adapter(spark):
@@ -95,48 +81,6 @@ def test_ppm_decode_encode_roundtrip_and_header_forms():
         decode_ppm(b"P5\n1 1\n255\n\x00")  # not P6
     with pytest.raises(ValueError):
         decode_ppm(encode_ppm(arr)[:-1])  # truncated payload
-
-
-def test_ppm_resize_matches_numpy_nearest(spark):
-    import numpy as np
-
-    from nessus_client_etl_scripts_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        _resize_nearest,
-        decode_ppm,
-        encode_ppm,
-        resize_media,
-    )
-
-    rng = np.random.default_rng(7)
-    imgs = {
-        i: rng.integers(0, 256, size=(6 + i, 9 - i, 3), dtype=np.uint8)
-        for i in range(3)
-    }
-    rows = [
-        (
-            i,
-            "image",
-            {
-                "width": a.shape[1],
-                "height": a.shape[0],
-                "channels": 3,
-                "sample_rate": None,
-                "duration_ms": None,
-                "codec": "ppm",
-            },
-            bytearray(encode_ppm(a)),
-        )
-        for i, a in imgs.items()
-    ]
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    out = resize_media(df, width=4, height=5, codec="ppm").collect()
-    for r in out:
-        want = _resize_nearest(imgs[r.media_id], 4, 5)
-        got = decode_ppm(bytes(r.content))
-        assert got.shape == (5, 4, 3)
-        assert (got == want).all()
-        assert r.meta.width == 4 and r.meta.height == 5
 
 
 def test_wav_roundtrip_and_chunk_walk():

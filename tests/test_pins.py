@@ -91,17 +91,47 @@ def test_drain_counts_and_warns_once_when_unpersist_fails(monkeypatch):
     """A broken private unpersist path must be visible, not a silent
     no-op: each failure is counted, the first one warns."""
     monkeypatch.setattr(pins, "failures", 0)
-    broken = types.SimpleNamespace(_jdf=None)  # its unpersist path raises
-    pins._registry().extend([broken, broken])
+
+    def raise_(blocking):
+        raise RuntimeError("unpersist path broken")
+
+    broken = types.SimpleNamespace(unpersist=raise_)
+    monkeypatch.setattr(pins, "_persistent_rdds", lambda: {7: broken, 8: broken})
+    pins._registry().extend([7, 8])
     with pytest.warns(RuntimeWarning, match="unpersist failed") as caught:
         assert pins.drain() == 0
     assert len(caught) == 1
     assert pins.failures == 2
-    pins._registry().append(broken)
+    pins._registry().append(7)
     with warnings.catch_warnings():
         warnings.simplefilter("error")  # a second warning would raise here
         assert pins.drain() == 0
     assert pins.failures == 3
+
+
+def test_registry_holds_rdd_ids_not_frames(spark):
+    """The registry keeps no DataFrame reachable: a session that never
+    drains leaves its checkpoints to the ContextCleaner."""
+    pins.drain()
+    ck = pins.pin(spark.range(50))
+    pins.pin_lazy(spark.range(20))
+    reg = list(pins._registry())
+    assert len(reg) == 2 and all(type(i) is int for i in reg)
+    assert reg[0] == ck._jdf.queryExecution().logical().rdd().id()
+    assert pins.drain() == 2
+
+
+def test_drain_skips_ids_already_released(spark, monkeypatch):
+    """An id no longer persisted (the ContextCleaner got there first)
+    is neither released again nor a failure."""
+    monkeypatch.setattr(pins, "failures", 0)
+    pins.drain()
+    base = _n_persistent(spark)
+    ck = pins.pin(spark.range(30))
+    ck._jdf.queryExecution().logical().rdd().unpersist(True)
+    assert _n_persistent(spark) == base
+    assert pins.drain() == 0
+    assert pins.failures == 0
 
 
 def test_run_query_drains_pins_when_the_query_raises(spark):

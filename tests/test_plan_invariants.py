@@ -189,7 +189,7 @@ def test_q96_pair_generation_is_banding_bounded(spark):
     )
 
     docs = load_table(spark, SF, "documents")
-    cand = minhash_lsh_candidates(docs, num_hashes=64, bands=16, family="md5")
+    cand = minhash_lsh_candidates(docs, num_hashes=64, bands=16)
     plan = cand._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan

@@ -681,7 +681,7 @@ def test_minhash_estimate_tracks_exact_jaccard(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         (r["doc_a"], r["doc_b"]): r
-        for r in minhash_estimate_pairs(df, family="md5").collect()
+        for r in minhash_estimate_pairs(df).collect()
     }
     assert (1, 2) in got  # near-dup pair must surface via banding
     r = got[(1, 2)]

@@ -555,7 +555,7 @@ def test_leakage_safe_split_no_straddle(spark):
     split_of = {r["doc_id"]: r["split"] for r in out}
     docs = spark.read.parquet(f"{SF001}/documents.parquet")
     cand = minhash_lsh_candidates(
-        docs, num_hashes=64, bands=16, k=3, family="md5"
+        docs, num_hashes=64, bands=16, k=3
     )
     pairs = verify_pairs_jaccard(
         docs, cand, k=3, threshold=_Q167_TAU

@@ -249,3 +249,42 @@ def test_jsonl_permissive_quarantines_corrupt_lines(spark, tmp_path):
     assert len(bad_raw) == 2
     assert any("not json" in b for b in bad_raw)
     df.unpersist()
+
+
+def test_data_source_http_transport_offline(monkeypatch):
+    """The data source's per-task transport is rest.default_transport
+    with config's X-ApiKeys header — checked against a fake
+    ``requests`` module, no network."""
+    import sys
+    import types
+
+    from nessus_client_etl_scripts_spark.sources.rest_datasource import (
+        _http_transport,
+    )
+
+    calls = []
+
+    class Response:
+        def raise_for_status(self):
+            calls.append("raise_for_status")
+
+        def json(self):
+            return {"runs": []}
+
+    def get(url, headers, timeout):
+        calls.append((url, headers, timeout))
+        return Response()
+
+    monkeypatch.setitem(sys.modules, "requests", types.SimpleNamespace(get=get))
+    fetch = _http_transport(
+        {"base_url": "https://scanner.test:8834", "access_key": "ak", "secret_key": "sk"}
+    )
+    assert fetch("/scans/runs") == {"runs": []}
+    assert calls == [
+        (
+            "https://scanner.test:8834/scans/runs",
+            {"X-ApiKeys": "accessKey=ak; secretKey=sk"},
+            60,
+        ),
+        "raise_for_status",
+    ]

@@ -37,7 +37,6 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (get_folder_results analogue — SURVEY.md §3.3) on
     sf0.001: latest order per customer in one segment joined through the
     fact chain."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return _tq.spark_queries()["q01_folder_results_latest"](spark, SF0001)
 
 

@@ -223,6 +223,26 @@ def _banded_frame(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     ).select("doc_id", "bb.band", "bb.bucket")
 
 
+def _banded_pairs(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """(doc_a, doc_b), doc_a < doc_b: the distinct signature pairs that
+    share any (band, bucket) — the banded self-join, an equi-join on
+    the band slice, never a corpus cross product."""
+    banded = _banded_frame(sig, num_hashes, bands)
+    return (
+        banded.alias("l")
+        .join(
+            banded.alias("r"),
+            (F.col("l.band") == F.col("r.band"))
+            & (F.col("l.bucket") == F.col("r.bucket"))
+            & (F.col("l.doc_id") < F.col("r.doc_id")),
+        )
+        .select(
+            F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b")
+        )
+        .distinct()
+    )
+
+
 def minhash_lsh_candidates(
     df: DataFrame,
     text_col: str = "text",
@@ -230,7 +250,6 @@ def minhash_lsh_candidates(
     num_hashes: int = 64,
     bands: int = 16,
     k: int = 3,
-    materialize_signatures: bool = False,
 ) -> DataFrame:
     """LSH banding: split the signature into ``bands`` rows of
     ``num_hashes/bands`` values, hash each band to a bucket, and emit
@@ -241,44 +260,24 @@ def minhash_lsh_candidates(
     the skew risk; AQE skew-join splitting handles them, and the
     signatures' wide value range keeps accidental collisions rare.
 
-    ``materialize_signatures``: Catalyst does no common-subexpression
-    sharing across a self-join, so the plan shingles+hashes the corpus
-    TWICE (visible as two full scan→tokenize→sign projection chains
-    in explain).
-    True persists the signature frame (MEMORY_AND_DISK) for the
-    duration of ONE eager candidate materialization (localCheckpoint),
-    then unpersists before returning — the heavy stage runs once and
-    the cache does not outlive the call (repeat invocations, e.g. the
+    Catalyst does no common-subexpression sharing across a self-join,
+    so a lazy plan would shingle+hash the corpus TWICE (two full
+    scan→tokenize→sign projection chains in explain). The signature
+    frame is therefore persisted (MEMORY_AND_DISK) for the duration of
+    ONE eager candidate materialization (localCheckpoint), then
+    unpersisted before returning — the heavy stage runs once and the
+    cache does not outlive the call (repeat invocations, e.g. the
     bench's two timed passes, would otherwise each leak a session-
     lifetime cached frame). The returned frame is the materialized
     candidate pairs — tiny relative to the corpus. At cluster scale a
-    real pipeline lands signatures as a table instead; default False
-    keeps declared queries fully lazy.
+    real pipeline lands signatures as a table instead.
     """
-    sig = minhash_signatures(df, text_col, id_col, num_hashes, k)
-    if materialize_signatures:
-        sig = sig.persist()
-    banded = _banded_frame(sig, num_hashes, bands)
-    left = banded.alias("l")
-    right = banded.alias("r")
-    out = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(
-            F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-    if materialize_signatures:
-        # eager: run the candidate job now (signature stage executes
-        # once via the cache), then release the cache — no session-
-        # lifetime leak across repeated invocations
-        out = out.transform(_pin)
-        sig.unpersist()
+    sig = minhash_signatures(df, text_col, id_col, num_hashes, k).persist()
+    # eager: run the candidate job now (signature stage executes once
+    # via the cache), then release the cache — no session-lifetime
+    # leak across repeated invocations
+    out = _banded_pairs(sig, num_hashes, bands).transform(_pin)
+    sig.unpersist()
     return out
 
 
@@ -1012,20 +1011,7 @@ def minhash_estimate_pairs(
     over two 64-long arrays; the estimate is one exact-integer
     division."""
     sig = minhash_signatures(df, text_col, id_col, num_hashes, k).persist()
-    banded = _banded_frame(sig, num_hashes, bands)
-    cand = (
-        banded.alias("l")
-        .join(
-            banded.alias("r"),
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(
-            F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
+    cand = _banded_pairs(sig, num_hashes, bands)
     sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("_sa"))
     sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("_sb"))
     est = (

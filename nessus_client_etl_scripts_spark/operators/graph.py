@@ -38,7 +38,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import SESSION_CONF_LOCK
 from ..pins import pin as _pin, pin_lazy as _pin_lazy
 
 # Edge sets at or below this size finish with a driver-side union-find
@@ -163,41 +162,13 @@ def _cc_star(
         # (one job instead of a dedicated materialize + a count)
         .transform(_pin_lazy)
     )
-    # Size the per-round shuffles to the ACTUAL edge count: the
-    # contraction loop is 4-6 shuffle+checkpoint stages per round, and
-    # on the sparse similarity graphs that feed this operator (10²-10⁴
-    # edges after LSH verify / density filtering) a session-default 32
-    # partitions is pure task-scheduling overhead — measured 6.6 s →
-    # ~2 s for the whole CC on a 44-edge core graph. Every
-    # materialization happens inside the scope; the restored setting
-    # governs only the final (tiny) label aggregate. At real scale
-    # n_edges/100k keeps one partition per ~100k edges up to the
-    # session default.
-    # NOTE: the scoped set/restore mutates SESSION state, so it holds
-    # SESSION_CONF_LOCK for the whole save→loop→restore span — a
-    # concurrent sweep (compare_oracle --jobs) interleaving two
-    # scoped mutators would otherwise capture a temporary value as
-    # "previous" and strand the session conf (the r11 review's
-    # residual race; run_available_now shares the same lock). The
-    # timing-only cost is that CC loops and streaming drains
-    # serialize against each other under --jobs.
-    spark = edges.sparkSession
     n_edges = base.count()
     if n_edges <= driver_finish:
         return _cc_driver_union_find(base), 0
-    with SESSION_CONF_LOCK:
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        scoped = max(4, min(int(prev_parts), n_edges // 100_000 + 4))
-        spark.conf.set("spark.sql.shuffle.partitions", str(scoped))
-        try:
-            return _cc_star_rounds(base, max_iter, n_edges)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    return _cc_star_rounds(base, max_iter)
 
 
-def _cc_star_rounds(
-    base: DataFrame, max_iter: int, n_edges: int
-) -> tuple[DataFrame, int]:
+def _cc_star_rounds(base: DataFrame, max_iter: int) -> tuple[DataFrame, int]:
     # lazy checkpoints (the windows.py merge rule): cur materializes in
     # its n_cur count below; nodes is not consumed until the final
     # labels job after the loop, so its materialization folds into that

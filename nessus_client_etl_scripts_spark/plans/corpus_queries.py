@@ -338,16 +338,7 @@ def q28(spark: SparkSession, sf_dir: str) -> DataFrame:
     4 rows, bucket equi-join. Fully oracle-checked against the DuckDB
     twin of the same md5 pipeline."""
     docs = load_table(spark, sf_dir, "documents")
-    return minhash_lsh_candidates(
-        docs,
-        num_hashes=64,
-        bands=16,
-        k=3,
-        # the q65/q96/q167 posture: unmaterialized, the 64-permutation
-        # signature pipeline ran once per self-join side (two full
-        # scan→shingle→md5→sign chains in the before plan)
-        materialize_signatures=True,
-    )
+    return minhash_lsh_candidates(docs, num_hashes=64, bands=16, k=3)
 
 
 def _simhash_cte(bits: int = 64) -> str:
@@ -1377,17 +1368,11 @@ def q65(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import minhash_lsh_candidates, verify_pairs_jaccard
 
     docs = load_table(spark, sf_dir, "documents")
-    cand = minhash_lsh_candidates(
-        docs,
-        num_hashes=64,
-        bands=16,
-        k=3,
-        # Catalyst has no CSE across the banded self-join; persisting
-        # the signatures halves the query (3.1 -> 1.8 s at sf0.1) and
-        # is the cluster posture anyway (signatures are a landed
-        # artifact). The cache is a few MB (64 longs/doc).
-        materialize_signatures=True,
-    )
+    # minhash_lsh_candidates persists the signatures for its one eager
+    # candidate job: Catalyst has no CSE across the banded self-join,
+    # and the cache halves the query (3.1 -> 1.8 s at sf0.1). The
+    # cache is a few MB (64 longs/doc).
+    cand = minhash_lsh_candidates(docs, num_hashes=64, bands=16, k=3)
     return verify_pairs_jaccard(docs, cand, k=3, threshold=0.3)
 
 
@@ -2180,13 +2165,7 @@ def q96(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import connected_components
 
     docs = load_table(spark, sf_dir, "documents")
-    cand = minhash_lsh_candidates(
-        docs,
-        num_hashes=64,
-        bands=16,
-        k=3,
-        materialize_signatures=True,  # see q65 — signatures scanned once
-    )
+    cand = minhash_lsh_candidates(docs, num_hashes=64, bands=16, k=3)
     verified = verify_pairs_jaccard(docs, cand, k=3, threshold=0.3)
     comp = connected_components(verified, "doc_a", "doc_b").select(
         F.col("id").alias("doc_id"), "cluster_id"

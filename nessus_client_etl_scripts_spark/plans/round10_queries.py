@@ -226,14 +226,15 @@ def q333(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stateful import sliding_log_rate_audit
     from .streaming_queries import run_available_now, stream_events
 
-    ev = stream_events(spark, sf_dir).select(
-        "user_id",
-        F.expr("unix_micros(ts) div 1000000").alias("sec"),
-    )
+    def plan(session: SparkSession) -> DataFrame:
+        ev = stream_events(session, sf_dir).select(
+            "user_id",
+            F.expr("unix_micros(ts) div 1000000").alias("sec"),
+        )
+        return sliding_log_rate_audit(ev, _Q333_WINDOW_S, _Q333_LIMIT)
+
     sink = run_available_now(
-        sliding_log_rate_audit(ev, _Q333_WINDOW_S, _Q333_LIMIT),
-        "q333_rate_limit",
-        output_mode="append",
+        spark, plan, "q333_rate_limit", output_mode="append"
     )
     w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
     return (

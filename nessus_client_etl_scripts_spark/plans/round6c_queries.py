@@ -1527,10 +1527,7 @@ def q167(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import split_assign
 
     docs = load_table(spark, sf_dir, "documents")
-    cand = minhash_lsh_candidates(
-        docs, num_hashes=64, bands=16, k=3,
-        materialize_signatures=True,
-    )
+    cand = minhash_lsh_candidates(docs, num_hashes=64, bands=16, k=3)
     verified = verify_pairs_jaccard(docs, cand, k=3, threshold=_Q167_TAU)
     comp = connected_components(verified, "doc_a", "doc_b").select(
         F.col("id").alias("doc_id"), "cluster_id"

@@ -32,27 +32,15 @@ the continuous deployment.
 
 from __future__ import annotations
 
-import itertools
+import shutil
 import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import _read_events
-from ..session import SESSION_CONF_LOCK
 from .testdata_queries import dsum, register
-
-_run_ids = itertools.count()
-
-# compare_oracle.py --jobs runs queries concurrently on ONE session;
-# the shuffle-partition save/set/restore below must not interleave
-# (two racing streaming queries could strand the session conf at 8 for
-# the rest of a sweep). The engine pins the count at first checkpoint
-# creation inside start(), so the critical section spans the whole
-# drain — streaming queries serialize under --jobs, a few seconds each.
-# The lock is SHARED with every other session-conf mutator (graph.py's
-# scoped partitioning) — a private lock would still race against them.
-_conf_lock = SESSION_CONF_LOCK
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -63,50 +51,57 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def run_available_now(
-    result: DataFrame,
+    spark: SparkSession,
+    plan: Callable[[SparkSession], DataFrame],
     name: str,
     output_mode: str = "complete",
-    shuffle_partitions: int = 8,
 ) -> DataFrame:
-    """Execute a streaming aggregation to completion (availableNow) into
-    a memory sink and return the sink table. Complete mode (default):
-    every state is emitted once input is exhausted — the batch-parity
-    mode for a bounded backfill (append would hold back sessions inside
-    the watermark horizon). applyInPandasWithState forbids complete;
-    its callers pass "append" and reduce the per-batch emissions
+    """Build the streaming frame ``plan(child)`` on a session of its own,
+    execute it to completion (availableNow) into a memory sink and
+    return the sink table. Complete mode (default): every state is
+    emitted once input is exhausted — the batch-parity mode for a
+    bounded backfill (append would hold back sessions inside the
+    watermark horizon). applyInPandasWithState forbids complete; its
+    callers pass "append" and reduce the per-batch emissions
     downstream.
+
+    The child is a clone of the caller's session (same SparkContext,
+    the caller's SQL conf — time zone included), so the stream leaves
+    the caller's session as it found it: the shuffle-partition count
+    below, the sink's temp view and the stream itself live on the
+    child. The checkpoint directory is deleted once the stream has
+    stopped; the memory sink holds the rows.
 
     State-store sizing (the q115 lesson, generalized): a stateful
     operator instantiates one state store PER shuffle partition per
     operator (stream-stream joins: four), and the store-instance setup
     cost dominates a bounded backfill whose per-key state is tiny —
     measured 6.95 s → 2.28 s on q83 at sf0.1 going 32 → 8 partitions.
-    The engine pins the count at FIRST checkpoint creation (``start()``
-    below), so it is set here for exactly this run and restored after
-    the query drains; a production deployment sizes it once to match
-    state volume, which is precisely what this knob models."""
-    spark = result.sparkSession
-    tbl = f"{name}_{next(_run_ids)}"
-    with _conf_lock:
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(shuffle_partitions)
+    The engine pins the count at FIRST checkpoint creation
+    (``start()``), so the child runs at 8 partitions from the start;
+    whatever the caller builds on the returned sink (q83's and q333's
+    per-user windows) runs on the child at the same count."""
+    # cloneSession, not newSession: a new session starts from the
+    # SparkContext's conf and would drop what the caller set at run time
+    child = spark.__class__(
+        spark.sparkContext, spark._jsparkSession.cloneSession()
+    )
+    child.conf.set("spark.sql.shuffle.partitions", "8")
+    ckpt = tempfile.mkdtemp(prefix="sgq53_")
+    try:
+        (
+            plan(child)
+            .writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
         )
-        try:
-            q = (
-                result.writeStream.format("memory")
-                .queryName(tbl)
-                .outputMode(output_mode)
-                .option(
-                    "checkpointLocation", tempfile.mkdtemp(prefix="sgq53_")
-                )
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(tbl)
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+    return child.table(name)
 
 
 _Q53_ORACLE = """
@@ -139,22 +134,25 @@ def q53(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessions computed BY THE STREAMING ENGINE (readStream →
     session_window state store → availableNow → memory sink) and
     verified value-exact against a batch gap-islands oracle."""
-    ev = stream_events(spark, sf_dir)
-    agg = (
-        ev.groupBy(
-            F.session_window("ts", "30 minutes").alias("w"), "user_id"
-        ).agg(
-            F.count(F.lit(1)).alias("n_events"),
-            dsum("value", "session_value"),
+
+    def plan(session: SparkSession) -> DataFrame:
+        ev = stream_events(session, sf_dir)
+        return (
+            ev.groupBy(
+                F.session_window("ts", "30 minutes").alias("w"), "user_id"
+            ).agg(
+                F.count(F.lit(1)).alias("n_events"),
+                dsum("value", "session_value"),
+            )
+        ).select(
+            "user_id",
+            F.col("w.start").alias("session_start"),
+            F.col("w.end").alias("session_end"),
+            "n_events",
+            "session_value",
         )
-    ).select(
-        "user_id",
-        F.col("w.start").alias("session_start"),
-        F.col("w.end").alias("session_end"),
-        "n_events",
-        "session_value",
-    )
-    return run_available_now(agg, "q53_sessions")
+
+    return run_available_now(spark, plan, "q53_sessions")
 
 
 _Q68_ORACLE = """
@@ -181,21 +179,24 @@ def q68(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark expires closed windows so state stays bounded — the
     availableNow backfill here exercises the identical operator and
     state-store path the 24/7 pipeline runs."""
-    ev = stream_events(spark, sf_dir)
-    agg = (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            dsum("value", "total_value"),
+
+    def plan(session: SparkSession) -> DataFrame:
+        return (
+            stream_events(session, sf_dir)
+            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                dsum("value", "total_value"),
+            )
+            .select(
+                F.col("w.start").alias("window_start"),
+                "event_type",
+                "n_events",
+                "total_value",
+            )
         )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
-    return run_available_now(agg, "q68_hourly")
+
+    return run_available_now(spark, plan, "q68_hourly")
 
 
 _Q74_ORACLE = """
@@ -220,14 +221,18 @@ def q74(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dropDuplicatesWithinWatermark`` bounds the same state by event
     time. The downstream count reuses the dedup shuffle's partitioning
     for its partial aggregate."""
-    ev = stream_events(spark, sf_dir)
-    deduped = ev.select("user_id", "event_type").dropDuplicates(
-        ["user_id", "event_type"]
-    )
-    agg = deduped.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_users")
-    )
-    return run_available_now(agg, "q74_distinct")
+
+    def plan(session: SparkSession) -> DataFrame:
+        deduped = (
+            stream_events(session, sf_dir)
+            .select("user_id", "event_type")
+            .dropDuplicates(["user_id", "event_type"])
+        )
+        return deduped.groupBy("event_type").agg(
+            F.count(F.lit(1)).alias("n_users")
+        )
+
+    return run_available_now(spark, plan, "q74_distinct")
 
 
 _Q83_ORACLE = """
@@ -254,12 +259,15 @@ def q83(spark: SparkSession, sf_dir: str) -> DataFrame:
     unit-tested."""
     from ..streaming.stateful import running_user_totals
 
-    ev = stream_events(spark, sf_dir).select(
-        "user_id",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    )
+    def plan(session: SparkSession) -> DataFrame:
+        ev = stream_events(session, sf_dir).select(
+            "user_id",
+            F.round(F.col("value") * 100).cast("long").alias("cents"),
+        )
+        return running_user_totals(ev)
+
     sink = run_available_now(
-        running_user_totals(ev), "q83_user_totals", output_mode="append"
+        spark, plan, "q83_user_totals", output_mode="append"
     )
     w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
     return (
@@ -304,18 +312,21 @@ def q100(spark: SparkSession, sf_dir: str) -> DataFrame:
     enrichment output is arrival-order independent."""
     from ..catalog import load_table
 
-    ev = stream_events(spark, sf_dir)
-    cust = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("user_id"), "c_mktsegment"
-    )
-    enriched = ev.filter(F.col("event_type") == "purchase").join(
-        F.broadcast(cust), "user_id"
-    )
-    agg = enriched.groupBy("c_mktsegment").agg(
-        F.count(F.lit(1)).alias("n_purchases"),
-        dsum("value", "total_value"),
-    )
-    return run_available_now(agg, "q100_enrich")
+    def plan(session: SparkSession) -> DataFrame:
+        cust = load_table(session, sf_dir, "customer").select(
+            F.col("c_custkey").alias("user_id"), "c_mktsegment"
+        )
+        enriched = (
+            stream_events(session, sf_dir)
+            .filter(F.col("event_type") == "purchase")
+            .join(F.broadcast(cust), "user_id")
+        )
+        return enriched.groupBy("c_mktsegment").agg(
+            F.count(F.lit(1)).alias("n_purchases"),
+            dsum("value", "total_value"),
+        )
+
+    return run_available_now(spark, plan, "q100_enrich")
 
 
 # ---------------------------------------------------------------------------
@@ -350,23 +361,26 @@ def q113(spark: SparkSession, sf_dir: str) -> DataFrame:
     deployment; the map-side partial aggregation means each input row
     contributes 4 partial updates that combine before the state-store
     shuffle. Decimal-safe sums as everywhere (float rule #1)."""
-    ev = stream_events(spark, sf_dir)
-    agg = (
-        ev.groupBy(
-            F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type"
+
+    def plan(session: SparkSession) -> DataFrame:
+        return (
+            stream_events(session, sf_dir)
+            .groupBy(
+                F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type"
+            )
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                dsum("value", "total_value"),
+            )
+            .select(
+                F.col("w.start").alias("window_start"),
+                "event_type",
+                "n_events",
+                "total_value",
+            )
         )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            dsum("value", "total_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
-    return run_available_now(agg, "q113_sliding")
+
+    return run_available_now(spark, plan, "q113_sliding")
 
 
 # ---------------------------------------------------------------------------
@@ -417,20 +431,22 @@ def q115(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     State-store sizing: a stream-stream join instantiates FOUR state
     stores per shuffle partition (left/right × rows/key-counts), so
-    the partition count is a per-query knob, not a session default —
-    under a plain 200-partition session this query would open 800
-    store instances for a bounded backfill (measured 2-4× the wall
-    time at 32 vs 8 partitions at sf0.01; at sf0.1, 8 partitions run
-    2.9 s vs 4.1 s at 16 — store-instance setup still dominates the
-    tiny per-key state). The streaming engine pins the count at FIRST
-    checkpoint creation, so it is set just for this run and restored
-    after the query drains; a production deployment sizes it once to
-    match state volume, exactly as this does — run_available_now's
-    locked shuffle_partitions=8 pin IS that set (the engine reads the
-    conf at first checkpoint creation, inside start() under the lock),
-    so no outer conf mutation is needed here (an unlocked outer
-    save/set/restore was the r11 review's residual conf race)."""
-    return _q115_plan(spark, sf_dir)
+    the partition count belongs to the stream, not to the caller's
+    session — under a plain 200-partition session this query would
+    open 800 store instances for a bounded backfill (measured 2-4× the
+    wall time at 32 vs 8 partitions at sf0.01; at sf0.1, 8 partitions
+    run 2.9 s vs 4.1 s at 16 — store-instance setup still dominates
+    the tiny per-key state). The streaming engine pins the count at
+    FIRST checkpoint creation; run_available_now builds this join on
+    its own child session set to 8 partitions before start(), the
+    once-per-deployment sizing a production stream gets, and the
+    caller's session is never written."""
+    return run_available_now(
+        spark,
+        lambda session: _q115_plan(session, sf_dir),
+        "q115_attribution",
+        output_mode="append",
+    )
 
 
 def _q115_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -455,7 +471,7 @@ def _q115_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withWatermark("purchase_ts", "1 hour")
     )
-    joined = clicks.join(
+    return clicks.join(
         purchases,
         (F.col("user_id") == F.col("p_user_id"))
         & (F.col("purchase_ts") >= F.col("click_ts"))
@@ -472,4 +488,3 @@ def _q115_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("secs_to_purchase"),
         "purchase_value",
     )
-    return run_available_now(joined, "q115_attribution", output_mode="append")

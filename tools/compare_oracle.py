@@ -7,9 +7,11 @@ Usage: python tools/compare_oracle.py [--plain] [--jobs N] [sf_dir] [query ...]
 --jobs N runs N queries concurrently (Spark actions are thread-safe on
 one session; each worker gets its OWN DuckDB connection). Default is
 sequential — the bit-identical gate posture; use --jobs 4 for the
-once-per-round full sf0.1 sweep (~75 min sequential). Timing-only
-session confs mutated by streaming queries (shuffle partitions inside
-run_available_now) are value-neutral for concurrently running plans.
+once-per-round full sf0.1 sweep (~75 min sequential). No query writes
+the shared session's conf beyond the UTC pin every query sets to the
+same value: streaming queries run on a child session of their own
+(run_available_now), so concurrent workers never see each other's
+partition counts or sink views.
 
 --plain runs the queries on an untuned SparkSession (no engine confs:
 shuffle.partitions 200, default broadcast threshold, no Arrow conf) —

@@ -89,8 +89,9 @@ def _read_events(
     read with a declared schema and converted; any other is inferred and
     cast. Both end as session-local TimestampType, so every downstream
     query and the DuckDB oracle (which reads naive micros) see identical
-    wall-clock values — the session timezone is pinned to UTC in
-    ``session.get_spark``, so the NTZ→LTZ cast is value-preserving.
+    wall-clock values — every query runs through
+    ``testdata_queries.register``'s wrapper, which pins the session
+    timezone to UTC, so the NTZ→LTZ cast is value-preserving.
     """
     path = table_path(sf_dir, "events")
     nanos = _nanos_events_schema(path)
@@ -113,9 +114,7 @@ def _read_events(
     return df
 
 
-def spread_for_compute(
-    df: DataFrame, min_partitions: int | None = None
-) -> DataFrame:
+def spread_for_compute(df: DataFrame) -> DataFrame:
     """Round-robin repartition IFF the source provides fewer splits
     than the session's parallelism — otherwise a no-op (no shuffle
     node added at all).
@@ -131,7 +130,7 @@ def spread_for_compute(
     introduced — this is load balancing for the degenerate case, not a
     standing cost. The partition check inspects the planned RDD only;
     no job runs."""
-    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
@@ -148,9 +147,8 @@ def write_bucketed(
     table: str,
     bucket_col: str,
     n_buckets: int = 32,
-    sort_col: str | None = None,
 ) -> None:
-    """Persist a table bucketed (and optionally sorted) by its join key.
+    """Persist a table bucketed by its join key.
 
     Bucketing pre-shuffles ONCE at write time: two tables bucketed by
     their join key with the same bucket count join with NO Exchange —
@@ -159,7 +157,4 @@ def write_bucketed(
     orderkey). The warehouse is Spark's local metastore here; on a
     cluster this is the same call against the shared catalog.
     """
-    w = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col)
-    if sort_col:
-        w = w.sortBy(sort_col)
-    w.saveAsTable(table)
+    df.write.mode("overwrite").bucketBy(n_buckets, bucket_col).saveAsTable(table)

@@ -23,8 +23,8 @@ __all__ = [
 ]
 
 
-def array_join_lines(col: Column | str, sep: str = "\n") -> Column:
-    """F1 — join a string array with a delimiter, null-safe.
+def array_join_lines(col: Column | str) -> Column:
+    """F1 — join a string array with newlines, null-safe.
 
     Reference: ``'\\n'.join(plugin.pluginattributes.see_also)`` with a
     None passthrough (export.py:136-142). ``array_join`` is null-safe on
@@ -32,7 +32,7 @@ def array_join_lines(col: Column | str, sep: str = "\n") -> Column:
     stay null, matching the reference's None passthrough).
     """
     c = F.col(col) if isinstance(col, str) else col
-    return F.when(c.isNotNull(), F.array_join(c, sep))
+    return F.when(c.isNotNull(), F.array_join(c, "\n"))
 
 
 def explode_port_map(ports: Column | str) -> tuple[Column, Column]:
@@ -66,10 +66,10 @@ def epoch_to_date(col: Column | str) -> Column:
     return F.to_date(epoch_to_timestamp(col))
 
 
-def key_segment(key: Column | str, idx: int, sep: str = "/") -> Column:
+def key_segment(key: Column | str, idx: int) -> Column:
     """F7 — ``key.split('/')[idx]`` (export.py:82-84)."""
     c = F.col(key) if isinstance(key, str) else key
-    return F.split(c, sep).getItem(idx)
+    return F.split(c, "/").getItem(idx)
 
 
 def is_yyyymmdd_segment(seg: Column | str) -> Column:

@@ -57,21 +57,19 @@ def pivot_sum(
     return df.groupBy(*group_by).agg(*aggs)
 
 
-def max_date_watermark(
-    df: DataFrame, date_col: Column | str, default: str = "1970-01-01"
-) -> DataFrame:
+def max_date_watermark(df: DataFrame, date_col: Column | str) -> DataFrame:
     """A2 — ``max(partition dates)`` with the empty→epoch default
     (get_latest_folder, export.py:75-87). One-row result; Spark plans a
     partial-max per partition then a single final max — no full shuffle.
     """
     c = F.col(date_col) if isinstance(date_col, str) else date_col
     return df.agg(
-        F.coalesce(F.max(c), F.to_date(F.lit(default))).alias("watermark")
+        F.coalesce(F.max(c), F.to_date(F.lit("1970-01-01"))).alias("watermark")
     )
 
 
-def exists_flag(df: DataFrame, flag_name: str = "new_scan_runs_exist") -> DataFrame:
+def exists_flag(df: DataFrame) -> DataFrame:
     """A4 — the reference's ``new_scan_runs_exist`` boolean
     (export.py:222,238,240) as a one-row aggregate. Planned as a
     count-limit, not a full scan, when Catalyst can prune."""
-    return df.limit(1).agg((F.count(F.lit(1)) > 0).alias(flag_name))
+    return df.limit(1).agg((F.count(F.lit(1)) > 0).alias("new_scan_runs_exist"))

@@ -26,9 +26,7 @@ from ..pins import pin as _pin
 MERSENNE_31 = (1 << 31) - 1
 
 
-def minhash_affine_coeffs(
-    num_hashes: int, seed: int = 0xC0FFEE
-) -> list[tuple[int, int]]:
+def minhash_affine_coeffs(num_hashes: int) -> list[tuple[int, int]]:
     """Deterministic (a, b) coefficients for the universal-hash MinHash
     family h_s(x) = (a_s·x + b_s) mod (2^31−1) — the standard MinHash
     construction (one base hash per element, n affine transforms).
@@ -36,16 +34,14 @@ def minhash_affine_coeffs(
     literals."""
     import random
 
-    rng = random.Random(0xC0FFEE if seed is None else seed)
+    rng = random.Random(0xC0FFEE)
     return [
         (rng.randrange(1, MERSENNE_31), rng.randrange(0, MERSENNE_31))
         for _ in range(num_hashes)
     ]
 
 
-def exact_dedup(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Exact dedup via hash-groupBy on the normalized text: one
     representative (min id) per group plus the duplicate count.
 
@@ -54,9 +50,9 @@ def exact_dedup(
     instead of dropDuplicates' arbitrary first-row.
     """
     return (
-        df.groupBy(normalize_text(text_col).alias("norm_text"))
+        df.groupBy(normalize_text("text").alias("norm_text"))
         .agg(
-            F.min(id_col).alias("keep_id"),
+            F.min("doc_id").alias("keep_id"),
             F.count(F.lit(1)).alias("dup_count"),
         )
         .select("keep_id", "dup_count")
@@ -90,8 +86,7 @@ def shingles(text: Column | str, k: int = 3) -> Column:
 
 
 def shingle_posting(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    block_cols: tuple[str, ...] = (), k: int = 3,
+    df: DataFrame, block_cols: tuple[str, ...] = (), k: int = 3,
     with_size: bool = False,
 ) -> DataFrame:
     """(doc_id[, blocks], shingle) posting list — the staged explode all
@@ -111,9 +106,9 @@ def shingle_posting(
 
     df = spread_for_compute(df)
     toks = df.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         *[F.col(c) for c in block_cols],
-        tokens(normalize_text(text_col)).alias("toks"),
+        tokens(normalize_text("text")).alias("toks"),
     )
     sh = toks.select(
         "doc_id", *block_cols, shingles_from_tokens(F.col("toks"), k).alias("sh")
@@ -134,8 +129,6 @@ def shingle_posting(
 
 def minhash_signatures(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_hashes: int = 64,
     k: int = 3,
 ) -> DataFrame:
@@ -170,8 +163,8 @@ def minhash_signatures(
     from ..catalog import spread_for_compute
 
     staged = spread_for_compute(df).select(
-        F.col(id_col).alias("doc_id"),
-        tokens(normalize_text(text_col)).alias("toks"),
+        F.col("doc_id"),
+        tokens(normalize_text("text")).alias("toks"),
     )
     sh = staged.select(
         "doc_id", shingles_from_tokens(F.col("toks"), k).alias("sh")
@@ -245,8 +238,6 @@ def _banded_pairs(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
 
 def minhash_lsh_candidates(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_hashes: int = 64,
     bands: int = 16,
     k: int = 3,
@@ -272,7 +263,7 @@ def minhash_lsh_candidates(
     candidate pairs — tiny relative to the corpus. At cluster scale a
     real pipeline lands signatures as a table instead.
     """
-    sig = minhash_signatures(df, text_col, id_col, num_hashes, k).persist()
+    sig = minhash_signatures(df, num_hashes, k).persist()
     # eager: run the candidate job now (signature stage executes once
     # via the cache), then release the cache — no session-lifetime
     # leak across repeated invocations
@@ -281,10 +272,7 @@ def minhash_lsh_candidates(
     return out
 
 
-def simhash64(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    bits: int = 64,
-) -> DataFrame:
+def simhash64(df: DataFrame) -> DataFrame:
     """(doc_id, simhash) — 64-bit SimHash: per bit position, majority
     vote of the token hashes' bits, packed into one long.
 
@@ -309,14 +297,14 @@ def simhash64(
     8-hex-char words are staged as separate projections so each hex
     digit parses once per token, not once per bit. DuckDB
     reproduces the exact same bits via strpos('0123456789abcdef', …),
-    so the full simhash is oracle-checkable (requires bits <= 64).
+    so the full simhash is oracle-checkable.
     """
     from ..catalog import spread_for_compute
 
     df = spread_for_compute(df)
     staged = df.select(
-        F.col(id_col).alias("doc_id"),
-        tokens(normalize_text(text_col)).alias("toks"),
+        F.col("doc_id"),
+        tokens(normalize_text("text")).alias("toks"),
     )
     one = F.lit(1).cast("long")
     zero = F.lit(0).cast("long")
@@ -346,7 +334,7 @@ def simhash64(
         "doc_id",
         *[
             F.transform("hs", _word(i)).alias(f"_w{i}")
-            for i in range((bits + 31) // 32)
+            for i in range(2)
         ],
     )
     # bit j lives in word j div 32 at in-word bit position
@@ -360,11 +348,11 @@ def simhash64(
                 zero,
                 _vote(4 * (7 - (j // 4 - 8 * (j // 32))) + j % 4),
             ).alias(f"_v{j}")
-            for j in range(bits)
+            for j in range(64)
         ],
     )
     packed = F.lit(0).cast("long")
-    for j in range(bits):
+    for j in range(64):
         bit = F.when(F.col(f"_v{j}") >= 0, F.lit(1).cast("long")).otherwise(
             F.lit(0).cast("long")
         )
@@ -392,12 +380,10 @@ def bloom_bit_positions(fp: Column, m: int, k: int) -> list[Column]:
 def bloom_membership(
     corpus: DataFrame,
     probes: DataFrame,
-    fp_col: str = "fp",
-    id_col: str = "doc_id",
     m: int = 1 << 16,
     k: int = 3,
 ) -> DataFrame:
-    """(id_col, fp_col, maybe_member) — Bloom-filter membership of each
+    """(doc_id, fp, maybe_member) — Bloom-filter membership of each
     probe fingerprint against the corpus fingerprints. The filter side
     collapses the ENTIRE corpus to at most m distinct bit rows — a
     relation bounded by a CONSTANT, so it broadcasts regardless of
@@ -408,22 +394,22 @@ def bloom_membership(
     bits = (
         corpus.select(
             F.explode(
-                F.array(*bloom_bit_positions(F.col(fp_col), m, k))
+                F.array(*bloom_bit_positions(F.col("fp"), m, k))
             ).alias("bit")
         )
         .distinct()
         .withColumn("_hit", F.lit(True))
     )
     pbits = probes.select(
-        id_col,
-        fp_col,
+        "doc_id",
+        "fp",
         F.explode(
-            F.array(*bloom_bit_positions(F.col(fp_col), m, k))
+            F.array(*bloom_bit_positions(F.col("fp"), m, k))
         ).alias("bit"),
     )
     return (
         pbits.join(F.broadcast(bits), "bit", "left")
-        .groupBy(id_col, fp_col)
+        .groupBy("doc_id", "fp")
         .agg(
             F.bool_and(F.coalesce("_hit", F.lit(False))).alias("maybe_member")
         )
@@ -434,8 +420,6 @@ def simhash_hamming_pairs(
     sims: DataFrame,
     threshold: int = 3,
     n_blocks: int = 4,
-    id_col: str = "doc_id",
-    hash_col: str = "simhash",
 ) -> DataFrame:
     """(doc_a, doc_b, hamming) — all pairs whose 64-bit SimHashes are
     within ``threshold`` bit flips, via pigeonhole block bucketing: the
@@ -470,14 +454,14 @@ def simhash_hamming_pairs(
             f"{n_blocks} 16-bit blocks exceed the 64-bit hash"
         )
     blk = sims.select(
-        id_col,
-        hash_col,
+        "doc_id",
+        "simhash",
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(b).alias("b"),
-                        F.shiftrightunsigned(F.col(hash_col), 16 * b)
+                        F.shiftrightunsigned(F.col("simhash"), 16 * b)
                         .bitwiseAND(F.lit(0xFFFF).cast("long"))
                         .alias("bv"),
                     )
@@ -485,7 +469,7 @@ def simhash_hamming_pairs(
                 ]
             )
         ).alias("bb"),
-    ).select(id_col, hash_col, F.col("bb.b").alias("b"), F.col("bb.bv").alias("bv"))
+    ).select("doc_id", "simhash", F.col("bb.b").alias("b"), F.col("bb.bv").alias("bv"))
     left, right = blk.alias("l"), blk.alias("r")
     # Verify BEFORE the distinct: the xor+popcount is row-local and
     # cheap, while the candidate fan-out is quadratic in hot-block
@@ -496,18 +480,18 @@ def simhash_hamming_pairs(
     # is functional (one signature per doc), so distinct over
     # (doc_a, doc_b, hamming) equals the old distinct-then-filter.
     ham = F.bit_count(
-        F.col(f"l.{hash_col}").bitwiseXOR(F.col(f"r.{hash_col}"))
+        F.col("l.simhash").bitwiseXOR(F.col("r.simhash"))
     )
     return (
         left.join(
             right,
             (F.col("l.b") == F.col("r.b"))
             & (F.col("l.bv") == F.col("r.bv"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
+            & (F.col("l.doc_id") < F.col("r.doc_id")),
         )
         .select(
-            F.col(f"l.{id_col}").alias("doc_a"),
-            F.col(f"r.{id_col}").alias("doc_b"),
+            F.col("l.doc_id").alias("doc_a"),
+            F.col("r.doc_id").alias("doc_b"),
             ham.cast("long").alias("hamming"),
         )
         .filter(F.col("hamming") <= threshold)
@@ -517,8 +501,6 @@ def simhash_hamming_pairs(
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     block_cols: tuple[str, ...] = (),
     k: int = 3,
     threshold: float = 0.5,
@@ -551,9 +533,7 @@ def ngram_jaccard_pairs(
     the pre-explode array, before any max_df filtering). The group
     keys extend by the two functionally-dependent size columns, which
     changes no group: doc_id → n_sh."""
-    posting = shingle_posting(
-        df, text_col, id_col, block_cols, k, with_size=True
-    )
+    posting = shingle_posting(df, block_cols, k, with_size=True)
     joinable = posting
     if max_df is not None:
         hot = (
@@ -597,13 +577,10 @@ def ngram_jaccard_pairs(
 def cross_corpus_contamination(
     train: DataFrame,
     bench: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
     broadcast_bench: bool = True,
 ) -> DataFrame:
     """Benchmark-contamination check: for every training document, the
-    fraction of its k-word shingles that also appear in a held-out
+    fraction of its 3-word shingles that also appear in a held-out
     benchmark corpus — the standard decontamination pass a training-data
     pipeline runs before a corpus ships (n-gram overlap against eval
     suites).
@@ -620,9 +597,9 @@ def cross_corpus_contamination(
     one split against another) pass ``False``: the semi-join then
     shuffles on the shingle key — fine-grained, no hot keys after the
     per-doc distinct."""
-    t = shingle_posting(train, text_col, id_col, k=k)
+    t = shingle_posting(train)
     b = (
-        shingle_posting(bench, text_col, id_col, k=k)
+        shingle_posting(bench)
         .select("shingle")
         .distinct()
         .withColumn("_hit", F.lit(1))
@@ -644,8 +621,6 @@ def cross_corpus_contamination(
 def verify_pairs_jaccard(
     docs: DataFrame,
     pairs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 3,
     threshold: float = 0.5,
 ) -> DataFrame:
@@ -665,8 +640,8 @@ def verify_pairs_jaccard(
     from ..catalog import spread_for_compute
 
     staged = spread_for_compute(docs).select(
-        F.col(id_col).alias("_vid"),
-        tokens(normalize_text(text_col)).alias("_toks"),
+        F.col("doc_id").alias("_vid"),
+        tokens(normalize_text("text")).alias("_toks"),
     )
     # pinned: both pair-side probes read the shingle-array frame —
     # unpinned, the tokenize+shingle pipeline runs once per side
@@ -688,12 +663,7 @@ def verify_pairs_jaccard(
     )
 
 
-def novel_documents(
-    incoming: DataFrame,
-    existing: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def novel_documents(incoming: DataFrame, existing: DataFrame) -> DataFrame:
     """Incremental-ingest novelty filter: keep only incoming documents
     whose normalized-text fingerprint does not already exist in the
     reference corpus — exact dedup ACROSS corpora as a left-anti join,
@@ -707,7 +677,7 @@ def novel_documents(
     promote the existing side to broadcast when a small reference
     corpus fits (daily increment vs yesterday's delta).
     """
-    fp = F.md5(normalize_text(text_col))
+    fp = F.md5(normalize_text("text"))
     seen = existing.select(fp.alias("_fp")).distinct()
     return (
         incoming.withColumn("_fp", fp)
@@ -799,8 +769,6 @@ def edit_distance_pairs(
 
 def sorted_neighborhood_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     block_cols: tuple[str, ...] = ("lang",),
     k: int = 3,
     window: int = 5,
@@ -828,9 +796,9 @@ def sorted_neighborhood_pairs(
     from ..catalog import spread_for_compute
 
     staged = spread_for_compute(df).select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         *[F.col(c) for c in block_cols],
-        normalize_text(text_col).alias("norm"),
+        normalize_text("text").alias("norm"),
     )
     sh = staged.select(
         "doc_id",
@@ -891,8 +859,6 @@ def sorted_neighborhood_pairs(
 
 def containment_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     block_cols: tuple[str, ...] = (),
     k: int = 3,
     threshold: float = 0.5,
@@ -924,9 +890,7 @@ def containment_pairs(
     chain over a small parquet scan is cheaper than one cache write +
     five cache reads; contrast lm.bigram_novelty, where the cached
     frame feeds cheap consumers and persist wins)."""
-    posting = shingle_posting(
-        df, text_col, id_col, block_cols, k, with_size=True
-    )
+    posting = shingle_posting(df, block_cols, k, with_size=True)
     joinable = posting
     if max_df is not None:
         hot = (
@@ -989,17 +953,11 @@ def containment_pairs(
     ).filter(F.col("containment") >= threshold)
 
 
-def minhash_estimate_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    bands: int = 16,
-    k: int = 3,
-) -> DataFrame:
+def minhash_estimate_pairs(df: DataFrame) -> DataFrame:
     """LSH candidate pairs WITH their MinHash-estimated Jaccard —
     the signature-agreement fraction (matching positions / hashes)
-    whose expectation IS the true Jaccard (the MinHash property).
+    whose expectation IS the true Jaccard (the MinHash property), over
+    64 hashes in 16 bands of 3-word shingles.
     Production pipelines use this estimate to SKIP exact
     verification when the estimate is decisive; q148 pairs it with
     the exact value to expose the estimator's calibration error.
@@ -1010,8 +968,8 @@ def minhash_estimate_pairs(
     released after an eager cut. Agreement is a row-local zip_with
     over two 64-long arrays; the estimate is one exact-integer
     division."""
-    sig = minhash_signatures(df, text_col, id_col, num_hashes, k).persist()
-    cand = _banded_pairs(sig, num_hashes, bands)
+    sig = minhash_signatures(df).persist()
+    cand = _banded_pairs(sig, 64, 16)
     sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("_sa"))
     sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("_sb"))
     est = (
@@ -1031,7 +989,7 @@ def minhash_estimate_pairs(
         )
         .withColumn(
             "est_jaccard",
-            F.col("est_matches").cast("double") / F.lit(float(num_hashes)),
+            F.col("est_matches").cast("double") / F.lit(64.0),
         )
     )
     out = est.transform(_pin)
@@ -1041,8 +999,6 @@ def minhash_estimate_pairs(
 
 def prefix_filter_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     threshold_pct: int = 60,
     k: int | None = 3,
 ) -> DataFrame:
@@ -1079,16 +1035,16 @@ def prefix_filter_pairs(
         # discriminative than unigram sets — a small shared
         # vocabulary makes unigram SETS of unrelated documents
         # nearly identical, which floods any exact joiner
-        toks = shingle_posting(df, text_col, id_col, (), k).select(
+        toks = shingle_posting(df, k=k).select(
             "doc_id", F.col("shingle").alias("term")
         )
     else:
         toks = (
             spread_for_compute(df)
             .select(
-                F.col(id_col).alias("doc_id"),
+                F.col("doc_id"),
                 F.explode_outer(
-                    tokens(normalize_text(text_col))
+                    tokens(normalize_text("text"))
                 ).alias("term"),
             )
             .distinct()
@@ -1199,8 +1155,6 @@ def aligned_duplicate_runs(
     df: DataFrame,
     w: int = 8,
     max_freq: int = 64,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Variable-length longest-duplicate-substring detection — the
     suffix-window form of the ExactSubstr pass (Lee et al.,
@@ -1235,8 +1189,8 @@ def aligned_duplicate_runs(
     window positions)."""
     staged = (
         df.select(
-            F.col(id_col).alias("doc_id"),
-            F.split(text_col, " ").alias("toks"),
+            F.col("doc_id"),
+            F.split("text", " ").alias("toks"),
         )
         .withColumn("n", F.size("toks"))
         .filter(F.col("n") >= w)

@@ -5,14 +5,14 @@ duplicates a pipeline needs components ("this group of documents is one
 cluster; keep the canonical member"). Two algorithms, one contract —
 every vertex labeled with the smallest vertex id in its component:
 
-- ``algorithm="star"`` (default): alternating large-star/small-star
+- star (what ``connected_components`` runs): alternating large-star/small-star
   contraction (Kiveris et al., "Connected Components in MapReduce and
   Beyond"). Each phase is one join (edges ⋈ per-node neighborhood min)
   + one distinct — hash-partitioned on vertex id. Round count is
   O(log diameter): a path of 2^k nodes needs ~k rounds, and the
   star-shaped dup clusters boilerplate-heavy corpora actually produce
   collapse in ~2 rounds REGARDLESS of cluster size.
-- ``algorithm="propagation"``: min-label propagation
+- propagation (``_cc_with_rounds``' other algorithm): min-label propagation
   (label(v) ← min(label(v), neighbors' labels) to fixpoint). One join
   + one groupBy-min per round, but round count equals the component
   DIAMETER — kept for its simplicity and as the differential-test twin.
@@ -53,18 +53,12 @@ DRIVER_FINISH_EDGES = 100_000
 
 
 def connected_components(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    max_iter: int = 20,
-    algorithm: str = "star",
-    driver_finish: int = DRIVER_FINISH_EDGES,
+    edges: DataFrame, src_col: str = "src", dst_col: str = "dst"
 ) -> DataFrame:
     """(id, cluster_id) for every vertex of the undirected edge set;
-    ``cluster_id`` is the minimum vertex id in the component."""
-    labels, _rounds = _cc_with_rounds(
-        edges, src_col, dst_col, max_iter, algorithm, driver_finish
-    )
+    ``cluster_id`` is the minimum vertex id in the component (star
+    contraction, at most 20 rounds)."""
+    labels, _rounds = _cc_with_rounds(edges, src_col, dst_col, 20, "star")
     return labels
 
 
@@ -140,7 +134,7 @@ def _cc_star(
     src_col: str,
     dst_col: str,
     max_iter: int,
-    driver_finish: int = DRIVER_FINISH_EDGES,
+    driver_finish: int,
 ) -> tuple[DataFrame, int]:
     # ONE materialization of the upstream edge pipeline: canonicalize
     # WITH self-loops kept, checkpoint, then derive both the working
@@ -288,12 +282,9 @@ def _cc_propagation(
 
 def pagerank_integer(
     edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
     iterations: int = 3,
     scale: int = 1_000_000,
     damping_pct: int = 85,
-    broadcast_vertices: int = 5_000_000,
     edges_distinct: bool = False,
 ) -> DataFrame:
     """PageRank in EXACT int64 micro-units — (id, rank) after a fixed
@@ -330,8 +321,8 @@ def pagerank_integer(
 
     Scale shape: the degree-annotated edge frame is materialized once
     (``localCheckpoint`` — same lineage hygiene as the CC rounds).
-    Rank state is 16 bytes/vertex, so up to ``broadcast_vertices``
-    vertices (default 5M ≈ 80 MB) the per-iteration edges ⋈ ranks
+    Rank state is 16 bytes/vertex, so up to 5M vertices (≈ 80 MB)
+    the per-iteration edges ⋈ ranks
     join BROADCASTS the rank state and the edge table never crosses a
     shuffle — the explicit hint matters because checkpointed frames
     have unknown stats and neither Catalyst nor AQE will pick the
@@ -342,8 +333,8 @@ def pagerank_integer(
     |E| rows), and an |V|-row left join re-anchors vertices with no
     in-edges."""
     e = edges.select(
-        F.col(src_col).cast("long").alias("src"),
-        F.col(dst_col).cast("long").alias("dst"),
+        F.col("src").cast("long").alias("src"),
+        F.col("dst").cast("long").alias("dst"),
     )
     if not edges_distinct:
         # callers whose edge set is distinct by construction pass
@@ -372,7 +363,7 @@ def pagerank_integer(
     base = scale * (100 - damping_pct) // 100
     # nodes is already materialized (localCheckpoint) — the count is a
     # cheap metadata pass, and it decides the per-iteration join mode.
-    small_state = nodes.count() <= broadcast_vertices
+    small_state = nodes.count() <= 5_000_000
     hint = F.broadcast if small_state else (lambda df: df)
     ranks = nodes.withColumn("rank", F.lit(scale).cast("long"))
     for _ in range(iterations):
@@ -406,9 +397,7 @@ def pagerank_integer(
     return ranks
 
 
-def triangle_counts(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """Per-vertex triangle participation counts — the standard graph
     clustering-coefficient / community-structure primitive next to
     PageRank (centrality) and connected components (clustering).
@@ -436,8 +425,8 @@ def triangle_counts(
     # side. Eager, because the sides build concurrently in one action.
     e = (
         edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
+            F.least(F.col("src"), F.col("dst")).alias("a"),
+            F.greatest(F.col("src"), F.col("dst")).alias("b"),
         )
         .filter(F.col("a") < F.col("b"))
         .distinct()

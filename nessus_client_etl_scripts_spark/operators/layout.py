@@ -99,7 +99,6 @@ def compaction_bins(
     order_cols: tuple[str, ...],
     size_col: str,
     target_bytes: int,
-    bin_col: str = "bin_id",
 ) -> DataFrame:
     """Greedy contiguous compaction planning: walk the file listing in
     ``order_cols`` order accumulating sizes; a file starts a new bin
@@ -114,12 +113,12 @@ def compaction_bins(
     Contiguity in ``order_cols`` is deliberate: compaction must
     preserve the table's clustering, so bins may only merge NEIGHBORING
     files.  Input is one row per file (metadata-sized); output adds
-    ``cum_bytes`` and ``bin_col``."""
+    ``cum_bytes`` and ``bin_id``."""
     from .windows import scalable_cumsum
 
     out = scalable_cumsum(files, order_cols, size_col, out_col="cum_bytes")
     return out.withColumn(
-        bin_col,
+        "bin_id",
         F.floor(
             (F.col("cum_bytes") - F.col(size_col)) / F.lit(target_bytes)
         ).cast("long"),

@@ -48,9 +48,7 @@ def bigrams_from_tokens(toks: Column) -> Column:
     )
 
 
-def doc_bigrams(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def doc_bigrams(df: DataFrame) -> DataFrame:
     """(doc_id, bigram) posting — tokenization and the bigram build are
     staged in separate projections so each runs once per document
     (the q58 expression-staging rule), then exploded. The input is
@@ -58,8 +56,8 @@ def doc_bigrams(
     from ..catalog import spread_for_compute
 
     staged = spread_for_compute(df).select(
-        F.col(id_col).alias("doc_id"),
-        tokens(normalize_text(text_col)).alias("toks"),
+        F.col("doc_id"),
+        tokens(normalize_text("text")).alias("toks"),
     )
     bg = staged.select(
         "doc_id", bigrams_from_tokens(F.col("toks")).alias("bg")
@@ -79,8 +77,6 @@ def bigram_counts(posting: DataFrame) -> DataFrame:
 
 def bigram_novelty(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     rare_max_count: int = 2,
 ) -> DataFrame:
     """Per-document novelty score against the corpus bigram LM: the
@@ -100,7 +96,7 @@ def bigram_novelty(
     upstream is a multi-join). Every output is an exact integer or a
     single division of exact integers.
     """
-    posting = doc_bigrams(df, text_col, id_col)
+    posting = doc_bigrams(df)
     counts = bigram_counts(posting)
     scored = posting.filter(F.col("bigram").isNotNull()).join(
         counts, "bigram"
@@ -124,8 +120,6 @@ def bigram_novelty(
 def pmi_pairs(
     df: DataFrame,
     vocab_size: int = 50,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Pointwise-mutual-information-style co-occurrence lift for every
     pair of the top-``vocab_size`` tokens: lift(a,b) =
@@ -147,8 +141,8 @@ def pmi_pairs(
     per-doc pair generation is an in-row combination explode of an
     array no longer than the vocab — never a posting self-join."""
     staged = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.array_distinct(tokens(normalize_text(text_col))).alias("dtoks"),
+        F.col("doc_id"),
+        F.array_distinct(tokens(normalize_text("text"))).alias("dtoks"),
     )
     presence = staged.select(
         "doc_id", F.explode("dtoks").alias("tok")
@@ -203,15 +197,14 @@ def pmi_pairs(
     )
 
 
-def top_bigram(df: DataFrame, text_col: str = "text",
-               id_col: str = "doc_id") -> str:
+def top_bigram(df: DataFrame) -> str:
     """The corpus's most frequent adjacent token pair (count desc,
     lexical asc tie-break) — the merge-candidate selection of one BPE
     training iteration. One map-side-combined aggregation + a
     TakeOrdered(1); the single winning row is driver state (the
     watermark-collect pattern)."""
     row = (
-        bigram_counts(doc_bigrams(df, text_col, id_col))
+        bigram_counts(doc_bigrams(df))
         .orderBy(F.desc("bg_count"), F.asc("bigram"))
         .limit(1)
         .collect()
@@ -222,9 +215,6 @@ def top_bigram(df: DataFrame, text_col: str = "text",
 def bpe_merge_step(
     df: DataFrame,
     pair: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    marker: str = "~",
 ) -> DataFrame:
     """Apply ONE BPE merge (Sennrich et al. 2016) corpus-wide and
     report the per-document effect — the inner loop of tokenizer
@@ -241,21 +231,21 @@ def bpe_merge_step(
     (the replacement is one char shorter). Pure string algebra —
     row-local, zero shuffle, identical semantics in any engine.
 
-    ``marker`` must not occur in the normalized text (asserted
-    against the pair itself; corpus-wide absence is the caller's
-    contract, trivially true for whitespace-tokenized lowercase
-    corpora and a '~' marker)."""
+    The '~' merge marker must not occur in the normalized text
+    (asserted against the pair itself; corpus-wide absence is the
+    caller's contract, trivially true for whitespace-tokenized
+    lowercase corpora)."""
     a, b = pair.split(" ")
-    assert marker not in pair
+    assert "~" not in pair
     staged = df.select(
-        F.col(id_col).alias("doc_id"),
-        normalize_text(text_col).alias("norm"),
+        F.col("doc_id"),
+        normalize_text("text").alias("norm"),
     )
     s2 = F.concat(
         F.lit(" "), F.regexp_replace(F.col("norm"), " ", "  "), F.lit(" ")
     )
     target = f" {a}  {b} "
-    repl = f" {a}{marker}{b} "
+    repl = f" {a}~{b} "
     exp = staged.select(
         "doc_id",
         F.size(tokens(F.col("norm"))).alias("n_tokens_before"),
@@ -281,9 +271,6 @@ def bpe_merge_step(
 def bpe_train(
     df: DataFrame,
     n_merges: int = 6,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    marker: str = "~",
     return_state: bool = False,
 ):
     """Full BPE vocabulary training (Sennrich et al. 2016): iterate
@@ -303,7 +290,7 @@ def bpe_train(
     rewrites from parquet (O(K²) total work and an O(K)-deep
     expression tree for Catalyst to chew).
 
-    ``marker`` joins merged tokens ("a b" → "a~b") so merged units
+    The '~' marker joins merged tokens ("a b" → "a~b") so merged units
     stay single whitespace-tokens for the next round's bigram count —
     the caller's contract is that it never occurs in the normalized
     corpus (same contract as :func:`bpe_merge_step`)."""
@@ -315,8 +302,8 @@ def bpe_train(
     # are dropped up front and n below counts non-null documents only.
     state = (
         df.select(
-            F.col(id_col).alias("doc_id"),
-            normalize_text(text_col).alias("s"),
+            F.col("doc_id"),
+            normalize_text("text").alias("s"),
         )
         .filter(F.col("s").isNotNull())
         .transform(_pin_lazy)
@@ -359,7 +346,7 @@ def bpe_train(
             F.lit(" "),
         )
         merged = F.replace(
-            s2, F.lit(f" {a}  {b} "), F.lit(f" {a}{marker}{b} ")
+            s2, F.lit(f" {a}  {b} "), F.lit(f" {a}~{b} ")
         )
         state = state.select(
             "doc_id",
@@ -390,9 +377,7 @@ def bpe_train(
     return table
 
 
-def bigram_lm_score(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def bigram_lm_score(df: DataFrame) -> DataFrame:
     """Laplace-smoothed bigram conditional-likelihood score per
     document — the engine-native analogue of the KenLM perplexity
     filter (CCNet/Gopher quality tier): train p(w2|w1) =
@@ -427,8 +412,8 @@ def bigram_lm_score(
     # concurrency (the graph.py `large`-frame rule), and eager keeps
     # normalize+tokenize to exactly ONE corpus pass.
     staged = df.select(
-        F.col(id_col).alias("doc_id"),
-        tokens(normalize_text(text_col)).alias("toks"),
+        F.col("doc_id"),
+        tokens(normalize_text("text")).alias("toks"),
     ).transform(_pin)
     posting = (
         staged.select(
@@ -471,7 +456,7 @@ def bigram_lm_score(
         F.count(F.lit(1)).cast("long").alias("n_bigrams"),
         F.sum("p_micro").cast("long").alias("sum_prob_micro"),
     )
-    base = df.select(F.col(id_col).alias("doc_id"))
+    base = df.select(F.col("doc_id"))
     return (
         base.join(scored, "doc_id", "left")
         .select(
@@ -492,8 +477,6 @@ def dsir_importance(
     target_pred: Column,
     buckets: int = 64,
     salt: str = "dsir-v1",
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Hashed-n-gram importance weighting (DSIR, Xie et al. 2023):
     score every document by how much more likely its tokens are under
@@ -518,9 +501,9 @@ def dsir_importance(
     from .sampling import _u48
 
     staged = df.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         target_pred.alias("is_target"),
-        tokens(normalize_text(text_col)).alias("toks"),
+        tokens(normalize_text("text")).alias("toks"),
     )
     words = staged.select(
         "doc_id", "is_target", F.explode("toks").alias("w")
@@ -593,7 +576,7 @@ def dsir_importance(
     )
 
 
-def merge_chain(norm: Column, merges: list[str], marker: str = "~") -> Column:
+def merge_chain(norm: Column, merges: list[str]) -> Column:
     """The trained merge table applied as ONE nested row-local string
     expression: each rank unrolls to q142's doubled-separator greedy
     replace.  Zero aggregations, zero shuffles — this is the column
@@ -610,7 +593,7 @@ def merge_chain(norm: Column, merges: list[str], marker: str = "~") -> Column:
         enc = F.trim(
             F.replace(
                 F.replace(
-                    s2, F.lit(f" {a}  {b} "), F.lit(f" {a}{marker}{b} ")
+                    s2, F.lit(f" {a}  {b} "), F.lit(f" {a}~{b} ")
                 ),
                 F.lit("  "),
                 F.lit(" "),
@@ -622,26 +605,20 @@ def merge_chain(norm: Column, merges: list[str], marker: str = "~") -> Column:
 def bpe_apply(
     df: DataFrame,
     merges: list[str],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    marker: str = "~",
 ) -> DataFrame:
     """(doc_id, s): every document's post-merge token state — the
     normalized text with all K trained merges applied.  One row-local
     projection; downstream consumers explode ``split(s, ' ')`` for
     token-level work (vocab extraction, byte-fallback accounting)."""
     return df.select(
-        F.col(id_col).alias("doc_id"),
-        merge_chain(normalize_text(text_col), merges, marker=marker).alias("s"),
+        F.col("doc_id"),
+        merge_chain(normalize_text("text"), merges).alias("s"),
     )
 
 
 def bpe_encode(
     df: DataFrame,
     merges: list[str],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    marker: str = "~",
 ) -> DataFrame:
     """Apply a TRAINED merge table (rank-ordered pairs from
     :func:`bpe_train`) to every document — the tokenizer's encode
@@ -654,10 +631,10 @@ def bpe_encode(
     Output per document: raw and encoded whitespace-token counts, the
     tokens saved, and saved_micro = round-half-up(1e6·saved/raw)
     (integer tie rule — the q197 pattern)."""
-    norm = normalize_text(text_col)
-    enc = merge_chain(norm, merges, marker=marker)
+    norm = normalize_text("text")
+    enc = merge_chain(norm, merges)
     staged = df.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         F.size(tokens(norm)).cast("long").alias("n_tokens_raw"),
         F.size(tokens(enc)).cast("long").alias("n_tokens_bpe"),
     )

@@ -152,12 +152,12 @@ def decode_ppm(content: bytes) -> np.ndarray:
     return np.frombuffer(raw, dtype=np.uint8).reshape(h, w, 3)
 
 
-def encode_ppm(arr: np.ndarray, maxval: int = 255) -> bytes:
+def encode_ppm(arr: np.ndarray) -> bytes:
     """Encode an (h, w, 3) uint8 array as binary PPM (P6)."""
     h, w, c = arr.shape
     if c != 3:
         raise ValueError("PPM is 3-channel RGB")
-    header = f"P6\n{w} {h}\n{maxval}\n".encode()
+    header = f"P6\n{w} {h}\n255\n".encode()
     return header + arr.astype(np.uint8).tobytes()
 
 
@@ -557,18 +557,18 @@ _DHASH_SCHEMA = T.StructType(
 )
 
 
-def image_dhash(df: DataFrame, codec: str = "ppm", bands: int = 8) -> DataFrame:
+def image_dhash(df: DataFrame, codec: str = "ppm") -> DataFrame:
     """Difference-hash (dHash) over DECODED pixels — the perceptual
     fingerprint that turns near-duplicate IMAGE detection into a
     groupBy, the multimodal twin of the text-side md5 fingerprint
     (q25) / SimHash (q29) family.
 
     Per image: channel-summed gray (integer addition only — no
-    division, no float), ``bands`` horizontal bands with boundaries
-    ``floor(b·h/bands)`` (exact integer pooling; a band that gets no
+    division, no float), 8 horizontal bands with boundaries
+    ``floor(b·h/8)`` (exact integer pooling; a band that gets no
     rows at small heights sums to 0), then bit(r, c) =
     [band r sum < band r+1 sum], packed row-major into a
-    ``(bands-1)·w``-bit integer (w=8 → 56 bits, sign-safe in int64).
+    ``7·w``-bit integer (w=8 → 56 bits, sign-safe in int64).
     Every step is exact integer arithmetic, so the hash is
     bit-portable across engines and replayable in closed form for a
     synthetic corpus (q179's oracle).
@@ -593,24 +593,23 @@ def image_dhash(df: DataFrame, codec: str = "ppm", bands: int = 8) -> DataFrame:
                 raw = bytes(content)
                 px = decode_ppm(raw).astype(np.int64)
                 h, w, _ = px.shape
-                if (bands - 1) * w > 63:
-                    # Bit positions r·w+c reach (bands-1)·w−1; past 62
+                if 7 * w > 63:
+                    # Bit positions r·w+c reach 7·w−1; past 62
                     # the shift hits the int64 sign bit / silently
                     # overflows in numpy — fail loudly, never hash wrong.
                     raise ValueError(
-                        f"dHash needs (bands-1)*width <= 63 to pack into "
-                        f"int64; got bands={bands}, width={w} — reduce "
-                        "bands or pre-pool columns"
+                        "dHash needs 7 bands × width <= 63 bits to pack "
+                        f"into int64; got width={w} — pre-pool columns"
                     )
                 gray = px.sum(axis=2)
-                g = np.zeros((bands, w), dtype=np.int64)
-                for b in range(bands):
-                    lo, hi = b * h // bands, (b + 1) * h // bands
+                g = np.zeros((8, w), dtype=np.int64)
+                for b in range(8):
+                    lo, hi = b * h // 8, (b + 1) * h // 8
                     if hi > lo:
                         g[b] = gray[lo:hi].sum(axis=0)
                 bits = (g[:-1] < g[1:]).astype(np.int64)
                 weights = 1 << (
-                    np.arange(bands - 1, dtype=np.int64)[:, None] * w
+                    np.arange(7, dtype=np.int64)[:, None] * w
                     + np.arange(w, dtype=np.int64)[None, :]
                 )
                 rows.append(

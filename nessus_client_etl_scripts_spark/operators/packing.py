@@ -34,18 +34,15 @@ from .text import token_count
 def pack_sequences(
     df: DataFrame,
     budget: int,
-    group_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
-    """(group, doc_id, n_tokens, bin_id): greedy sequential packing of
-    each group's documents (ordered by ``id_col``) into bins of at most
+    """(source, doc_id, n_tokens, bin_id): greedy sequential packing of
+    each group's documents (ordered by ``doc_id``) into bins of at most
     ``budget`` whitespace tokens; a document larger than the budget
     occupies a bin alone. ``bin_id`` restarts at 0 per group."""
     base = df.select(
-        F.col(group_col).alias("grp"),
-        F.col(id_col).alias("doc_id"),
-        token_count(F.col(text_col)).cast("long").alias("n_tokens"),
+        F.col("source").alias("grp"),
+        F.col("doc_id"),
+        token_count(F.col("text")).cast("long").alias("n_tokens"),
     )
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -66,24 +63,18 @@ def pack_sequences(
     out = base.groupBy("grp").applyInPandas(
         pack, schema="grp string, doc_id long, n_tokens long, bin_id long"
     )
-    return out.withColumnRenamed("grp", group_col)
+    return out.withColumnRenamed("grp", "source")
 
 
-def pack_sequences_sql(
-    budget: int,
-    table: str = "documents",
-    group_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> str:
+def pack_sequences_sql(budget: int) -> str:
     """DuckDB twin of :func:`pack_sequences`: the greedy recurrence as a
     recursive CTE — one recursion step per document position, carrying
     (bin, fill) exactly as the Pandas loop does."""
     return f"""
 WITH RECURSIVE toks AS (
-  SELECT {group_col} AS grp, {id_col} AS doc_id,
-         len(string_split({text_col}, ' '))::BIGINT AS n_tokens
-  FROM {table}
+  SELECT source AS grp, doc_id,
+         len(string_split(text, ' '))::BIGINT AS n_tokens
+  FROM documents
 ), ord AS (
   SELECT grp, doc_id, n_tokens,
          row_number() OVER (PARTITION BY grp ORDER BY doc_id) AS rn
@@ -100,5 +91,5 @@ WITH RECURSIVE toks AS (
               THEN o.n_tokens ELSE p.fill + o.n_tokens END
   FROM packed p JOIN ord o ON o.grp = p.grp AND o.rn = p.rn + 1
 )
-SELECT grp AS {group_col}, doc_id, n_tokens, bin_id FROM packed
+SELECT grp AS source, doc_id, n_tokens, bin_id FROM packed
 """

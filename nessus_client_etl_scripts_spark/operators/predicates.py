@@ -13,11 +13,11 @@ from pyspark.sql import functions as F
 from ..functions import is_yyyymmdd_segment, key_segment
 
 
-def valid_partition_key(key_col: str, segment_idx: int = 1) -> Column:
+def valid_partition_key(key_col: str) -> Column:
     """P6 — S3 key-shape guard: >1 segment, digits, length 8
     (export.py:84)."""
     return (F.size(F.split(F.col(key_col), "/")) > 1) & is_yyyymmdd_segment(
-        key_segment(key_col, segment_idx)
+        key_segment(key_col, 1)
     )
 
 

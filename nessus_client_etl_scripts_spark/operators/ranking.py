@@ -31,13 +31,9 @@ __all__ = ["bm25_scores", "bm25_topk", "rrf_fuse"]
 def bm25_scores(
     df: DataFrame,
     terms: tuple[str, ...],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
-    """Okapi BM25 scores for a literal keyword set over a document
-    corpus, returned per matching document as an exact
+    """Okapi BM25 (k1 = 1.2, b = 0.75) scores for a literal keyword set
+    over a document corpus, returned per matching document as an exact
     ``score_micro`` BIGINT (round(score · 1e6)).
 
     Shape, built for the 100 TB corpus rather than the 500-doc test
@@ -63,8 +59,8 @@ def bm25_scores(
       term contributes a clean 0).
     """
     staged = spread_for_compute(df).select(
-        F.col(id_col).alias("doc_id"),
-        tokens(normalize_text(text_col)).alias("toks"),
+        F.col("doc_id"),
+        tokens(normalize_text("text")).alias("toks"),
     )
     nt = len(terms)
 
@@ -109,8 +105,8 @@ def bm25_scores(
         # raw RSJ odds-ratio idf — mirrored token-for-token in oracles
         idf = (nd - dft + F.lit(0.5)) / (dft + F.lit(0.5))
         c = idf * (
-            (tfd * F.lit(k1 + 1.0))
-            / (tfd + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * (dld / avgdl)))
+            (tfd * F.lit(2.2))
+            / (tfd + F.lit(1.2) * (F.lit(0.25) + F.lit(0.75) * (dld / avgdl)))
         )
         return F.round(c * F.lit(1e6)).cast("long")
 
@@ -130,8 +126,6 @@ def bm25_topk(
     df: DataFrame,
     terms: tuple[str, ...],
     k: int = 20,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Global BM25 top-k with a dense 1..k rank. The cut happens in
     a TakeOrderedAndProject (per-partition heaps + one k-row merge —
@@ -139,7 +133,7 @@ def bm25_topk(
     k-row result only, so the single-partition ranking funnel is
     bounded by k, not the corpus."""
     top = (
-        bm25_scores(df, terms, text_col, id_col)
+        bm25_scores(df, terms)
         .orderBy(F.desc("score_micro"), F.asc("doc_id"))
         .limit(k)
     )
@@ -147,11 +141,11 @@ def bm25_topk(
     return top.withColumn("rank", F.row_number().over(w).cast("long"))
 
 
-def _rrf_term(rank_col: Column, k_rrf: int) -> Column:
-    """1/(k + rank) with the addition exact-integer and the division
+def _rrf_term(rank_col: Column) -> Column:
+    """1/(60 + rank) with the addition exact-integer and the division
     the single double op — identical IEEE result in any engine."""
     return F.lit(1).cast("double") / (
-        (F.lit(k_rrf) + rank_col).cast("double")
+        (F.lit(60) + rank_col).cast("double")
     )
 
 
@@ -159,12 +153,10 @@ def rrf_fuse(
     ranked_a: DataFrame,
     ranked_b: DataFrame,
     id_col: str = "doc_id",
-    rank_col: str = "rank",
-    k_rrf: int = 60,
     top: int = 20,
 ) -> DataFrame:
     """Reciprocal-rank fusion of two candidate rankings (Cormack et
-    al. 2009): score = 1/(k+rank_a) + 1/(k+rank_b) over the ids both
+    al. 2009): score = 1/(60+rank_a) + 1/(60+rank_b) over the ids both
     retrievers returned.
 
     Candidate-set semantics: both inputs are TOP-N frames (each
@@ -174,18 +166,18 @@ def rrf_fuse(
     on exact integers and their sum has a fixed two-term order, so
     the fused score is bit-identical cross-engine without rounding."""
     a = ranked_a.select(
-        F.col(id_col), F.col(rank_col).alias("rank_a")
+        F.col(id_col), F.col("rank").alias("rank_a")
     )
     b = ranked_b.select(
-        F.col(id_col), F.col(rank_col).alias("rank_b")
+        F.col(id_col), F.col("rank").alias("rank_b")
     )
     fused = a.join(b, id_col).select(
         id_col,
         F.col("rank_a").cast("long").alias("rank_a"),
         F.col("rank_b").cast("long").alias("rank_b"),
         (
-            _rrf_term(F.col("rank_a"), k_rrf)
-            + _rrf_term(F.col("rank_b"), k_rrf)
+            _rrf_term(F.col("rank_a"))
+            + _rrf_term(F.col("rank_b"))
         ).alias("rrf_score"),
     )
     cut = fused.orderBy(F.desc("rrf_score"), F.asc(id_col)).limit(top)

@@ -80,13 +80,10 @@ def split_assign_sql(
 def hash_split(
     df: DataFrame,
     weights: dict[str, float],
-    key_col: str = "doc_id",
-    salt: str = "split-v1",
-    out_col: str = "split",
 ) -> DataFrame:
-    """Append the deterministic split label keyed on ``key_col``."""
+    """Append the deterministic ``split`` label keyed on ``doc_id``."""
     return df.withColumn(
-        out_col, split_assign(F.col(key_col), weights, salt)
+        "split", split_assign(F.col("doc_id"), weights, "split-v1")
     )
 
 
@@ -94,8 +91,6 @@ def group_sample(
     df: DataFrame,
     group_col: str,
     k: int,
-    key_col: str = "doc_id",
-    salt: str = "sample-v1",
 ) -> DataFrame:
     """Deterministic uniform sample of ``k`` rows per group: rank rows
     by salted content hash inside each group and keep the first ``k``.
@@ -103,13 +98,13 @@ def group_sample(
     (the common case — a handful of sources/languages) still spreads
     the ranking across all cores instead of one task per group, and no
     tie-group join runs (the 48-bit salted keys are unique with
-    ``key_col`` as the final tiebreak, so row_number IS the rank —
+    ``doc_id`` as the final tiebreak, so row_number IS the rank —
     positions are all a top-k cut needs)."""
     from .windows import grouped_row_number
 
-    hashed = df.withColumn("_skey", _u48(F.col(key_col), salt))
+    hashed = df.withColumn("_skey", _u48(F.col("doc_id"), "sample-v1"))
     ranked = grouped_row_number(
-        hashed, group_col, ("_skey", key_col), out_col="rank"
+        hashed, group_col, ("_skey", "doc_id"), out_col="rank"
     )
     return ranked.filter(F.col("rank") <= k).drop("_skey")
 
@@ -132,8 +127,6 @@ def mixture_resample(
     df: DataFrame,
     weights: dict[str, float],
     group_col: str = "source",
-    key_col: str = "doc_id",
-    salt: str = "mix-v1",
 ) -> DataFrame:
     """Deterministic fractional up/down-sampling to a target training
     mixture: a row with group weight ``w`` is emitted ``floor(w)`` times
@@ -154,7 +147,7 @@ def mixture_resample(
     training-mix builder.
     """
     return expand_by_weight(
-        df, mixture_weights_case(weights, group_col), key_col, salt
+        df, mixture_weights_case(weights, group_col), "doc_id", "mix-v1"
     )
 
 
@@ -179,19 +172,11 @@ def expand_by_weight(
     )
 
 
-def temperature_mixture(
-    df: DataFrame,
-    alpha_cap: float = 8.0,
-    scale: float = 0.5,
-    group_col: str = "source",
-    weight_col: str = "n_chars",
-    key_col: str = "doc_id",
-    salt: str = "temp-mix-v1",
-) -> DataFrame:
+def temperature_mixture(df: DataFrame) -> DataFrame:
     """Temperature-flattened source mixture (the multilingual-LM
     sampling rule, alpha = 0.5): per-group epochs
-    ``w_g = min(alpha_cap, scale * sqrt(M / m_g))`` where ``m_g`` is
-    the group's total ``weight_col`` mass and ``M`` the corpus total —
+    ``w_g = min(8, 0.5 * sqrt(M / m_g))`` where ``m_g`` is the
+    ``source``'s total ``n_chars`` mass and ``M`` the corpus total —
     rare sources are upsampled toward uniform, dominant ones damped,
     with the fan-out hard-capped. Unlike :func:`mixture_resample`
     (literal per-group weights decided offline), the weights here are
@@ -207,24 +192,24 @@ def temperature_mixture(
     1-row corpus total rides a broadcast nested-loop join; expansion is
     the shared row-local kernel. No collect — the stats never leave
     the cluster."""
-    stats = df.groupBy(group_col).agg(F.sum(weight_col).alias("_gmass"))
-    total = df.agg(F.sum(weight_col).alias("_tmass"))
+    stats = df.groupBy("source").agg(F.sum("n_chars").alias("_gmass"))
+    total = df.agg(F.sum("n_chars").alias("_tmass"))
     w = F.least(
-        F.lit(float(alpha_cap)),
-        F.lit(float(scale))
+        F.lit(8.0),
+        F.lit(0.5)
         * F.sqrt(F.col("_tmass").cast("double") / F.col("_gmass").cast("double")),
     )
-    weighted = df.join(F.broadcast(stats), group_col).crossJoin(
+    weighted = df.join(F.broadcast(stats), "source").crossJoin(
         F.broadcast(total)
     )
-    return expand_by_weight(weighted, w, key_col, salt).drop("_gmass", "_tmass")
+    return expand_by_weight(weighted, w, "doc_id", "temp-mix-v1").drop(
+        "_gmass", "_tmass"
+    )
 
 
 def mixture_resample_sql(
     weights: dict[str, float],
     group_col: str = "source",
-    key_col: str = "doc_id",
-    salt: str = "mix-v1",
 ) -> tuple[str, str]:
     """DuckDB twins of :func:`mixture_resample`'s per-row pieces:
     (n_copies expression, copy_id unnest expression over that count).
@@ -236,7 +221,7 @@ def mixture_resample_sql(
     )
     w = f"(CASE {branches} ELSE 1.0 END)"
     u = (
-        f"('0x' || substring(md5('{salt}' || ({key_col})::VARCHAR), 1, 12))"
+        "('0x' || substring(md5('mix-v1' || (doc_id)::VARCHAR), 1, 12))"
         "::BIGINT"
     )
     n = (
@@ -251,7 +236,6 @@ def weighted_systematic_sample(
     df: DataFrame,
     weight_col: str,
     stride: int,
-    order_cols: tuple[str, ...] = ("doc_id",),
 ) -> DataFrame:
     """Weight-proportional systematic sampling: lay the rows on the
     cumulative-weight axis (in a deterministic total order) and select
@@ -268,7 +252,7 @@ def weighted_systematic_sample(
     sampled multiply — the standard PPS-systematic semantics)."""
     from .windows import scalable_cumsum
 
-    c = scalable_cumsum(df, order_cols, weight_col, out_col="cum_w")
+    c = scalable_cumsum(df, ("doc_id",), weight_col, out_col="cum_w")
     prev = F.col("cum_w") - F.col(weight_col)
     n_hits = (
         F.floor(F.col("cum_w") / F.lit(stride))
@@ -285,12 +269,10 @@ def stratified_exact_split(
     frac: float,
     key_col: str = "doc_id",
     salt: str = "strata-v1",
-    out_col: str = "split",
-    eval_name: str = "eval",
-    train_name: str = "train",
 ) -> DataFrame:
     """Exact-count stratified holdout: within every stratum, the first
-    ``ceil(frac·n)`` rows by salted content hash go to ``eval_name``.
+    ``ceil(frac·n)`` rows by salted content hash get ``split = eval``,
+    the rest ``split = train``.
 
     :func:`hash_split` is per-row Bernoulli-by-hash — unbiased but with
     binomial jitter per stratum, so a small stratum can land a split
@@ -314,11 +296,11 @@ def stratified_exact_split(
         "_n", F.count(F.lit(1)).over(wn)
     )
     return marked.withColumn(
-        out_col,
+        "split",
         F.when(
             F.col("_rn") <= F.ceil(F.col("_n") * F.lit(frac)),
-            F.lit(eval_name),
-        ).otherwise(F.lit(train_name)),
+            F.lit("eval"),
+        ).otherwise(F.lit("train")),
     ).drop("_skey", "_rn", "_n")
 
 
@@ -326,12 +308,10 @@ def negative_samples(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "doc_id",
-    salt: str = "neg-v1",
 ) -> DataFrame:
     """Deterministic uniform negative sampling for contrastive
     training: for each query id, the k corpus ids with the smallest
-    salted md5 of (salt, query_id, corpus_id) — a fresh pseudo-random
+    md5 of ("neg-v1", query_id, corpus_id) — a fresh pseudo-random
     permutation of the corpus PER QUERY, reproducible across runs,
     engines, and repartitioning (the hash_split determinism contract
     applied to pairs).
@@ -343,8 +323,8 @@ def negative_samples(
     of uniform sampling without replacement, bounded below any join
     alternative. Self-pairs are excluded (a query is never its own
     negative)."""
-    c = corpus.select(F.col(id_col).alias("neg_id"))
-    q = queries.select(F.col(id_col).alias("query_id"))
+    c = corpus.select(F.col("doc_id").alias("neg_id"))
+    q = queries.select(F.col("doc_id").alias("query_id"))
     pairs = c.crossJoin(F.broadcast(q)).filter(
         F.col("neg_id") != F.col("query_id")
     )
@@ -353,7 +333,7 @@ def negative_samples(
             F.md5(
                 F.concat_ws(
                     ":",
-                    F.lit(salt),
+                    F.lit("neg-v1"),
                     F.col("query_id").cast("string"),
                     F.col("neg_id").cast("string"),
                 )

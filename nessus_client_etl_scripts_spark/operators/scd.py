@@ -30,12 +30,11 @@ def snapshot_diff(
     new: DataFrame,
     key_cols: Sequence[str],
     compare_cols: Sequence[str],
-    change_col: str = "change_type",
 ) -> DataFrame:
     """Classify every key across two snapshots of the same entity.
 
     Output columns: ``key_cols``, then ``old_<c>`` / ``new_<c>`` for
-    each compare column, then ``change_col``. ``changed`` uses
+    each compare column, then ``change_type``. ``changed`` uses
     null-safe equality (``<=>``) per compare column, so a value
     flipping to/from NULL counts as a change — the semantics an SCD
     Type-2 loader needs to decide row expiry."""
@@ -64,7 +63,7 @@ def snapshot_diff(
         *key_cols,
         *[f"old_{c}" for c in compare_cols],
         *[f"new_{c}" for c in compare_cols],
-        change.alias(change_col),
+        change.alias("change_type"),
     )
 
 
@@ -74,7 +73,6 @@ def merge_upsert(
     key_cols: Sequence[str],
     set_cols: Sequence[str],
     delete_col: str | None = None,
-    check_unique: bool = True,
 ) -> DataFrame:
     """MERGE INTO semantics on plain DataFrames (no Delta/Iceberg
     required): rows matched by key take the update's ``set_cols``
@@ -85,15 +83,12 @@ def merge_upsert(
 
     ``updates`` must be UNIQUE on ``key_cols`` — SQL MERGE raises when
     multiple source rows match one target row, and so does this
-    operator: ``check_unique=True`` (default) plants an in-plan
-    ``raise_error`` behind a per-key count window on the updates side,
-    so a duplicate key fails the job AT EXECUTION, distributed, with
-    the offending key in the message — not a silent full-outer-join
-    fan-out that duplicates target rows. The window shuffles only the
-    (dimension-sized) updates frame on the same key the join shuffles
-    on. Pass ``check_unique=False`` only when uniqueness is already
-    guaranteed upstream (e.g. the updates frame is itself a groupBy
-    on the keys).
+    operator: it plants an in-plan ``raise_error`` behind a per-key
+    count window on the updates side, so a duplicate key fails the job
+    AT EXECUTION, distributed, with the offending key in the message —
+    not a silent full-outer-join fan-out that duplicates target rows.
+    The window shuffles only the (dimension-sized) updates frame on
+    the same key the join shuffles on.
 
     One full-outer join hash-partitioned on the keys + row-local
     coalesce resolution — the standard shuffle-once upsert. In a
@@ -101,31 +96,30 @@ def merge_upsert(
     partitions (write_partitioned's dynamic overwrite); the resolve
     logic here is exactly what MERGE INTO compiles to.
     """
-    if check_unique:
-        from pyspark.sql import Window
+    from pyspark.sql import Window
 
-        wk = Window.partitionBy(*[F.col(k) for k in key_cols])
-        updates = (
-            updates.withColumn("_kcnt", F.count(F.lit(1)).over(wk))
-            .filter(
-                F.when(
-                    F.col("_kcnt") > 1,
-                    F.raise_error(
-                        F.concat(
-                            F.lit(
-                                "merge_upsert: multiple update rows match "
-                                "key ("
-                            ),
-                            F.concat_ws(
-                                ",", *[F.col(k).cast("string") for k in key_cols]
-                            ),
-                            F.lit(") — MERGE requires a unique source"),
-                        )
-                    ).cast("boolean"),
-                ).otherwise(F.lit(True))
-            )
-            .drop("_kcnt")
+    wk = Window.partitionBy(*[F.col(k) for k in key_cols])
+    updates = (
+        updates.withColumn("_kcnt", F.count(F.lit(1)).over(wk))
+        .filter(
+            F.when(
+                F.col("_kcnt") > 1,
+                F.raise_error(
+                    F.concat(
+                        F.lit(
+                            "merge_upsert: multiple update rows match "
+                            "key ("
+                        ),
+                        F.concat_ws(
+                            ",", *[F.col(k).cast("string") for k in key_cols]
+                        ),
+                        F.lit(") — MERGE requires a unique source"),
+                    )
+                ).cast("boolean"),
+            ).otherwise(F.lit(True))
         )
+        .drop("_kcnt")
+    )
     t = target.select(
         *[F.col(k) for k in key_cols],
         *[

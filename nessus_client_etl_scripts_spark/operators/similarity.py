@@ -97,8 +97,6 @@ def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     metric: str = "cosine",
 ) -> DataFrame:
     """Exact top-k: broadcast the query set against the corpus and rank
@@ -123,10 +121,10 @@ def brute_force_topk(
     from ..catalog import spread_for_compute
 
     q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
+        F.col("vec_id").alias("query_id"), _as_double("embedding").alias("qv")
     )
     c = spread_for_compute(corpus).select(
-        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cv")
+        F.col("vec_id").alias("neighbor_id"), _as_double("embedding").alias("cv")
     )
     if metric == "cosine":
         q = q.withColumn("_qn", l2_norm(F.col("qv")))
@@ -245,8 +243,6 @@ def lsh_topk(
     queries: DataFrame,
     k: int = 5,
     bits: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     probes: int = 0,
 ) -> DataFrame:
     """Approximate top-k: equi-join on the hyperplane bucket, exact
@@ -264,7 +260,7 @@ def lsh_topk(
     # per-row norms computed once before the bucket join (not per
     # candidate pair) — see brute_force_topk; values bit-identical
     q_staged = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
+        F.col("vec_id").alias("query_id"), _as_double("embedding").alias("qv")
     ).withColumn("_qn", l2_norm(F.col("qv")))
     if probes > 0:
         q = (
@@ -293,7 +289,7 @@ def lsh_topk(
             hyperplane_sketch(F.col("qv"), bits).alias("bucket"),
         )
     c = spread_for_compute(corpus).select(
-        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cv")
+        F.col("vec_id").alias("neighbor_id"), _as_double("embedding").alias("cv")
     ).select(
         "neighbor_id",
         "cv",
@@ -362,8 +358,6 @@ def _kmeans_py(
     corpus: DataFrame,
     n_centroids: int = 16,
     iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> list[list[float]]:
     """Deterministic Lloyd iterations → driver-side centroid list.
 
@@ -389,7 +383,7 @@ def _kmeans_py(
     # (measured on q39: spread here + at the assignment scan took the
     # query 2.7 s → 7.7 s at sf0.1)
     v = corpus.select(
-        F.col(id_col).alias("_vid"), _as_double(vec_col).alias("v")
+        F.col("vec_id").alias("_vid"), _as_double("embedding").alias("v")
     ).persist()  # scanned iters+1 times; same caching spark.ml KMeans does
     init = (
         v.withColumn("_h", F.xxhash64("_vid"))
@@ -432,8 +426,6 @@ def ivf_topk(
     n_centroids: int = 16,
     nprobe: int = 4,
     iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF approximate top-k: corpus vectors are bucketed under their
     nearest coarse centroid (the inverted file); each query probes its
@@ -442,17 +434,17 @@ def ivf_topk(
     (the recall/test anchor); small nprobe prunes the candidate space
     to ~nprobe/n_centroids of the corpus.
     """
-    cents = _kmeans_py(corpus, n_centroids, iters, id_col, vec_col)
+    cents = _kmeans_py(corpus, n_centroids, iters)
     # deliberately NOT spread: the Arrow-batched matmul assignment is
     # memory-bandwidth-bound, so a full-row repartition of the corpus
     # costs more than the extra parallelism returns (measured +60% on
     # q39); the kmeans path spreads because its shuffle amortizes over
     # the persisted iterations
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cv")
+        F.col("vec_id").alias("neighbor_id"), _as_double("embedding").alias("cv")
     ).withColumn("_cn", l2_norm(F.col("cv")))
     q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
+        F.col("vec_id").alias("query_id"), _as_double("embedding").alias("qv")
     ).withColumn("_qn", l2_norm(F.col("qv")))
     c_assign = c.select(
         "neighbor_id",
@@ -495,8 +487,6 @@ def codebook_ivf_topk(
     centroids: list[list[float]],
     k: int = 5,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     assignment: str = "arrow",
 ) -> DataFrame:
     """IVF top-k against a FIXED codebook: the search half of the IVF
@@ -531,10 +521,10 @@ def codebook_ivf_topk(
     corpus.
     """
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cv")
+        F.col("vec_id").alias("neighbor_id"), _as_double("embedding").alias("cv")
     ).withColumn("_cn", l2_norm(F.col("cv")))
     q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
+        F.col("vec_id").alias("query_id"), _as_double("embedding").alias("qv")
     ).withColumn("_qn", l2_norm(F.col("qv")))
     if assignment == "arrow":
         c_assign = c.select(
@@ -643,9 +633,6 @@ def kmeans_exact_quantized(
     corpus: DataFrame,
     n_centroids: int = 16,
     iters: int = 3,
-    scale: float = 4096.0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> list[list[float]]:
     """Deterministic, ENGINE-EXACT Lloyd k-means over integer-quantized
     vectors: every arithmetic step is reproducible bit-for-bit in plain
@@ -654,7 +641,7 @@ def kmeans_exact_quantized(
 
     Exactness design (cross-engine float rules, PLANS.md):
 
-    - quantize up front: ``vq = floor(v·scale)`` per component — all
+    - quantize up front: ``vq = floor(v·4096)`` per component — all
       centroid-update sums become exact long arithmetic (training on
       quantized vectors is standard IVF practice anyway; serving still
       scores exact cosine on the original doubles).
@@ -682,9 +669,9 @@ def kmeans_exact_quantized(
     """
     v = (
         corpus.select(
-            F.col(id_col).alias("_vid"), _as_double(vec_col).alias("_v")
+            F.col("vec_id").alias("_vid"), _as_double("embedding").alias("_v")
         )
-        .select("_vid", _quantize_long(F.col("_v"), scale).alias("vq"))
+        .select("_vid", _quantize_long(F.col("_v"), 4096.0).alias("vq"))
         .withColumn("vqd", _as_double(F.col("vq")))
         .persist()  # scanned iters+1 times
     )
@@ -739,9 +726,6 @@ def ivf_exact_topk(
     centroids: list[list[float]],
     k: int = 5,
     nprobe: int = 4,
-    scale: float = 4096.0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF serve stage paired with :func:`kmeans_exact_quantized`:
     cells assigned on the QUANTIZED vectors (the space the codebook was
@@ -753,10 +737,10 @@ def ivf_exact_topk(
     — the corpus never shuffles for assignment."""
     c = (
         corpus.select(
-            F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cv")
+            F.col("vec_id").alias("neighbor_id"), _as_double("embedding").alias("cv")
         )
         .withColumn("_cn", l2_norm(F.col("cv")))
-        .withColumn("vqd", _as_double(_quantize_long(F.col("cv"), scale)))
+        .withColumn("vqd", _as_double(_quantize_long(F.col("cv"), 4096.0)))
         .select(
             "neighbor_id",
             "cv",
@@ -766,10 +750,10 @@ def ivf_exact_topk(
     )
     q = (
         queries.select(
-            F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
+            F.col("vec_id").alias("query_id"), _as_double("embedding").alias("qv")
         )
         .withColumn("_qn", l2_norm(F.col("qv")))
-        .withColumn("vqd", _as_double(_quantize_long(F.col("qv"), scale)))
+        .withColumn("vqd", _as_double(_quantize_long(F.col("qv"), 4096.0)))
         .select(
             "query_id",
             "qv",
@@ -834,8 +818,6 @@ def semantic_dedup(
     vecs: DataFrame,
     centroids: list[list[float]],
     threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023 shape):
     assign every vector to its nearest codebook cell, then inside each
@@ -861,7 +843,7 @@ def semantic_dedup(
     # call, the matmul runs once.
     assigned = (
         vecs.select(
-            F.col(id_col).alias("vec_id"), _as_double(vec_col).alias("v")
+            F.col("vec_id"), _as_double("embedding").alias("v")
         )
         .withColumn("_n", l2_norm(F.col("v")))
         .withColumn(
@@ -919,12 +901,7 @@ def semantic_dedup(
     assigned.unpersist()
     return out
 
-def embedding_standardize_checksum(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    micro: int = 1_000_000,
-) -> DataFrame:
+def embedding_standardize_checksum(df: DataFrame) -> DataFrame:
     """Per-dimension z-score standardization (the feature-scaling pass
     before clustering / ANN indexing), emitted as per-vector integer
     checksums so the fit+transform verifies value-exactly cross-engine.
@@ -944,14 +921,13 @@ def embedding_standardize_checksum(
     bounded ×d); the stats frame aggregates to d rows (map-side
     partial) and BROADCASTS back into the transform — the corpus side
     never shuffles for the join; the final per-vector reduce is one
-    hash agg keyed on ``id_col``. The 2^53 exactness ceiling on
-    CAST(Σx AS DOUBLE) allows ~1.8e9 rows per dim at |x|≤5; beyond
-    that, lower ``micro``.
+    hash agg keyed on ``vec_id``. The 2^53 exactness ceiling on
+    CAST(Σx AS DOUBLE) allows ~1.8e9 rows per dim at |x|≤5.
     """
     exploded = df.select(
-        F.col(id_col).alias("vec_id"),
-        F.posexplode(_as_double(vec_col)).alias("dim", "x"),
-    ).withColumn("e_int", F.round(F.col("x") * micro).cast("long"))
+        F.col("vec_id"),
+        F.posexplode(_as_double("embedding")).alias("dim", "x"),
+    ).withColumn("e_int", F.round(F.col("x") * 1_000_000).cast("long"))
     stats = (
         exploded.groupBy("dim")
         .agg(
@@ -966,7 +942,7 @@ def embedding_standardize_checksum(
             "n",
             (
                 F.col("s1").cast("double")
-                / (F.col("n").cast("double") * F.lit(float(micro)))
+                / (F.col("n").cast("double") * F.lit(1e6))
             ).alias("mean"),
             F.sqrt(
                 (
@@ -977,7 +953,7 @@ def embedding_standardize_checksum(
                 / (
                     F.col("n").cast("double")
                     * F.col("n").cast("double")
-                    * F.lit(float(micro) * float(micro))
+                    * F.lit(1e12)
                 )
             ).alias("std"),
         )
@@ -1068,12 +1044,12 @@ def _pq_adc_top_k(pairs: DataFrame, m: int, k: int) -> DataFrame:
 
 
 def pq_codebooks(
-    m: int = 4, subdim: int = 16, k: int = 8, seed: int = 0x9900
+    m: int = 4, subdim: int = 16, k: int = 8
 ) -> list[list[list[float]]]:
     """Deterministic per-subspace PQ codebooks (the q79 posture:
     codebooks are rarely-retrained ARTIFACTS; a production system
     trains them with the q39 quantized-Lloyd trainer per subspace)."""
-    return [_hyperplanes(k, subdim, seed=seed + s) for s in range(m)]
+    return [_hyperplanes(k, subdim, seed=0x9900 + s) for s in range(m)]
 
 
 def pq_adc_topk(
@@ -1081,8 +1057,6 @@ def pq_adc_topk(
     queries: DataFrame,
     codebooks: list[list[list[float]]],
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Product-quantization ANN with asymmetric distance computation
     (Jégou et al. 2011) — the COMPRESSED-DOMAIN scan tier of the ANN
@@ -1116,7 +1090,7 @@ def pq_adc_topk(
 
     def slices(frame: DataFrame, out_id: str) -> DataFrame:
         staged = frame.select(
-            F.col(id_col).alias(out_id), _as_double(vec_col).alias("_v")
+            F.col("vec_id").alias(out_id), _as_double("embedding").alias("_v")
         )
         return staged.select(out_id, *_pq_sub_cols(m, subdim))
 
@@ -1139,8 +1113,6 @@ def ivfpq_topk(
     codebooks: list[list[list[float]]],
     k: int = 5,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-PQ — the composed production ANN index (Jégou et al. 2011;
     the FAISS `IVFx,PQy` shape): the coarse IVF codebook bounds the
@@ -1158,7 +1130,7 @@ def ivfpq_topk(
 
     c = (
         corpus.select(
-            F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("_v")
+            F.col("vec_id").alias("neighbor_id"), _as_double("embedding").alias("_v")
         )
         .select(
             "neighbor_id",
@@ -1169,7 +1141,7 @@ def ivfpq_topk(
     )
     q = (
         queries.select(
-            F.col(id_col).alias("query_id"), _as_double(vec_col).alias("_v")
+            F.col("vec_id").alias("query_id"), _as_double("embedding").alias("_v")
         )
         .select(
             "query_id",
@@ -1193,8 +1165,6 @@ def kcenter_greedy(
     df: DataFrame,
     k: int,
     scale: float = 4096.0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Greedy k-center (Gonzalez 1985) coreset selection — the
     diversity-sampling verb of data curation: pick the point farthest
@@ -1227,7 +1197,7 @@ def kcenter_greedy(
     literal centers. Never a pairwise matrix.
     """
     q = F.transform(
-        _as_double(vec_col), lambda x: F.floor(x * F.lit(scale)).cast("long")
+        _as_double("embedding"), lambda x: F.floor(x * F.lit(scale)).cast("long")
     )
     sn_fold = F.aggregate(
         F.zip_with(F.col("vq"), F.col("vq"), lambda x, y: x * y),
@@ -1235,7 +1205,7 @@ def kcenter_greedy(
         lambda acc, v: acc + v,
     )
     eq = (
-        df.select(F.col(id_col).alias("vec_id"), q.alias("vq"))
+        df.select(F.col("vec_id"), q.alias("vq"))
         .withColumn("_sn", sn_fold)
         # quantization + self-norm run once; lazy — the seed argmin
         # (TakeOrderedAndProject, full scan) materializes it

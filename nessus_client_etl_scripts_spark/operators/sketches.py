@@ -151,9 +151,7 @@ def hll_estimate_from_registers(
     )
 
 
-def hll_distinct_sql(
-    table: str, group_col: str, value_col: str, out_col: str = "approx_distinct"
-) -> str:
+def hll_distinct_sql(table: str, group_col: str, value_col: str) -> str:
     """DuckDB twin of :func:`hll_distinct` — the SAME hash, CASE chain,
     integer register sum, and single-division estimate, so the emitted
     double matches Spark's bit for bit."""
@@ -190,7 +188,7 @@ WITH h AS (
 SELECT {group_col}, n_rows,
        {EST_NUMERATOR!r}
          / (coalesce(s, 0) + ({M} - nb) * {1 << RMAX}::BIGINT)::DOUBLE
-         AS {out_col}
+         AS approx_distinct
 FROM agg
 """
 
@@ -221,11 +219,10 @@ def count_min_estimates(
     queries: DataFrame,
     depth: int = 4,
     width: int = 1 << 12,
-    out_col: str = "cm_estimate",
 ) -> DataFrame:
     """Count-min frequency estimates (Cormode & Muthukrishnan 2005):
     ``items`` is one row per occurrence; returns one row per ``queries``
-    row with ``out_col`` = min over the sketch's ``depth`` rows of the
+    row with ``cm_estimate`` = min over the sketch's ``depth`` rows of the
     hashed cell's count — an upper bound on the true frequency
     (overcount only, never under).
 
@@ -283,7 +280,7 @@ def count_min_estimates(
     return (
         qcells.join(F.broadcast(cells), ["j", "cell"], "left")
         .groupBy(item_col)
-        .agg(F.min(F.coalesce("cnt", F.lit(0))).alias(out_col))
+        .agg(F.min(F.coalesce("cnt", F.lit(0))).alias("cm_estimate"))
     )
 
 
@@ -360,7 +357,6 @@ def hll_rolling_distinct(
     ts_col: str,
     value_col: str,
     window_days: int = 7,
-    out_col: str = "approx_distinct",
 ) -> DataFrame:
     """Trailing-window approximate distinct count per day — "distinct
     users in the last N days, every day" — via HLL register algebra:
@@ -408,10 +404,10 @@ def hll_rolling_distinct(
         (F.col("day") >= F.col("_lo")) & (F.col("day") <= F.col("_hi"))
     )
     merged = cropped.groupBy("day", "_b").agg(F.max("_m").alias("_m"))
-    est = hll_estimate_from_registers(merged, ["day"], out_col)
+    est = hll_estimate_from_registers(merged, ["day"], "approx_distinct")
     return est.select(
         (F.col("day") * 86400).cast("long").alias("day_epoch"),
-        out_col,
+        "approx_distinct",
     )
 
 
@@ -420,8 +416,6 @@ def cm_join_size_estimate(
     a_col: str,
     b: DataFrame,
     b_col: str,
-    depth: int = 4,
-    width: int = 256,
 ) -> DataFrame:
     """Equi-join CARDINALITY estimation from count-min sketches of the
     two join keys (Cormode & Muthukrishnan 2005 §4.2: the sketch
@@ -430,7 +424,7 @@ def cm_join_size_estimate(
     statistic that prices a join WITHOUT running it, from sketches
     each side maintains independently.
 
-    Scale shape: each input is scanned once into a ≤ depth×width
+    Scale shape: each input is scanned once into a ≤ 4×256
     cell aggregate (map-side combined — the sketch size is a
     CONSTANT); the inner product is a join of two sketch-sized
     frames on (j, cell); everything downstream is a handful of rows.
@@ -447,7 +441,7 @@ def cm_join_size_estimate(
     # both reduce over the same key space, so each input is scanned
     # ONCE into a per-key count frame (pinned — it feeds the cell
     # aggregate and the exact join as concurrent stages) and the
-    # ≤depth×width cell table derives from it: cnt(j, cell) is the sum
+    # ≤4×256 cell table derives from it: cnt(j, cell) is the sum
     # of per-key counts over keys hashing to the cell — identical by
     # associativity to counting raw rows. NULL keys group to a NULL
     # cell either way and are dropped by both inner joins.
@@ -467,9 +461,9 @@ def cm_join_size_estimate(
                         *[
                             F.struct(
                                 F.lit(j).alias("j"),
-                                _cm_hash(j, F.col("k"), width).alias("cell"),
+                                _cm_hash(j, F.col("k"), 256).alias("cell"),
                             )
-                            for j in range(depth)
+                            for j in range(4)
                         ]
                     )
                 ).alias("jc"),

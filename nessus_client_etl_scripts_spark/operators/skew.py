@@ -46,7 +46,6 @@ def salted_join(
     dim: DataFrame,
     on: list[str] | str,
     salt: int = 8,
-    how: str = "inner",
     salt_by: str | None = None,
 ) -> DataFrame:
     """Equi-join with the key space widened by a salt: each hot key's
@@ -64,7 +63,7 @@ def salted_join(
     keys = [on] if isinstance(on, str) else list(on)
     f = with_salt(facts, salt, deterministic_col=salt_by)
     d = replicate_for_salt(dim, salt)
-    return f.join(d, keys + [SALT_COL], how).drop(SALT_COL)
+    return f.join(d, keys + [SALT_COL], "inner").drop(SALT_COL)
 
 
 def salted_aggregate(
@@ -72,7 +71,6 @@ def salted_aggregate(
     group_cols: list[str],
     sum_cols: dict[str, str],
     salt: int = 8,
-    count_alias: str = "n",
     deterministic_col: str | None = None,
 ) -> DataFrame:
     """Two-phase aggregation for HOT group keys: pre-aggregate on
@@ -99,5 +97,5 @@ def salted_aggregate(
     partial = salted.groupBy(*group_cols, "_salt").agg(*partial_aggs)
     final_aggs = [
         F.sum(f"_ps_{out}").alias(out) for out in sum_cols
-    ] + [F.sum("_pn").alias(count_alias)]
+    ] + [F.sum("_pn").alias("n")]
     return partial.groupBy(*group_cols).agg(*final_aggs)

@@ -47,7 +47,6 @@ def as_of_join(
     right_ts: str,
     right_cols: Sequence[str],
     right_tiebreaker: str | None = None,
-    prefix: str = "asof_",
     direction: str = "backward",
 ) -> DataFrame:
     """As-of join via the union-and-carry trick.
@@ -68,8 +67,8 @@ def as_of_join(
     (both are "the row nearest the left timestamp from its side"),
     making the result deterministic.
 
-    Returns the left rows plus ``{prefix}{col}`` for each requested
-    right column and ``{prefix}ts`` (the matched right timestamp).
+    Returns the left rows plus ``asof_{col}`` for each requested
+    right column and ``asof_ts`` (the matched right timestamp).
 
     One shuffle on ``on`` + one sort — the same physical shape as a
     ranking window (W1), so it scales identically: AQE sizes the
@@ -98,7 +97,7 @@ def as_of_join(
         F.col(right_ts).alias(left_ts),
         F.lit(rside).alias(_SIDE),
         seq.alias(_SEQ),
-        *[F.col(c).alias(f"{prefix}{c}") for c in carried],
+        *[F.col(c).alias(f"asof_{c}") for c in carried],
     )
 
     combined = lhs.unionByName(rhs, allowMissingColumns=True)
@@ -126,7 +125,7 @@ def as_of_join(
         F.col(_SIDE) == rside,
         F.struct(
             F.col(left_ts).alias("__ts__"),
-            *[F.col(f"{prefix}{c}").alias(c) for c in carried],
+            *[F.col(f"asof_{c}").alias(c) for c in carried],
         ),
     )
     match = (
@@ -135,8 +134,8 @@ def as_of_join(
         else F.last(row_struct, ignorenulls=True)
     ).over(w)
 
-    unpack = {f"{prefix}{c}": F.col(f"__asof_match__.{c}") for c in carried}
-    unpack[f"{prefix}ts"] = F.col("__asof_match__.__ts__")
+    unpack = {f"asof_{c}": F.col(f"__asof_match__.{c}") for c in carried}
+    unpack["asof_ts"] = F.col("__asof_match__.__ts__")
     return (
         combined.withColumn("__asof_match__", match)
         .filter(F.col(_SIDE) == 1)
@@ -194,7 +193,6 @@ def interval_bucket_overlap(
     start_col: str,
     end_col: str,
     bucket_sec: int = 3600,
-    bucket_name: str = "bucket_start",
 ) -> DataFrame:
     """Expand closed intervals into the fixed-width time buckets they
     overlap — the scale-safe half of an interval-overlap join.
@@ -208,7 +206,7 @@ def interval_bucket_overlap(
     plain equi-join on the bucket key: one hash shuffle, AQE-skewable.
     Same bucketing idea as :func:`band_join`, applied to durations.
 
-    Output: the input columns plus ``bucket_name`` (timestamp of the
+    Output: the input columns plus ``bucket_start`` (timestamp of the
     bucket's inclusive start). Degenerate/reversed intervals (end <
     start) produce no buckets via the sequence guard.
     """
@@ -221,8 +219,8 @@ def interval_bucket_overlap(
     ).otherwise(F.array().cast("array<bigint>"))
     # generators can't nest inside expressions — explode first, cast in
     # a follow-up projection
-    return intervals.withColumn(bucket_name, F.explode(buckets)).withColumn(
-        bucket_name, F.col(bucket_name).cast("timestamp")
+    return intervals.withColumn("bucket_start", F.explode(buckets)).withColumn(
+        "bucket_start", F.col("bucket_start").cast("timestamp")
     )
 
 
@@ -410,8 +408,6 @@ def position_attribution(
     user_col: str,
     ts_col: str,
     id_col: str,
-    lookback_sec: int = 7 * 86400,
-    type_col: str = "event_type",
 ) -> DataFrame:
     """Multi-touch position-based attribution: every conversion
     credits ALL its preceding touches within the lookback window
@@ -430,7 +426,7 @@ def position_attribution(
         F.col(user_col).alias("_u"),
         F.col(ts_col).alias("_tts"),
         F.col(id_col).alias("_tid"),
-        F.col(type_col).alias("touch_type"),
+        F.col("event_type").alias("touch_type"),
     )
     c = conversions.select(
         F.col(user_col).alias("_u"),
@@ -441,7 +437,7 @@ def position_attribution(
         (F.col("_tts").cast("long") < F.col("_cts").cast("long"))
         & (
             F.col("_cts").cast("long") - F.col("_tts").cast("long")
-            <= F.lit(lookback_sec)
+            <= F.lit(7 * 86400)
         )
     )
     w = Window.partitionBy("_u", "_cid").orderBy("_tts", "_tid")
@@ -469,7 +465,6 @@ def interval_overlap_join(
     start_col: str,
     end_col: str,
     carry: Sequence[str] = (),
-    bucket: int = 3_600_000_000,
 ) -> DataFrame:
     """Interval×interval overlap SELF-join — every pair of intervals
     (from rows whose ``order_col`` strictly orders, so each unordered
@@ -486,9 +481,9 @@ def interval_overlap_join(
     buckets would match once per bucket, so each pair is CLAIMED by
     exactly one bucket — the one containing the later start
     (greatest(start_a, start_b) div bucket) — a row-local predicate,
-    not a post-hoc distinct. Start/end are BIGINT (epoch micros);
-    ``bucket`` must exceed 0 and should sit near the typical interval
-    length so per-bucket population stays bounded.
+    not a post-hoc distinct. Start/end are BIGINT (epoch micros); the
+    bucket is 1 h (3,600,000,000 µs), near the typical interval length,
+    so per-bucket population stays bounded.
 
     Returns ``a_<order>``, ``b_<order>``, carry columns prefixed
     ``a_``/``b_``, and ``overlap`` = least(end)−greatest(start) ≥ 0.
@@ -498,8 +493,8 @@ def interval_overlap_join(
         *cols,
         F.explode(
             F.sequence(
-                F.expr(f"{start_col} div {bucket}"),
-                F.expr(f"{end_col} div {bucket}"),
+                F.expr(f"{start_col} div 3600000000"),
+                F.expr(f"{end_col} div 3600000000"),
             )
         ).alias("_bkt"),
     )
@@ -512,7 +507,7 @@ def interval_overlap_join(
     sa, ea = F.col(f"a_{start_col}"), F.col(f"a_{end_col}")
     sb, eb = F.col(f"b_{start_col}"), F.col(f"b_{end_col}")
     claimed = F.col("_bkt") == F.expr(
-        f"greatest(a_{start_col}, b_{start_col}) div {bucket}"
+        f"greatest(a_{start_col}, b_{start_col}) div 3600000000"
     )
     pairs = a.join(b, "_bkt").filter(
         (F.col(f"a_{order_col}") < F.col(f"b_{order_col}"))

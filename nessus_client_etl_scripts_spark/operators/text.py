@@ -50,9 +50,9 @@ def bpe_ish_token_count(text: Column | str) -> Column:
     )
 
 
-def stopword_count(text: Column | str, stopwords: tuple[str, ...] = STOPWORDS) -> Column:
+def stopword_count(text: Column | str) -> Column:
     return F.size(
-        F.filter(tokens(text), lambda t: t.isin(*stopwords))
+        F.filter(tokens(text), lambda t: t.isin(*STOPWORDS))
     )
 
 
@@ -80,14 +80,14 @@ def quality_features(text: Column | str) -> dict[str, Column]:
     }
 
 
-def quality_keep(text: Column | str, min_tokens: int = 10, max_stop: float = 0.6) -> Column:
+def quality_keep(text: Column | str) -> Column:
     """Keep/drop decision in the style of C4/Gopher rules: enough
     tokens, stopword ratio in a sane band (evidence of natural text)."""
     f = quality_features(text)
     return (
-        (f["n_tokens"] >= min_tokens)
+        (f["n_tokens"] >= 10)
         & (f["stopword_ratio"] > 0)
-        & (f["stopword_ratio"] <= max_stop)
+        & (f["stopword_ratio"] <= 0.6)
     )
 
 
@@ -119,8 +119,8 @@ def fingerprint_md5(text: Column | str) -> Column:
     return F.md5(normalize_text(text))
 
 
-def rolling_hash_from_tokens(toks: Column, window: int = 8) -> Column:
-    """Content-defined fingerprint: min of rolling window hashes over
+def rolling_hash_from_tokens(toks: Column) -> Column:
+    """Content-defined fingerprint: min of rolling 8-token window hashes over
     an ALREADY-MATERIALIZED token array (winnowing-style). Takes the
     attribute form because the slide lambda references the array per
     window position (see dedup.shingles_from_tokens for the rule).
@@ -130,10 +130,10 @@ def rolling_hash_from_tokens(toks: Column, window: int = 8) -> Column:
     DuckDB, so the fingerprint (a 32-char string) is oracle-checkable
     cross-engine."""
     n = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(n - F.lit(window), F.lit(0)))
+    idx = F.sequence(F.lit(0), F.greatest(n - F.lit(8), F.lit(0)))
     window_hashes = F.transform(
         idx,
-        lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i + 1, window))),
+        lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i + 1, 8))),
     )
     return F.array_min(window_hashes)
 
@@ -207,8 +207,6 @@ def duplicate_fraction_from_ngrams(g: Column) -> Column:
 
 def chunk_documents(
     df,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     chunk_size: int = 32,
     stride: int = 24,
 ):
@@ -222,17 +220,17 @@ def chunk_documents(
     The final chunk may be shorter than ``chunk_size`` (slice clamps at
     the array end); with ``stride < chunk_size`` consecutive chunks
     overlap by ``chunk_size - stride`` tokens."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     starts = F.sequence(F.lit(1), F.size(toks), F.lit(stride))
-    chunk_toks = F.slice(tokens(F.col(text_col)), F.col("start"), chunk_size)
+    chunk_toks = F.slice(tokens(F.col("text")), F.col("start"), chunk_size)
     return (
         df.select(
-            id_col,
-            text_col,
+            "doc_id",
+            "text",
             F.posexplode(starts).alias("chunk_id", "start"),
         )
         .select(
-            id_col,
+            "doc_id",
             F.col("chunk_id").cast("long").alias("chunk_id"),
             F.size(chunk_toks).cast("long").alias("n_chunk_tokens"),
             F.concat_ws(" ", chunk_toks).alias("chunk_text"),
@@ -256,17 +254,7 @@ def most_common_token_count(toks: Column) -> Column:
     )
 
 
-def gopher_rules(
-    toks: Column,
-    *,
-    min_tokens: int = 15,
-    max_tokens: int = 100000,
-    min_mean_len: float = 2.0,
-    max_mean_len: float = 10.0,
-    max_common_frac: float = 0.125,
-    min_alpha_frac: float = 0.8,
-    min_stop_hits: int = 2,
-) -> dict[str, Column]:
+def gopher_rules(toks: Column) -> dict[str, Column]:
     """Gopher-style document quality rules (Rae et al. 2021, table A1)
     over a STAGED token array: token-count band, mean-token-length
     band, most-common-word fraction cap, alphabetic-word floor, and a
@@ -297,11 +285,11 @@ def gopher_rules(
         "most_common_frac": common_frac,
         "alpha_frac": alpha_frac,
         "stop_hits": stop_hits.cast("long"),
-        "rule_len": (n >= min_tokens) & (n <= max_tokens),
-        "rule_mean_len": (mean_len >= min_mean_len) & (mean_len <= max_mean_len),
-        "rule_common": common_frac <= max_common_frac,
-        "rule_alpha": alpha_frac >= min_alpha_frac,
-        "rule_stop": stop_hits >= min_stop_hits,
+        "rule_len": (n >= 15) & (n <= 100000),
+        "rule_mean_len": (mean_len >= 2.0) & (mean_len <= 10.0),
+        "rule_common": common_frac <= 0.125,
+        "rule_alpha": alpha_frac >= 0.8,
+        "rule_stop": stop_hits >= 2,
     }
     rules["keep"] = (
         rules["rule_len"]

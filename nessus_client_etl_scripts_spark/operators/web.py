@@ -80,10 +80,7 @@ def host_of(canon: Column | str) -> Column:
     return F.split(_col(canon), r"[/?]").getItem(0)
 
 
-def registered_domain(
-    host: Column | str,
-    two_label_suffixes: tuple[str, ...] = TWO_LABEL_SUFFIXES,
-) -> Column:
+def registered_domain(host: Column | str) -> Column:
     """The registered (pay-level) domain of a host: the last two
     labels, or the last three when the host ends in a two-label public
     suffix (co.uk family)."""
@@ -99,7 +96,7 @@ def registered_domain(
         F.element_at(labels, -1),
     )
     cond = F.lit(False)
-    for suf in two_label_suffixes:
+    for suf in TWO_LABEL_SUFFIXES:
         cond = cond | h.endswith(suf)
     return F.when(cond, last3).otherwise(last2)
 

@@ -24,7 +24,6 @@ def nth_per_group(
     partition_by: Sequence[str],
     order_by: Sequence[Column],
     offset: int = 0,
-    rank_col: str = "_rn",
 ) -> DataFrame:
     """W1 — the (offset+1)-th row of each group under ``order_by``.
 
@@ -53,9 +52,9 @@ def nth_per_group(
         df = df.orderBy(*order_by).limit(offset + 1)
     w = Window.partitionBy(*partition_by).orderBy(*order_by)
     return (
-        df.withColumn(rank_col, F.row_number().over(w))
-        .filter(F.col(rank_col) == offset + 1)
-        .drop(rank_col)
+        df.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == offset + 1)
+        .drop("_rn")
     )
 
 
@@ -137,7 +136,6 @@ def two_phase_rank(
     pct_col: str = "pct_rank",
     gap_col: str = "gap_to_prev",
     num_partitions: int | None = None,
-    grn_col: str | None = None,
 ) -> DataFrame:
     """Exact rank / percent_rank / lag-gap per group WITHOUT a
     low-cardinality window partition — the 100 TB-safe replacement for
@@ -163,13 +161,6 @@ def two_phase_rank(
     Matches SQL ``rank()/percent_rank()/lag() OVER (PARTITION BY part
     ORDER BY val [, key])`` exactly, including percent_rank = 0 for
     single-row groups and a NULL gap for each group's first row.
-
-    ``grn_col`` (optional) additionally exposes the dense global
-    ``row_number() OVER (PARTITION BY part ORDER BY val, key)`` —
-    unlike ``rank_col`` it never duplicates or skips values under
-    ``val``-ties, so consumers that need contiguous positions (e.g.
-    the training-shuffle's data-loader shard contract) use it instead
-    of the rank.
     """
     staged = _range_stage(df, (part_col, val_col, key_col), num_partitions)
     stats = (
@@ -219,10 +210,7 @@ def two_phase_rank(
             (F.col(rank_col) - 1).cast("double") / (F.col("_n") - 1)
         ),
     )
-    extra = [grn_col] if grn_col else []
-    if grn_col:
-        out = out.withColumnRenamed("_grn", grn_col)
-    return out.select(*df.columns, rank_col, pct_col, gap_col, *extra)
+    return out.select(*df.columns, rank_col, pct_col, gap_col)
 
 
 def top_k_per_group(
@@ -230,18 +218,17 @@ def top_k_per_group(
     partition_by: Sequence[str],
     order_by: Sequence[Column],
     k: int,
-    rank_col: str = "_rn",
     keep_rank: str | None = None,
 ) -> DataFrame:
     """Generalized top-k per group (used by similarity search §2's
     cosine top-k). Optionally keeps the rank as ``keep_rank``."""
     w = Window.partitionBy(*partition_by).orderBy(*order_by)
-    out = df.withColumn(rank_col, F.row_number().over(w)).filter(
-        F.col(rank_col) <= k
+    out = df.withColumn("_rn", F.row_number().over(w)).filter(
+        F.col("_rn") <= k
     )
     if keep_rank:
-        return out.withColumnRenamed(rank_col, keep_rank)
-    return out.drop(rank_col)
+        return out.withColumnRenamed("_rn", keep_rank)
+    return out.drop("_rn")
 
 
 def scalable_cumsum(

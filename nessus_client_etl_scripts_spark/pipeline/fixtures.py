@@ -311,7 +311,7 @@ def _pa_scan_schema():
     )
 
 
-def ensure_fixture_parquet(root: str | None = None) -> str:
+def ensure_fixture_parquet() -> str:
     """Write the fixture documents as nested parquet via pyarrow (no
     Spark session needed). Idempotent per fixture version; returns the
     directory. Types mirror the Spark bronze schemas exactly (int32
@@ -320,7 +320,7 @@ def ensure_fixture_parquet(root: str | None = None) -> str:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    root = root or fixture_parquet_dir()
+    root = fixture_parquet_dir()
     marker = os.path.join(root, f".{_FIXTURE_VERSION}")
     if os.path.exists(marker):
         return root

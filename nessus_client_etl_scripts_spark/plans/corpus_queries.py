@@ -1968,12 +1968,13 @@ def q92(spark: SparkSession, sf_dir: str) -> DataFrame:
     seed:doc_id — reproducible across runs, engines, and retries; a
     new seed per epoch gives a fresh permutation) and its GLOBAL
     position in that order. The position comes from the distributed
-    two-phase rank (operators/windows.py::two_phase_rank with a
-    constant group), NOT a partition-less ``row_number() OVER (ORDER
-    BY ...)`` that would funnel 100 TB through one task — data-loader
-    shards then read contiguous pos ranges.
+    range-partitioned row number
+    (operators/windows.py::scalable_row_number), NOT a partition-less
+    ``row_number() OVER (ORDER BY ...)`` that would funnel 100 TB
+    through one task — data-loader shards then read contiguous pos
+    ranges.
 
-    ``pos`` is the true global ROW NUMBER (``grn_col``), not the rank:
+    ``pos`` is the true global ROW NUMBER, not a rank:
     rank collapses shuffle_key ties to their minimum position, and
     48-bit keys collide with near-certainty at billions of docs
     (~1800 expected collisions at 1e9 rows by birthday math), which

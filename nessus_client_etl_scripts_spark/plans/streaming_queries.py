@@ -65,12 +65,21 @@ def run_available_now(
     callers pass "append" and reduce the per-batch emissions
     downstream.
 
-    The child is a clone of the caller's session (same SparkContext,
-    the caller's SQL conf — time zone included), so the stream leaves
-    the caller's session as it found it: the shuffle-partition count
-    below, the sink's temp view and the stream itself live on the
+    The child is a new session on the same SparkContext with the
+    caller's run-time SQL conf (time zone included), so the stream
+    leaves the caller's session as it found it: the shuffle-partition
+    count below, the sink's temp view and the stream itself live on the
     child. The checkpoint directory is deleted once the stream has
-    stopped; the memory sink holds the rows.
+    stopped; the memory sink holds the rows. Spark registers a
+    listener bus on the shared SparkContext for every session whose
+    stream manager is touched — the child, and the session the stream
+    clones from it to run on — and never removes either; both are
+    removed once the stream is done, so repeated streams do not grow
+    the context's listener list. (A clone of the caller would also
+    copy its query-execution listeners once it has any — an
+    ``Observation`` registers one — and each clone then adds an
+    ``ExecutionListenerBus`` with no public handle to remove it; a new
+    session starts with none.)
 
     State-store sizing (the q115 lesson, generalized): a stateful
     operator instantiates one state store PER shuffle partition per
@@ -81,15 +90,15 @@ def run_available_now(
     (``start()``), so the child runs at 8 partitions from the start;
     whatever the caller builds on the returned sink (q83's and q333's
     per-user windows) runs on the child at the same count."""
-    # cloneSession, not newSession: a new session starts from the
-    # SparkContext's conf and would drop what the caller set at run time
-    child = spark.__class__(
-        spark.sparkContext, spark._jsparkSession.cloneSession()
-    )
+    child = spark.newSession()
+    for key, value in spark.conf.getAll.items():
+        if spark.conf.isModifiable(key):
+            child.conf.set(key, value)
     child.conf.set("spark.sql.shuffle.partitions", "8")
     ckpt = tempfile.mkdtemp(prefix="sgq53_")
+    query = None
     try:
-        (
+        query = (
             plan(child)
             .writeStream.format("memory")
             .queryName(name)
@@ -97,9 +106,15 @@ def run_available_now(
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
-            .awaitTermination()
         )
+        query.awaitTermination()
     finally:
+        sessions = [child._jsparkSession]
+        if query is not None:
+            sessions.append(query._jsq.streamingQuery().sparkSessionForStream())
+        bus = spark.sparkContext._jsc.sc().listenerBus()
+        for session in sessions:
+            bus.removeListener(session.streams().listenerBus())
         shutil.rmtree(ckpt, ignore_errors=True)
     return child.table(name)
 

@@ -8,7 +8,7 @@ runs no schema-inference job, and one read spans every schema
 generation of the lake: files missing a declared column null-fill it,
 and a column on disk that the declaration lacks is pruned at the scan
 (no ``mergeSchema`` footer sweep). Partition columns are still
-discovered from the paths, and the deployment and snapshot filters stay
+discovered from the paths, and the deployment filter stays
 declarative, so partition pruning happens at listing time.
 """
 
@@ -26,16 +26,13 @@ def read_scan_run_documents(
     spark: SparkSession,
     lake_root: str,
     deployment_id: str | None = None,
-    since: str | None = None,
 ) -> DataFrame:
-    """Read landed scan-run documents; deployment/snapshot filters are
-    partition predicates (pruned at listing time, zero data touched
-    outside the range)."""
+    """Read landed scan-run documents; the deployment filter is a
+    partition predicate (pruned at listing time, zero data touched
+    outside it)."""
     df = spark.read.schema(SCAN_RUN_DOC_SCHEMA).parquet(
         os.path.join(lake_root, "scan_run")
     )
     if deployment_id is not None:
         df = df.filter(F.col("deployment_id") == deployment_id)
-    if since is not None:
-        df = df.filter(F.col("snapshot_date") >= since)
     return df

@@ -1,5 +1,5 @@
 """JSONL corpus source/sink — the interchange format of LLM training
-pipelines (one JSON document per line, optionally gzipped).
+pipelines (one JSON document per line).
 
 The reference's lake is JSON documents on S3 (`/root/reference/
 export.py:89-108` writes one JSON object per key); this module is the
@@ -35,32 +35,13 @@ DOCUMENTS_SCHEMA = T.StructType(
 )
 
 
-def write_jsonl(
-    df: DataFrame,
-    path: str,
-    partition_cols: tuple[str, ...] = (),
-    compression: str | None = None,
-) -> None:
-    """Land a corpus as line-delimited JSON. ``partition_cols`` maps to
-    hive-style directory partitioning (partition pruning on read);
-    ``compression='gzip'`` trades splittability for size — prefer
-    uncompressed or zstd-parquet for anything an engine re-reads."""
-    w = df.write.mode("overwrite")
-    if partition_cols:
-        w = w.partitionBy(*partition_cols)
-    if compression:
-        w = w.option("compression", compression)
-    w.json(path)
+def write_jsonl(df: DataFrame, path: str) -> None:
+    """Land a corpus as uncompressed line-delimited JSON (splittable on
+    re-read)."""
+    df.write.mode("overwrite").json(path)
 
 
-def read_jsonl(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    mode: str = "FAILFAST",
-) -> DataFrame:
+def read_jsonl(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
     """Schema'd JSONL read. ``FAILFAST`` surfaces malformed lines as
-    errors (the correctness posture for declared queries);
-    ``PERMISSIVE`` with a ``_corrupt_record`` column is the ingest
-    posture for raw crawl drops."""
-    return spark.read.schema(schema).option("mode", mode).json(path)
+    errors (the correctness posture for declared queries)."""
+    return spark.read.schema(schema).option("mode", "FAILFAST").json(path)

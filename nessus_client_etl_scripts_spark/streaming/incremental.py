@@ -13,10 +13,9 @@ plan per micro-batch with ``id_mode='hash'`` (deterministic surrogate
 keys across batches — a re-delivered document maps to the same ids, so
 downstream dedup is a key-equality problem, not a heuristic).
 
-Scale posture: ``maxFilesPerTrigger`` bounds per-batch work; the file
-source's listing is incremental; every transformation inside the batch
-is the same narrow explode chain as batch mode (no shuffle but the
-plugin dedup).
+Scale posture: the file source's listing is incremental; every
+transformation inside the batch is the same narrow explode chain as
+batch mode (no shuffle but the plugin dedup).
 """
 
 from __future__ import annotations
@@ -29,21 +28,15 @@ from ..pipeline.normalize import normalize_scan_runs
 from ..sources.nessus_schemas import SCAN_RUN_DOC_SCHEMA
 
 
-def stream_scan_run_documents(
-    spark: SparkSession,
-    source_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
+def stream_scan_run_documents(spark: SparkSession, source_dir: str) -> DataFrame:
     """readStream over landed scan-run JSON documents with the declared
     bronze schema (streaming requires one; inference is off the table
     at scale anyway)."""
-    reader = (
+    return (
         spark.readStream.schema(SCAN_RUN_DOC_SCHEMA)
         .option("multiLine", "true")
+        .json(source_dir)
     )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.json(source_dir)
 
 
 def run_incremental_normalize(
@@ -51,7 +44,6 @@ def run_incremental_normalize(
     source_dir: str,
     silver_root: str,
     checkpoint_dir: str,
-    timeout_sec: int = 120,
 ) -> None:
     """One AvailableNow pass: new documents → silver parquet.
 
@@ -89,7 +81,7 @@ def run_incremental_normalize(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_sec)
+    q.awaitTermination(120)
     if q.isActive:
         q.stop()
         raise TimeoutError("incremental normalize did not drain in time")

@@ -21,13 +21,10 @@ from pyspark.sql import functions as F
 
 def windowed_severity_counts(
     events: DataFrame,
-    ts_col: str = "ts",
-    window: str = "1 hour",
     watermark: str = "2 hours",
-    group_cols: tuple[str, ...] = ("event_type",),
-    value_col: str = "value",
 ) -> DataFrame:
-    """Watermarked tumbling-window counts/sums.
+    """Watermarked 1-hour tumbling-window counts and ``value`` sums
+    per ``event_type``, on event time ``ts``.
 
     State bound: one row per (window, group) within the watermark
     horizon; partial aggregation happens map-side before the keyed
@@ -35,45 +32,39 @@ def windowed_severity_counts(
     """
     src = events
     if events.isStreaming:
-        src = events.withWatermark(ts_col, watermark)
+        src = events.withWatermark("ts", watermark)
     return (
-        src.groupBy(F.window(ts_col, window).alias("w"), *group_cols)
+        src.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(value_col).alias("total_value"),
+            F.sum("value").alias("total_value"),
         )
         .select(
             F.col("w.start").alias("window_start"),
             F.col("w.end").alias("window_end"),
-            *group_cols,
+            "event_type",
             "n_events",
             "total_value",
         )
     )
 
 
-def sessionized_stream(
-    events: DataFrame,
-    ts_col: str = "ts",
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-    key_col: str = "user_id",
-    value_col: str = "value",
-) -> DataFrame:
-    """Gap-based sessions via ``session_window`` — the built-in stateful
+def sessionized_stream(events: DataFrame) -> DataFrame:
+    """Per-``user_id`` sessions of ``ts`` events with a 30-minute gap
+    (1-hour watermark) via ``session_window`` — the built-in stateful
     operator; no custom applyInPandasWithState needed for plain gap
     semantics (custom state logic lives in stateful.py)."""
     src = events
     if events.isStreaming:
-        src = events.withWatermark(ts_col, watermark)
+        src = events.withWatermark("ts", "1 hour")
     return (
-        src.groupBy(F.session_window(ts_col, gap).alias("w"), key_col)
+        src.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(value_col).alias("session_value"),
+            F.sum("value").alias("session_value"),
         )
         .select(
-            key_col,
+            "user_id",
             F.col("w.start").alias("session_start"),
             F.col("w.end").alias("session_end"),
             "n_events",

@@ -237,9 +237,3 @@ def test_merge_upsert_rejects_duplicate_update_keys(spark):
     merged = merge_upsert(target, dup_updates, key_cols=["k"], set_cols=["val"])
     with pytest.raises((Py4JJavaError, PySparkException)):
         merged.collect()
-    # opting out restores the raw fan-out for pre-deduped sources
-    rows = merge_upsert(
-        target, dup_updates, key_cols=["k"], set_cols=["val"],
-        check_unique=False,
-    ).collect()
-    assert len(rows) == 2

@@ -76,7 +76,7 @@ def test_row_number_kernels_with_empty_range_partitions(spark):
 # lazy pin, then the sink's jobs.
 KERNEL_JOBS = {
     "two_phase_rank": (
-        lambda df: W.two_phase_rank(df, "g", "v", "k", num_partitions=4, grn_col="p"),
+        lambda df: W.two_phase_rank(df, "g", "v", "k", num_partitions=4),
         11,
     ),
     "scalable_cumsum": (

@@ -150,11 +150,13 @@ def test_temperature_mixture_flattens(spark):
 
 
 def test_temperature_mixture_copy_ids_contiguous(spark):
+    # source "s" holds 1 % of the mass: w = min(8, 0.5 * sqrt(100)) = 5
+    # copies per row, so the copy ids have a range to check
     df = spark.createDataFrame(
-        [(i, "s", 5) for i in range(20)],
+        [(i, "s", 5) for i in range(20)] + [(99, "big", 9900)],
         "doc_id long, source string, n_chars long",
     )
-    out = temperature_mixture(df, alpha_cap=3.0, scale=3.0)
+    out = temperature_mixture(df)
     per = out.groupBy("doc_id").agg(
         F.count("*").alias("n"),
         F.min("copy_id").alias("lo"),

@@ -100,7 +100,7 @@ def test_compaction_bins_matches_greedy_walk(spark):
     out = {
         r["file_id"]: (r["bin_id"], r["cum_bytes"])
         for r in compaction_bins(
-            df, ("file_id",), "size", target_bytes=1000, bin_col="bin_id"
+            df, ("file_id",), "size", target_bytes=1000
         ).collect()
     }
     cum = 0

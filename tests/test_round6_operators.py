@@ -34,10 +34,10 @@ from nessus_client_etl_scripts_spark.operators.text import (
 # gopher_rules / most_common_token_count
 # ---------------------------------------------------------------------------
 
-def _rules_row(spark, text, **kw):
+def _rules_row(spark, text):
     df = spark.createDataFrame([(1, text)], "doc_id long, text string")
     staged = df.select("doc_id", tokens(normalize_text("text")).alias("toks"))
-    r = gopher_rules(F.col("toks"), **kw)
+    r = gopher_rules(F.col("toks"))
     return staged.select(
         *[v.alias(k) for k, v in r.items()]
     ).collect()[0]

@@ -373,7 +373,7 @@ def _events(spark, rows):
     )
 
 
-def _attribution(spark, rows, lookback_sec=7 * 86400):
+def _attribution(spark, rows):
     from nessus_client_etl_scripts_spark.operators.temporal import (
         position_attribution,
     )
@@ -387,7 +387,6 @@ def _attribution(spark, rows, lookback_sec=7 * 86400):
             "user_id",
             "ts",
             "event_id",
-            lookback_sec=lookback_sec,
         ).collect()
     }
 
@@ -430,11 +429,11 @@ def test_attribution_edge_counts(spark):
 
 def test_attribution_lookback_excludes_old_touches(spark):
     rows = [
-        (1, 0, 1, "click"),            # 10 h before purchase
-        (2, 9, 1, "view"),             # 1 h before
-        (3, 10, 1, "purchase"),
+        (1, 0, 1, "click"),            # 8 days before purchase
+        (2, 191, 1, "view"),           # 1 h before
+        (3, 192, 1, "purchase"),
     ]
-    got = _attribution(spark, rows, lookback_sec=3600)
+    got = _attribution(spark, rows)  # 7-day lookback
     assert "click" not in got
     assert got["view"]["credited_bp"] == 10000
 
@@ -515,21 +514,6 @@ def test_negative_samples_deterministic_no_self(spark):
         assert sorted(r["rank"] for r in rows) == [1, 2, 3, 4]
     # different queries draw different permutations (salted per pair)
     assert {r["neg_id"] for r in by_q[0]} != {r["neg_id"] for r in by_q[1]}
-
-
-def test_negative_samples_salt_changes_draw(spark):
-    from nessus_client_etl_scripts_spark.operators.sampling import (
-        negative_samples,
-    )
-
-    corpus = spark.createDataFrame([(i,) for i in range(50)], "doc_id long")
-    q = corpus.filter(F.col("doc_id") == 0)
-    a = {r["neg_id"] for r in negative_samples(corpus, q, k=5).collect()}
-    b = {
-        r["neg_id"]
-        for r in negative_samples(corpus, q, k=5, salt="other").collect()
-    }
-    assert a != b
 
 
 # ---------------------------------------------------------------------------
@@ -737,7 +721,7 @@ def test_cm_join_estimate_upper_bounds_exact(spark):
     b = spark.createDataFrame(
         [(i % 20,) for i in range(100)], "k long"
     )  # keys 0..19, 5 each
-    got = cm_join_size_estimate(a, "k", b, "k", width=64).collect()[0]
+    got = cm_join_size_estimate(a, "k", b, "k").collect()[0]
     # exact: 10 shared keys × 20 × 5
     assert got["exact_size"] == 1000
     # count-min inner product NEVER under-estimates
@@ -752,9 +736,9 @@ def test_cm_join_estimate_disjoint_small(spark):
 
     a = spark.createDataFrame([(i,) for i in range(5)], "k long")
     b = spark.createDataFrame([(i,) for i in range(100, 105)], "k long")
-    got = cm_join_size_estimate(a, "k", b, "k", width=4096).collect()[0]
+    got = cm_join_size_estimate(a, "k", b, "k").collect()[0]
     assert got["exact_size"] == 0
-    # wide sketch + 5 keys/side → collisions vanish; estimate ~0
+    # 256-wide sketch + 5 keys/side → collisions rare; estimate ~0
     assert got["cm_estimate"] <= 2
 
 

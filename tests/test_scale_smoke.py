@@ -33,12 +33,9 @@ def test_two_phase_rank_analytic_at_3m(spark):
         )
         .repartition(48)  # destroy the generation order
     )
-    out = two_phase_rank(
-        df, "g", "v", "k", num_partitions=64, grn_col="pos"
-    )
+    out = two_phase_rank(df, "g", "v", "k", num_partitions=64)
     bad = out.filter(
         (F.col("rank") != (F.col("k") / 7).cast("long") * 7 + 1)
-        | (F.col("pos") != F.col("k") + 1)
         | (
             F.abs(
                 F.col("pct_rank")
@@ -82,9 +79,7 @@ def test_hash_split_proportions_and_determinism_at_2m(spark):
     df = spark.range(n).select(F.col("id").alias("doc_id"))
 
     def split_counts():
-        out = hash_split(
-            df, {"train": 0.8, "val": 0.1, "test": 0.1}, key_col="doc_id"
-        )
+        out = hash_split(df, {"train": 0.8, "val": 0.1, "test": 0.1})
         counts = {
             r["split"]: r["c"]
             for r in out.groupBy("split").agg(F.count("*").alias("c")).collect()

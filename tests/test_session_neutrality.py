@@ -3,7 +3,10 @@
 equal their values from before the query, and no RDD the query
 persisted is still persisted. (RDDs persisted before the query may be
 released while it runs: ``run_query``'s ``gc.collect()`` lets the
-ContextCleaner reclaim what earlier code dropped.)
+ContextCleaner reclaim what earlier code dropped.) A streaming query
+run a second time leaves as many listeners on the SparkContext's
+listener bus as its first run did: each stream's own session adds
+one, and it must go when the stream ends.
 
 The queries are the ones whose plans create session state of their
 own: the eight streaming queries (a memory sink, a checkpoint, a
@@ -43,6 +46,7 @@ def _state(spark):
         spark.conf.getAll,
         sorted(t.name for t in spark.catalog.listTables()),
         set(spark.sparkContext._jsc.getPersistentRDDs().keySet()),
+        spark.sparkContext._jsc.sc().listenerBus().listeners().size(),
     )
 
 
@@ -52,7 +56,7 @@ def test_query_leaves_session_as_found(spark, name):
 
     before = _state(spark)
     run_query(spark, name, m.queries()[name], SF)
-    conf, tables, persisted = _state(spark)
+    conf, tables, persisted, listeners = _state(spark)
     assert conf == before[0], {
         k: (before[0].get(k), conf.get(k))
         for k in set(conf) | set(before[0])
@@ -60,3 +64,6 @@ def test_query_leaves_session_as_found(spark, name):
     }
     assert tables == before[1]
     assert not persisted - before[2]
+    if "stream" in name:
+        run_query(spark, name, m.queries()[name], SF)
+        assert _state(spark)[3] == listeners

@@ -66,15 +66,6 @@ def test_hash_split_deterministic_and_proportional(spark):
         .collect()
     }
     assert counts == again
-    # different salt → different assignment
-    other = {
-        r["split"]: r["n"]
-        for r in hash_split(df, w, salt="split-v2")
-        .groupBy("split")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    assert other != counts or True  # proportions similar; exact sets differ
 
 
 def test_group_sample_k_per_group_reproducible(spark):
@@ -125,9 +116,7 @@ def test_pack_sequences_greedy_semantics(spark):
 
 
 def test_connected_components_min_label(spark):
-    from nessus_client_etl_scripts_spark.operators.graph import (
-        connected_components,
-    )
+    from nessus_client_etl_scripts_spark.operators.graph import _cc_with_rounds
 
     # two components: a 7-chain (exercises multi-round contraction and
     # the localCheckpoint path) and one isolated edge
@@ -136,7 +125,7 @@ def test_connected_components_min_label(spark):
     for algo in ("star", "propagation"):
         got = {
             r["id"]: r["cluster_id"]
-            for r in connected_components(df, algorithm=algo).collect()
+            for r in _cc_with_rounds(df, "src", "dst", 20, algo)[0].collect()
         }
         assert got == {**{i: 1 for i in range(1, 8)}, 10: 10, 11: 10}, algo
 
@@ -292,20 +281,16 @@ def test_connected_components_star_equals_propagation(spark, edges):
     edges, multiple components, any shape) the star-contraction and
     label-propagation algorithms must produce identical labelings, and
     both must agree with a driver-side union-find ground truth."""
-    from nessus_client_etl_scripts_spark.operators.graph import (
-        connected_components,
-    )
+    from nessus_client_etl_scripts_spark.operators.graph import _cc_with_rounds
 
     df = spark.createDataFrame(edges, ["src", "dst"])
     star = {
         r["id"]: r["cluster_id"]
-        for r in connected_components(df, max_iter=40, algorithm="star").collect()
+        for r in _cc_with_rounds(df, "src", "dst", 40, "star")[0].collect()
     }
     prop = {
         r["id"]: r["cluster_id"]
-        for r in connected_components(
-            df, max_iter=40, algorithm="propagation"
-        ).collect()
+        for r in _cc_with_rounds(df, "src", "dst", 40, "propagation")[0].collect()
     }
 
     # ground truth: union-find on the driver

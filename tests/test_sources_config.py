@@ -149,33 +149,6 @@ def test_jsonl_roundtrip_preserves_values(spark, tmp_path):
     assert sorted(map(tuple, back.collect())) == sorted(rows)
 
 
-def test_jsonl_partitioned_write_prunes(spark, tmp_path):
-    from pyspark.sql import types as T
-
-    from nessus_client_etl_scripts_spark.sources.text_corpus import (
-        read_jsonl,
-        write_jsonl,
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("lang", T.StringType()),
-        ]
-    )
-    df = spark.createDataFrame(
-        [(1, "en"), (2, "de"), (3, "en")], schema
-    )
-    path = str(tmp_path / "part")
-    write_jsonl(df, path, partition_cols=("lang",))
-    back = read_jsonl(spark, path, schema).filter("lang = 'en'")
-    # partition pruning: the filter becomes a PartitionFilters entry,
-    # not a row-level filter over all partitions
-    plan = back._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(lang" in plan
-    assert {r["doc_id"] for r in back.collect()} == {1, 3}
-
-
 def test_python_datasource_distributed_fetch(spark):
     """The Spark 4 Python Data Source fans run fetches out as executor
     tasks (one InputPartition per run) and the payloads parse into the
@@ -215,40 +188,6 @@ def test_python_datasource_distributed_fetch(spark):
     rows = {r["scan_id"]: r["n"] for r in parsed.collect()}
     assert set(rows) == {r["scan_id"] for r in runs}
     assert all(n >= 1 for n in rows.values())
-
-
-def test_jsonl_permissive_quarantines_corrupt_lines(spark, tmp_path):
-    from pyspark.sql import types as T
-
-    from nessus_client_etl_scripts_spark.sources.text_corpus import (
-        read_jsonl,
-    )
-
-    p = tmp_path / "raw"
-    p.mkdir()
-    (p / "part-0.json").write_text(
-        '{"doc_id": 1, "text": "good"}\n'
-        "this is not json at all\n"
-        '{"doc_id": 2, "text": "also good"}\n'
-        '{"doc_id": "not-a-number", "text": "type drift"}\n'
-    )
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("_corrupt_record", T.StringType()),
-        ]
-    )
-    df = read_jsonl(spark, str(p), schema, mode="PERMISSIVE").cache()
-    good = df.filter("_corrupt_record IS NULL")
-    bad = df.filter("_corrupt_record IS NOT NULL")
-    assert {r["doc_id"] for r in good.collect()} == {1, 2}
-    # both the non-JSON line and the type-drift line are quarantined
-    # with their raw text preserved for triage
-    bad_raw = [r["_corrupt_record"] for r in bad.collect()]
-    assert len(bad_raw) == 2
-    assert any("not json" in b for b in bad_raw)
-    df.unpersist()
 
 
 def test_data_source_http_transport_offline(monkeypatch):

@@ -102,9 +102,7 @@ def test_weighted_systematic_sample_covers_grid_exactly(spark):
     # heavy rows (w=25 > stride) sampled multiply
     rows = [(1, 25), (2, 5), (3, 25), (4, 20), (5, 25)]
     df = spark.createDataFrame(rows, ["doc_id", "w"])
-    out = weighted_systematic_sample(
-        df, weight_col="w", stride=10, order_cols=("doc_id",)
-    )
+    out = weighted_systematic_sample(df, weight_col="w", stride=10)
     hits = {r["doc_id"]: r["n_hits"] for r in out.collect()}
     assert sum(hits.values()) == 10
     assert hits[1] >= 2  # heavy first row covers >=2 grid points
@@ -147,24 +145,6 @@ def test_two_phase_rank_property_random_ties(spark):
     assert got == want
 
 
-def test_two_phase_rank_grn_col_contiguous_row_numbers(spark):
-    """grn_col must be the dense global row_number (val, key order):
-    per group an exact permutation of 1..n even under heavy val ties —
-    the contract q92's data-loader shard positions depend on."""
-    data = [("a", k, float(k % 3)) for k in range(1, 31)] + [
-        ("b", k, 7.0) for k in range(1, 11)  # all-ties group
-    ]
-    df = spark.createDataFrame(data, "g string, k long, v double")
-    out = two_phase_rank(df, "g", "v", "k", num_partitions=6, grn_col="pos")
-    w = Window.partitionBy("g").orderBy("v", "k")
-    want = {
-        (r.g, r.k): r.p
-        for r in df.withColumn("p", F.row_number().over(w)).collect()
-    }
-    got = {(r.g, r.k): r.pos for r in out.collect()}
-    assert got == want
-
-
 def test_two_phase_rank_stable_under_nondeterministic_upstream(spark):
     """The staged frame is localCheckpoint-pinned, so the _pid-keyed
     offsets and the final join read the SAME materialization even when
@@ -183,17 +163,12 @@ def test_two_phase_rank_stable_under_nondeterministic_upstream(spark):
             yield pdf.sample(frac=1.0)
 
     df = base.repartition(8).mapInPandas(_shuffle, schema=base.schema)
-    out = two_phase_rank(
-        df, "part", "val", "k", num_partitions=5, grn_col="pos"
-    )
-    got = {r["k"]: (r["rank"], r["pos"]) for r in out.collect()}
+    out = two_phase_rank(df, "part", "val", "k", num_partitions=5)
+    got = {r["k"]: r["rank"] for r in out.collect()}
     w = Window.partitionBy("part").orderBy("val")
-    w2 = Window.partitionBy("part").orderBy("val", "k")
     want = {
-        r["k"]: (r["r"], r["p"])
-        for r in base.withColumn("r", F.rank().over(w).cast("long"))
-        .withColumn("p", F.row_number().over(w2))
-        .collect()
+        r["k"]: r["r"]
+        for r in base.withColumn("r", F.rank().over(w).cast("long")).collect()
     }
     assert got == want
 
